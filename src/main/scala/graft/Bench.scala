@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark main (driver contract): times every declared query at
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
@@ -33,14 +31,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val loadStart = loadavg1m
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = Graft.defaultCpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session("graft-bench")
 
     // Boot warmup: absorb SparkSession/JIT/first-codegen startup once.
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }

@@ -13,7 +13,7 @@ import graft.streaming.{KTableProcessor, ParquetServing}
   *
   * Mirrors the REPL session at fake_producer.clj:48-54 — in production the
   * MemoryStream is replaced by `KafkaChangelog.readStream(spark, brokers,
-  * "share-holders")` and Serving's foreachBatch sink by a Delta/JDBC upsert.
+  * "share-holders")` and ParquetServing's foreachBatch sink by a Delta/JDBC upsert.
   *
   * Run: sbt "runMain graft.Demo"
   */
@@ -25,8 +25,7 @@ object Demo {
 
     val input = MemoryStream[graft.streaming.KTableStream.ShareUpdate]
     val views = KTableProcessor.usShareHolders(spark, input.toDS())
-    // distributed parquet-backed serving store (the scale path; `new Serving`
-    // swaps in the driver-local TrieMap demo store)
+    // distributed parquet-backed serving store (executor-side writes)
     val serving = new ParquetServing(Files.createTempDirectory("demo-store").toString)
     val q = views.writeStream
       .outputMode("update")

@@ -75,19 +75,14 @@ object ExecutorLossProof {
       "java.base/sun.security.action", "java.base/sun.util.calendar",
     ).map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
 
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,1,1536]")
-      .appName("executor-loss-proof")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.executor.memory", "1g")
+    // cpus = "8" sets 8 shuffle partitions; the master below replaces local[8]
+    val spark = Graft.session("executor-loss-proof", cpus = "8", extraConf = Map(
+      "spark.master" -> "local-cluster[2,1,1536]",
+      "spark.executor.memory" -> "1g",
       // executor JVMs are launched from SPARK_HOME's jars only — they need
       // this application's classes (the aggregate/codegen closures) too
-      .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-      .config("spark.executor.extraJavaOptions", addOpens)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.executor.extraClassPath" -> sys.props("java.class.path"),
+      "spark.executor.extraJavaOptions" -> addOpens))
 
     try {
       // wait for both executor JVMs to register (cold start takes seconds)

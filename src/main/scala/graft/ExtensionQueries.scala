@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.operators.{Dedup, Multimodal, Sampling, Similarity, TextAnalysis}
+import graft.operators.{Canonical, ContaminationParams, Dedup, IvfPqParams, LloydParams,
+  LshParams, Materialize, Multimodal, Sampling, Similarity, SubstringParams, Surface,
+  TextAnalysis}
 import graft.sources.Tables
 
 /** LLM-training-data pipeline extensions (SURVEY.md §2.B last row): dedup
@@ -28,121 +30,127 @@ object ExtensionQueries {
       acc * 6364136223846793005L + treeFingerprint(c) + 1442695040888963407L)
   }
 
-  /** Session-shared MinHash-LSH pair surface at the CANONICAL parameters
-    * (k=3, 64 perms, 16 bands, threshold 0.5) — the build-once/serve-many
-    * intermediate for the five cluster-family queries (dedup_minhash_lsh,
-    * dedup_apply, dedup_apply_quality, dedup_cluster_stats,
-    * dedup_minhash_estimate): one session running several of them builds
-    * the LSH chain ONCE and each consumer reads the localCheckpoint blocks,
-    * exactly like the stored-index serving paths (bpe/ivf stores) but
-    * in-session. Keyed by (applicationId, fixture dir, fixture
-    * fingerprint), so a new session or a regenerated fixture can never
-    * serve stale pairs; values are pair lists (LSH-bounded — tiny), held
-    * for session lifetime.
+  /** Hex fingerprint of one fixture table's file tree. */
+  private def fingerprint(dir: String, table: String): String =
+    java.lang.Long.toHexString(treeFingerprint(new java.io.File(s"$dir/$table.parquet")))
+
+  /** /tmp dir of a stored index built once per fixture: the path embeds the
+    * source table's fingerprint and the store-format version, so a
+    * regenerated fixture or a changed layout never serves a stale store.
     */
-  private val lshPairsCache =
-    new scala.collection.concurrent.TrieMap[String, DataFrame]()
-  private def sharedLshPairs(s: SparkSession, dir: String): DataFrame = {
-    val fp = java.lang.Long.toHexString(
-      treeFingerprint(new java.io.File(s"$dir/documents.parquet")))
-    val key = s"${s.sparkContext.applicationId}|$dir|$fp|k3p64b16t05"
-    lshPairsCache.getOrElseUpdate(key,
-      operators.Materialize.barrier(
+  private def storeDir(kind: String, dir: String, table: String): String =
+    s"/tmp/graft_${kind}_v1_${dir.replaceAll("[^A-Za-z0-9]", "_")}_${fingerprint(dir, table)}"
+
+  /** The session-shared surface registry: build-once/serve-many
+    * intermediates that several declared queries consume (LSH pairs,
+    * substring quads, contamination report, Lloyd centroids, IVF+PQ books).
+    * One session running several consumers builds each surface ONCE and
+    * every consumer serves from it; each consumer checks the surface's
+    * build parameters against its own ([[Surface.servedTo]]).
+    *
+    * Keyed by (applicationId, fixture dir, fingerprint of the table the
+    * surface is built from, input-slice tag, build parameters): a new
+    * session, a regenerated fixture, another slice or other parameters can
+    * never be served a stale or foreign surface. Values are bounded by
+    * construction (pair lists, verbatim-dup quads, contaminated-doc
+    * reports, index metadata) and held for the session's lifetime. A key's
+    * parameter class fixes its value type, which makes the cast sound.
+    */
+  private val surfaces =
+    new scala.collection.concurrent.TrieMap[(String, String, String, String, Any), Surface[_, _]]()
+  private def shared[P, V](s: SparkSession, dir: String, table: String, params: P,
+                           slice: String = "all")(build: P => V): Surface[P, V] =
+    surfaces.getOrElseUpdate(
+      (s.sparkContext.applicationId, dir, fingerprint(dir, table), slice, params),
+      Surface.build(params)(build)).asInstanceOf[Surface[P, V]]
+
+  /** MinHash-LSH pairs at [[Canonical.lsh]]: the five cluster-family
+    * queries and pipeline_e2e's dedup stage.
+    */
+  private def lshPairs(s: SparkSession, dir: String): Surface[LshParams, DataFrame] =
+    shared(s, dir, "documents", Canonical.lsh)(p =>
+      Materialize.barrier(
         Dedup.minHashLshPairs(docs(s, dir), "doc_id", "text",
-          k = 3, numPerm = 64, bands = 16, threshold = 0.5), None))
-  }
+          k = p.k, numPerm = p.numPerm, bands = p.bands, threshold = p.threshold), None))
 
-  /** Session-shared string-verified substring matched-quadruple surface at
-    * the canonical parameters (13-grams, df cap 50) — the same
-    * build-once/serve-many shape as [[sharedLshPairs]], sanctioned by the
-    * round-13 verdict (task 2), for the two substring-family consumers
-    * (dedup_exact_substring, dedup_substring_trim): ~70 % of either query
-    * is the positional md5 index build + exact-string verify that produces
-    * exactly this set. Keyed by (applicationId, fixture dir, fixture
-    * fingerprint), so a new session or a regenerated fixture can never
-    * serve stale matches; the value is an eager localCheckpoint barrier of
-    * the (doc_a, doc_b, pa, pb) rows — bounded by the corpus's verbatim-dup
-    * mass, id/position-sized, held for session lifetime.
+  /** String-verified (doc_a, doc_b, pa, pb) substring quads at
+    * [[Canonical.substring]] — ~70 % of both dedup_exact_substring and
+    * dedup_substring_trim.
     */
-  private val substringMatchedCache =
-    new scala.collection.concurrent.TrieMap[String, DataFrame]()
-  private def sharedSubstringMatches(s: SparkSession, dir: String): DataFrame = {
-    val fp = java.lang.Long.toHexString(
-      treeFingerprint(new java.io.File(s"$dir/documents.parquet")))
-    val key = s"${s.sparkContext.applicationId}|$dir|$fp|n13df50"
-    substringMatchedCache.getOrElseUpdate(key,
-      Dedup.substringMatchedQuads(docs(s, dir), "doc_id", "text",
-        n = 13, maxDf = 50))
-  }
+  private def substringQuads(s: SparkSession, dir: String): Surface[SubstringParams, DataFrame] =
+    shared(s, dir, "documents", Canonical.substring)(p =>
+      Dedup.substringMatchedQuads(docs(s, dir), "doc_id", "text", n = p.n, maxDf = p.maxDf))
 
-  /** Session-shared exact-substring contamination REPORT at the canonical
-    * fixture parameters (raw corpus vs the doc_id%97 quoting holdout,
-    * n=13) — the common core of decontaminate_exact (the report itself),
-    * decontaminate_apply (span ≥ 20 flags anti-joined out), and
-    * pipeline_e2e's S3 flags: one session builds the verbatim-span
-    * geometry once and every consumer serves from the barrier (bounded by
-    * the contaminated-doc count — tiny by construction). Same key
-    * discipline as [[sharedLshPairs]].
+  /** Exact-substring contamination report of the raw corpus vs the
+    * [[Canonical.quotingHoldout]]: decontaminate_exact's output, and the
+    * core of decontaminate_apply and pipeline_e2e's S3 flags.
     */
-  private val contaminationCache =
-    new scala.collection.concurrent.TrieMap[String, DataFrame]()
-  private def sharedContamination(s: SparkSession, dir: String): DataFrame = {
-    val fp = java.lang.Long.toHexString(
-      treeFingerprint(new java.io.File(s"$dir/documents.parquet")))
-    val key = s"${s.sparkContext.applicationId}|$dir|$fp|contam_n13_mod97"
-    contaminationCache.getOrElseUpdate(key, {
-      import org.apache.spark.sql.functions._
+  private def contamination(s: SparkSession, dir: String): Surface[ContaminationParams, DataFrame] =
+    shared(s, dir, "documents", Canonical.contamination) { p =>
       val d = docs(s, dir)
-      val holdout = d.filter(col("doc_id") % 97 === 0)
-        .select(col("doc_id"),
-          array_join(slice(graft.functions.Text.tokens(col("text")), 6, 21), " ")
-            .as("text"))
-      operators.Materialize.barrier(
-        Dedup.exactSubstringContamination(d, holdout, "doc_id", "text", n = 13),
+      Materialize.barrier(
+        Dedup.exactSubstringContamination(d, Canonical.quotingHoldout(d), "doc_id", "text", n = p.n),
         None)
-    })
+    }
+
+  /** Deterministic Lloyd centroids over `slice` of the embeddings (the
+    * collected nlist-row index metadata); `e` must be that slice.
+    */
+  private def lloydCents(s: SparkSession, dir: String, slice: String, e: DataFrame,
+                         params: LloydParams): Surface[LloydParams, Seq[(Long, Array[Double])]] =
+    shared(s, dir, "embeddings", params, slice)(p =>
+      Similarity.lloydCentroidsLocalValues(e, p.nlist, p.iters))
+
+  /** The cluster family's index: all embeddings at [[Canonical.clusterLloyd]]. */
+  private def clusterCents(s: SparkSession, dir: String) =
+    lloydCents(s, dir, "all", emb(s, dir), Canonical.clusterLloyd)
+
+  /** Jointly trained IVF centroids + PQ codebooks for the one-shot IVFADC query. */
+  private def ivfPqBooks(s: SparkSession, dir: String): Surface[IvfPqParams, Similarity.IvfPqBooks] =
+    shared(s, dir, "embeddings", Canonical.ivfPq)(p => Similarity.trainIvfPq(emb(s, dir), p))
+
+  /** The stored corpus of the incremental-dedup queries (every doc but
+    * each 10th), MinHash-indexed once per fixture at [[Canonical.lsh]].
+    */
+  private def incrementalStore(s: SparkSession, dir: String): String = {
+    import org.apache.spark.sql.functions.col
+    val store = storeDir("mh_index", dir, "documents")
+    val p = Canonical.lsh
+    if (!new java.io.File(s"$store/sets/_SUCCESS").exists())
+      Dedup.minhashIndexStore(docs(s, dir).filter(col("doc_id") % 10 =!= 0), store,
+        "doc_id", "text", p.k, p.numPerm, p.bands)
+    store
   }
 
-  /** Session-shared deterministic Lloyd centroid memo (round-13 verdict
-    * task 4, explicitly sanctioned there): the k-means training chain is
-    * identical for every consumer at the same (input slice, nlist, iters),
-    * so one session running several Lloyd-backed queries trains each
-    * distinct index ONCE and every consumer serves from the collected
-    * nlist-row centroid values (bounded index METADATA — the same class as
-    * a broadcast dimension). Keyed by (applicationId, fixture dir, fixture
-    * fingerprint, input-slice tag, nlist, iters): a new session or a
-    * regenerated fixture can never serve stale centroids, and differently
-    * parameterized consumers (dedup_semantic's iters=4,
-    * simsearch_index_drift's evens-only nlist=8) get their own entries.
+  /** Every 41st vector reappears as a holdout item with ONE dimension zeroed
+    * (selected by vec_id, so both engines mutate identically) — a
+    * "paraphrase" that keeps cosine near 1 while sharing no exact value
+    * pattern.
     */
-  private val lloydCentsCache =
-    new scala.collection.concurrent.TrieMap[String, Seq[(Long, Array[Double])]]()
-  private def sharedLloydCents(s: SparkSession, dir: String, slice: String,
-                               emb: DataFrame, nlist: Int,
-                               iters: Int): Seq[(Long, Array[Double])] = {
-    val fp = java.lang.Long.toHexString(
-      treeFingerprint(new java.io.File(s"$dir/embeddings.parquet")))
-    val key = s"${s.sparkContext.applicationId}|$dir|$fp|$slice|nl$nlist|it$iters"
-    lloydCentsCache.getOrElseUpdate(key,
-      Similarity.lloydCentroidsLocalValues(emb, nlist, iters))
+  private def paraphrasedVectors(vectors: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
+    val d = size(col("embedding"))
+    val k = (col("vec_id") % d.cast("long")).cast("int") + 1 // 1-based dim
+    vectors.filter(col("vec_id") % 41 === 0)
+      .select(col("vec_id"),
+        concat(
+          slice(col("embedding"), lit(1), k - 1),
+          array(lit(0.0f)),
+          slice(col("embedding"), k + 1, d - k)).as("embedding"))
   }
 
-  /** Session-shared joint IVF+PQ training memo for the one-shot IVFADC
-    * query (round-13 verdict task 3: "share the trained index in-session"):
-    * one (nlist + m·k)-row metadata collect per session at the canonical
-    * parameters, served to every ivfPqTopK evaluation. Same key discipline
-    * as [[sharedLloydCents]].
+  /** Every holdout doc reappears with ~10% of its token VALUES rewritten —
+    * tokens are selected by their own md5-derived hash, so both engines
+    * mutate identically with no positional lambda. Edits break the verbatim
+    * 13-gram runs decontaminate_exact needs, but most of the 3-shingle set
+    * survives, which is exactly what the MinHash Jaccard measures.
     */
-  private val ivfPqBooksCache = new scala.collection.concurrent.TrieMap[
-    String, (Seq[(Long, Array[Double])], Seq[Seq[(Long, Array[Double])]])]()
-  private def sharedIvfPqBooks(s: SparkSession, dir: String, nlist: Int,
-                               m: Int, k: Int, iters: Int)
-      : (Seq[(Long, Array[Double])], Seq[Seq[(Long, Array[Double])]]) = {
-    val fp = java.lang.Long.toHexString(
-      treeFingerprint(new java.io.File(s"$dir/embeddings.parquet")))
-    val key = s"${s.sparkContext.applicationId}|$dir|$fp|nl$nlist|m$m|k$k|it$iters"
-    ivfPqBooksCache.getOrElseUpdate(key,
-      Similarity.jointIvfPqBooks(emb(s, dir), nlist, m, k, iters))
+  private def rewrittenHoldout(d: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
+    val mutated = transform(graft.functions.Text.tokens(col("text")),
+      t => when(graft.functions.Hashing.hash60(t) % 10 === 0, lit("xqz")).otherwise(t))
+    d.filter(Canonical.isHoldout(col("doc_id")))
+      .select(col("doc_id"), array_join(mutated, " ").as("text"))
   }
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -152,8 +160,8 @@ object ExtensionQueries {
       Dedup.ngramJaccardPairs(docs(s, dir), "doc_id", "text", k = 3, threshold = 0.5)),
     "dedup_minhash_lsh" -> ((s, dir) =>
       // canonical-parameter pair surface; shared (build-once/serve-many)
-      // with the four cluster-family consumers below via sharedLshPairs
-      sharedLshPairs(s, dir)),
+      // with the four cluster-family consumers below via lshPairs
+      lshPairs(s, dir).value),
     "dedup_simhash" -> ((s, dir) =>
       Dedup.simHashPairs(docs(s, dir), "doc_id", "text", maxDist = 3)),
     "dedup_embedding" -> ((s, dir) =>
@@ -161,16 +169,18 @@ object ExtensionQueries {
     "dedup_embedding_lsh" -> ((s, dir) =>
       Similarity.embeddingLshPairs(emb(s, dir), threshold = 0.45)),
     "dedup_semantic" -> ((s, dir) =>
-      // Lloyd training session-shared (its own nlist=4/iters=4 memo entry)
-      Similarity.semanticDedup(emb(s, dir), nlist = 4, iters = 4, threshold = 0.45,
-        centsOpt = Some(sharedLloydCents(s, dir, "all", emb(s, dir), 4, 4)))),
+      // Lloyd training session-shared (its own nlist=4/iters=4 registry entry)
+      Similarity.semanticDedup(emb(s, dir), Canonical.semanticLloyd.nlist,
+        Canonical.semanticLloyd.iters, threshold = 0.45,
+        centsOpt = Some(lloydCents(s, dir, "all", emb(s, dir), Canonical.semanticLloyd)))),
     "dedup_ngram_capped" -> ((s, dir) =>
-      Dedup.ngramJaccardCappedPairs(docs(s, dir), "doc_id", "text", k = 3, threshold = 0.5, maxDf = 50)),
+      Dedup.ngramJaccardCappedPairs(docs(s, dir), "doc_id", "text",
+        Canonical.ngramCapped.k, Canonical.ngramCapped.threshold, Canonical.ngramCapped.maxDf)),
     "dedup_containment" -> ((s, dir) =>
       // asymmetric subset-dup sweep: containment >= 0.8 with jaccard riding
       // along — high-containment/low-jaccard rows are quoted-inside docs
       Dedup.containmentPairs(docs(s, dir), "doc_id", "text",
-        k = 3, threshold = 0.8, maxDf = 50)),
+        Canonical.containment.k, Canonical.containment.threshold, Canonical.containment.maxDf)),
     "dedup_normalized" -> ((s, dir) =>
       TextAnalysis.normalizedDedup(docs(s, dir))),
     "dedup_edit_distance" -> ((s, dir) =>
@@ -180,53 +190,42 @@ object ExtensionQueries {
       // deterministic synthetic holdout: every 97th doc plays the benchmark
       val d = docs(s, dir)
       Dedup.contaminationReport(
-        d.filter(col("doc_id") % 97 =!= 0), d.filter(col("doc_id") % 97 === 0),
+        d.filter(!Canonical.isHoldout(col("doc_id"))), d.filter(Canonical.isHoldout(col("doc_id"))),
         "doc_id", "text", k = 5)
     },
     "contamination_overlap" -> { (s, dir) =>
       import org.apache.spark.sql.functions.col
       val d = docs(s, dir)
       Dedup.contaminationOverlap(
-        d.filter(col("doc_id") % 97 =!= 0), d.filter(col("doc_id") % 97 === 0),
+        d.filter(!Canonical.isHoldout(col("doc_id"))), d.filter(Canonical.isHoldout(col("doc_id"))),
         "doc_id", "text", k = 5)
     },
     "dedup_incremental" -> { (s, dir) =>
       import org.apache.spark.sql.functions.col
-      // growing-corpus dedup: the stored corpus (doc_id % 10 != 0) is
-      // indexed ONCE into a fingerprint-keyed /tmp store (same staleness
-      // scheme as simsearch_ivf_search); every 10th doc plays the new
-      // ingest batch, flagged against the store without re-signing history
-      val srcFp = java.lang.Long.toHexString(
-        treeFingerprint(new java.io.File(s"$dir/documents.parquet")))
-      val storeDir = s"/tmp/graft_mh_index_v1_${dir.replaceAll("[^A-Za-z0-9]", "_")}_$srcFp"
-      val d = docs(s, dir)
-      if (!new java.io.File(s"$storeDir/sets/_SUCCESS").exists())
-        Dedup.minhashIndexStore(d.filter(col("doc_id") % 10 =!= 0), storeDir,
-          "doc_id", "text", k = 3, numPerm = 64, bands = 16)
-      Dedup.dedupIncremental(s, storeDir, d.filter(col("doc_id") % 10 === 0),
-        "doc_id", "text", k = 3, numPerm = 64, bands = 16, threshold = 0.5)
+      // growing-corpus dedup: every 10th doc plays the new ingest batch,
+      // flagged against the stored corpus without re-signing history
+      val p = Canonical.lsh
+      Dedup.dedupIncremental(s, incrementalStore(s, dir),
+        docs(s, dir).filter(col("doc_id") % 10 === 0),
+        "doc_id", "text", p.k, p.numPerm, p.bands, p.threshold)
     },
     "dedup_incremental_apply" -> { (s, dir) =>
       import org.apache.spark.sql.functions.col
       // the admit step: the same batch, with every doc flagged against the
       // stored corpus anti-joined out — what an ingest pipeline appends
-      val srcFp = java.lang.Long.toHexString(
-        treeFingerprint(new java.io.File(s"$dir/documents.parquet")))
-      val storeDir = s"/tmp/graft_mh_index_v1_${dir.replaceAll("[^A-Za-z0-9]", "_")}_$srcFp"
-      val d = docs(s, dir)
-      if (!new java.io.File(s"$storeDir/sets/_SUCCESS").exists())
-        Dedup.minhashIndexStore(d.filter(col("doc_id") % 10 =!= 0), storeDir,
-          "doc_id", "text", k = 3, numPerm = 64, bands = 16)
-      Dedup.applyIncrementalDedup(s, storeDir, d.filter(col("doc_id") % 10 === 0),
-          "doc_id", "text", k = 3, numPerm = 64, bands = 16, threshold = 0.5)
+      val p = Canonical.lsh
+      Dedup.applyIncrementalDedup(s, incrementalStore(s, dir),
+          docs(s, dir).filter(col("doc_id") % 10 === 0),
+          "doc_id", "text", p.k, p.numPerm, p.bands, p.threshold)
         .select(col("doc_id"), col("source"))
         .orderBy("doc_id")
     },
     "dedup_exact_substring" -> ((s, dir) =>
       // matched-quadruple surface session-shared with dedup_substring_trim
       // (same n/maxDf/hash — the common core of both operators)
-      Dedup.exactSubstringPairs(docs(s, dir), "doc_id", "text", n = 13, maxDf = 50,
-        matched = Some(sharedSubstringMatches(s, dir)))),
+      Dedup.exactSubstringPairs(docs(s, dir), "doc_id", "text",
+        Canonical.substring.n, Canonical.substring.maxDf,
+        matched = Some(substringQuads(s, dir)))),
     "dedup_substring_trim" -> ((s, dir) =>
       // Lee-et-al span REWRITE: every string-verified verbatim run of >= 20
       // tokens shared with a lower-id doc is CUT from the higher-id copy;
@@ -234,39 +233,19 @@ object ExtensionQueries {
       // through the same tokenize-rejoin normalization); matched surface
       // session-shared with dedup_exact_substring
       Dedup.substringTrimApply(docs(s, dir), "doc_id", "text",
-        n = 13, minSpan = 20, maxDf = 50,
-        matchedOpt = Some(sharedSubstringMatches(s, dir)))),
+        Canonical.substring.n, Canonical.minSpan, Canonical.substring.maxDf,
+        matchedOpt = Some(substringQuads(s, dir)))),
     "decontaminate_semantic" -> { (s, dir) =>
-      import org.apache.spark.sql.functions._
-      // embedding-space contamination: every 41st vector reappears as a
-      // holdout item with ONE dimension zeroed (selected by vec_id, so both
-      // engines mutate identically) — a "paraphrase" that keeps cosine near
-      // 1 while sharing no exact value pattern; flag train vectors with
-      // verified cosine >= 0.9 against any holdout item
+      // embedding-space contamination: flag train vectors with verified
+      // cosine >= 0.9 against any paraphrased holdout item
       val e = emb(s, dir)
-      val d = size(col("embedding"))
-      val k = (col("vec_id") % d.cast("long")).cast("int") + 1 // 1-based dim
-      val holdout = e.filter(col("vec_id") % 41 === 0)
-        .select(col("vec_id"),
-          concat(
-            slice(col("embedding"), lit(1), k - 1),
-            array(lit(0.0f)),
-            slice(col("embedding"), k + 1, d - k)).as("embedding"))
-      Similarity.semanticContamination(e, holdout, threshold = 0.9)
+      Similarity.semanticContamination(e, paraphrasedVectors(e), threshold = 0.9)
     },
     "decontaminate_semantic_apply" -> { (s, dir) =>
-      import org.apache.spark.sql.functions._
+      import org.apache.spark.sql.functions.col
       // end-to-end: flagged vectors anti-joined out of the corpus
       val e = emb(s, dir)
-      val d = size(col("embedding"))
-      val k = (col("vec_id") % d.cast("long")).cast("int") + 1
-      val holdout = e.filter(col("vec_id") % 41 === 0)
-        .select(col("vec_id"),
-          concat(
-            slice(col("embedding"), lit(1), k - 1),
-            array(lit(0.0f)),
-            slice(col("embedding"), k + 1, d - k)).as("embedding"))
-      Similarity.applySemanticDecontamination(e, holdout, threshold = 0.9)
+      Similarity.applySemanticDecontamination(e, paraphrasedVectors(e), threshold = 0.9)
         .select(col("vec_id"), col("label"))
         .orderBy("vec_id")
     },
@@ -281,12 +260,10 @@ object ExtensionQueries {
       // the token-type equi-join, none of the merge rounds. Same
       // fingerprint-keyed /tmp cache scheme as simsearch_ivf_search, so a
       // regenerated fixture or changed store layout never serves stale.
-      val srcFp = java.lang.Long.toHexString(
-        treeFingerprint(new java.io.File(s"$dir/documents.parquet")))
-      val storeDir = s"/tmp/graft_bpe_store_v1_${dir.replaceAll("[^A-Za-z0-9]", "_")}_$srcFp"
-      if (!new java.io.File(s"$storeDir/types/_SUCCESS").exists())
-        TextAnalysis.bpeStore(docs(s, dir), storeDir, nMerges = 10)
-      TextAnalysis.bpeEncodeStored(s, storeDir, docs(s, dir))
+      val store = storeDir("bpe_store", dir, "documents")
+      if (!new java.io.File(s"$store/types/_SUCCESS").exists())
+        TextAnalysis.bpeStore(docs(s, dir), store, nMerges = 10)
+      TextAnalysis.bpeEncodeStored(s, store, docs(s, dir))
     },
     "decontaminate_exact" -> { (s, dir) =>
       import org.apache.spark.sql.functions._
@@ -296,25 +273,19 @@ object ExtensionQueries {
       // verbatim >= 13-token benchmark span — non-vacuous by construction
       // report session-shared with decontaminate_apply and pipeline_e2e's
       // S3 (identical corpus/holdout/n)
-      sharedContamination(s, dir).orderBy(col("doc_id"))
+      contamination(s, dir).value.orderBy(col("doc_id"))
     },
     "decontaminate_stored" -> { (s, dir) =>
-      import org.apache.spark.sql.functions._
       // decontamination against a STORED benchmark registry: the same
       // quoting holdout as decontaminate_exact, indexed ONCE per fixture
       // (fingerprint-keyed /tmp cache like the other stored queries) —
       // identical output and oracle, but the plan only READS the registry
-      val srcFp = java.lang.Long.toHexString(
-        treeFingerprint(new java.io.File(s"$dir/documents.parquet")))
-      val storeDir = s"/tmp/graft_holdout_index_v1_${dir.replaceAll("[^A-Za-z0-9]", "_")}_$srcFp"
+      val store = storeDir("holdout_index", dir, "documents")
       val d = docs(s, dir)
-      if (!new java.io.File(s"$storeDir/grams/_SUCCESS").exists()) {
-        val holdout = d.filter(col("doc_id") % 97 === 0)
-          .select(col("doc_id"),
-            array_join(slice(graft.functions.Text.tokens(col("text")), 6, 21), " ").as("text"))
-        Dedup.holdoutIndexStore(holdout, storeDir, "doc_id", "text", n = 13)
-      }
-      Dedup.decontaminateStored(s, storeDir, d, "doc_id", "text", n = 13)
+      val n = Canonical.contamination.n
+      if (!new java.io.File(s"$store/grams/_SUCCESS").exists())
+        Dedup.holdoutIndexStore(Canonical.quotingHoldout(d), store, "doc_id", "text", n = n)
+      Dedup.decontaminateStored(s, store, d, "doc_id", "text", n = n)
     },
     "dedup_apply" -> { (s, dir) =>
       import org.apache.spark.sql.functions.col
@@ -322,7 +293,7 @@ object ExtensionQueries {
       // connected components -> drop non-canonical members -> corpus out;
       // the (already materialized) pair surface is session-shared, so CC
       // scans its blocks directly with no second edge-snapshot barrier
-      Dedup.applyDedup(docs(s, dir), sharedLshPairs(s, dir), "doc_id",
+      Dedup.applyDedup(docs(s, dir), lshPairs(s, dir).value, "doc_id",
           pairsMaterialized = true)
         .select(col("doc_id"), col("source"))
         .orderBy("doc_id")
@@ -336,44 +307,25 @@ object ExtensionQueries {
       // contamination report session-shared with decontaminate_exact and
       // pipeline_e2e (identical corpus/holdout/n)
       val d = docs(s, dir)
-      val holdout = d.filter(col("doc_id") % 97 === 0)
-        .select(col("doc_id"),
-          array_join(slice(graft.functions.Text.tokens(col("text")), 6, 21), " ").as("text"))
-      Dedup.applyDecontamination(d, holdout, "doc_id", "text", n = 13, minSpanTokens = 20,
-          reportOpt = Some(sharedContamination(s, dir)))
+      Dedup.applyDecontamination(d, Canonical.quotingHoldout(d), "doc_id", "text",
+          n = Canonical.contamination.n, minSpanTokens = Canonical.minSpan,
+          reportOpt = Some(contamination(s, dir)))
         .select(col("doc_id"), col("source"))
         .orderBy("doc_id")
     },
     "decontaminate_fuzzy" -> { (s, dir) =>
-      import org.apache.spark.sql.functions._
-      // paraphrase-style contamination (the mode exact rules MISS): every
-      // 97th doc reappears as a holdout item with ~10% of its token VALUES
-      // rewritten — tokens are selected by their own md5-derived hash, so
-      // both engines mutate identically with no positional lambda. Edits
-      // break the verbatim 13-gram runs decontaminate_exact needs, but
-      // most of the 3-shingle set survives, which is exactly what the
-      // MinHash Jaccard measures.
+      // paraphrase-style contamination (the mode exact rules MISS)
       val d = docs(s, dir)
-      val toks = graft.functions.Text.tokens(col("text"))
-      val mutated = transform(toks,
-        t => when(graft.functions.Hashing.hash60(t) % 10 === 0, lit("xqz")).otherwise(t))
-      val holdout = d.filter(col("doc_id") % 97 === 0)
-        .select(col("doc_id"), array_join(mutated, " ").as("text"))
-      Dedup.fuzzyContamination(d, holdout, "doc_id", "text",
+      Dedup.fuzzyContamination(d, rewrittenHoldout(d), "doc_id", "text",
         k = 3, numPerm = 64, bands = 32, threshold = 0.4)
     },
     "decontaminate_fuzzy_apply" -> { (s, dir) =>
-      import org.apache.spark.sql.functions._
+      import org.apache.spark.sql.functions.col
       // end-to-end fuzzy decontamination: same mutated holdout, flagged
       // docs anti-joined out of the corpus — the near-dup sibling of
       // decontaminate_apply (sub-threshold overlap survives)
       val d = docs(s, dir)
-      val toks = graft.functions.Text.tokens(col("text"))
-      val mutated = transform(toks,
-        t => when(graft.functions.Hashing.hash60(t) % 10 === 0, lit("xqz")).otherwise(t))
-      val holdout = d.filter(col("doc_id") % 97 === 0)
-        .select(col("doc_id"), array_join(mutated, " ").as("text"))
-      Dedup.applyFuzzyDecontamination(d, holdout, "doc_id", "text",
+      Dedup.applyFuzzyDecontamination(d, rewrittenHoldout(d), "doc_id", "text",
           k = 3, numPerm = 64, bands = 32, threshold = 0.4)
         .select(col("doc_id"), col("source"))
         .orderBy("doc_id")
@@ -401,9 +353,7 @@ object ExtensionQueries {
       // embeds a fingerprint of the SOURCE data (mtime+size, recursive) and
       // an index-format version, so a regenerated fixture or a changed index
       // layout can never silently serve a stale index.
-      val srcFp = java.lang.Long.toHexString(
-        treeFingerprint(new java.io.File(s"$dir/embeddings.parquet")))
-      val indexDir = s"/tmp/graft_ivf_index_v1_${dir.replaceAll("[^A-Za-z0-9]", "_")}_$srcFp"
+      val indexDir = storeDir("ivf_index", dir, "embeddings")
       if (!new java.io.File(s"$indexDir/assigned/_SUCCESS").exists())
         Similarity.ivfStore(emb(s, dir), indexDir, nlist = 4, iters = 4)
       Similarity.ivfSearchStored(s, indexDir, emb(s, dir), probeId = 0L, k = 5, nprobe = 3)
@@ -438,8 +388,8 @@ object ExtensionQueries {
     "cluster_assign" -> ((s, dir) =>
       // Lloyd training session-shared with cluster_purity/cluster_balanced
       // (identical nlist=4/iters=2 chain)
-      Similarity.kmeansClusterStats(emb(s, dir), nlist = 4, iters = 2,
-        centsOpt = Some(sharedLloydCents(s, dir, "all", emb(s, dir), 4, 2)))),
+      Similarity.kmeansClusterStats(emb(s, dir), Canonical.clusterLloyd.nlist,
+        Canonical.clusterLloyd.iters, centsOpt = Some(clusterCents(s, dir)))),
     "simsearch_pq" -> ((s, dir) =>
       // PQ compression sweep: 8 subspaces x 8 sub-centroids over 64 dims —
       // every vector's code + reconstruction cosine in one narrow pass
@@ -455,17 +405,15 @@ object ExtensionQueries {
       // (2/2) train both quantizers in ONE joint deep plan, session-shared
       // (round-13 verdict task 3)
       Similarity.ivfPqTopK(emb(s, dir), probeId = 0L, topK = 5,
-        nlist = 4, nprobe = 3, ivfIters = 2, m = 8, k = 8, pqIters = 2,
-        trainedOpt = Some(sharedIvfPqBooks(s, dir, nlist = 4, m = 8, k = 8,
-          iters = 2)))),
+        nlist = Canonical.ivfPq.nlist, nprobe = 3, ivfIters = Canonical.ivfPq.ivfIters,
+        m = Canonical.ivfPq.m, k = Canonical.ivfPq.k, pqIters = Canonical.ivfPq.pqIters,
+        trainedOpt = Some(ivfPqBooks(s, dir)))),
     "simsearch_ivfpq_stored" -> { (s, dir) =>
       // steady-state IVFADC serving: probe row + nlist centroids + m·k
       // codebooks + nprobe inverted-list partitions — corpus floats never
       // read; approx_sim computed from the stored PQ CODE alone.
       // Fingerprint-keyed /tmp cache like simsearch_ivf_search.
-      val srcFp = java.lang.Long.toHexString(
-        treeFingerprint(new java.io.File(s"$dir/embeddings.parquet")))
-      val indexDir = s"/tmp/graft_ivfpq_index_v1_${dir.replaceAll("[^A-Za-z0-9]", "_")}_$srcFp"
+      val indexDir = storeDir("ivfpq_index", dir, "embeddings")
       if (!new java.io.File(s"$indexDir/invlists/_SUCCESS").exists())
         Similarity.ivfPqStore(emb(s, dir), indexDir, nlist = 4,
           ivfIters = 4, m = 8, k = 8, pqIters = 2)
@@ -476,9 +424,7 @@ object ExtensionQueries {
       // steady-state encode against STORED codebooks (same parameters as
       // simsearch_pq, so the same oracle applies); fingerprint-keyed /tmp
       // cache like simsearch_ivf_search
-      val srcFp = java.lang.Long.toHexString(
-        treeFingerprint(new java.io.File(s"$dir/embeddings.parquet")))
-      val indexDir = s"/tmp/graft_pq_index_v1_${dir.replaceAll("[^A-Za-z0-9]", "_")}_$srcFp"
+      val indexDir = storeDir("pq_index", dir, "embeddings")
       if (!new java.io.File(s"$indexDir/codebooks/_SUCCESS").exists())
         Similarity.pqStore(emb(s, dir), indexDir, m = 8, k = 8, iters = 2)
       Similarity.pqEncodeStored(s, indexDir, emb(s, dir))
@@ -520,8 +466,8 @@ object ExtensionQueries {
       // label-coherence audit of the Lloyd index (same build as
       // cluster_assign — training session-shared): majority label,
       // per-mille purity, label entropy
-      Similarity.clusterLabelPurity(emb(s, dir), nlist = 4, iters = 2,
-        centsOpt = Some(sharedLloydCents(s, dir, "all", emb(s, dir), 4, 2)))),
+      Similarity.clusterLabelPurity(emb(s, dir), Canonical.clusterLloyd.nlist,
+        Canonical.clusterLloyd.iters, centsOpt = Some(clusterCents(s, dir)))),
     "simsearch_truncation" -> ((s, dir) =>
       // Matryoshka audit: energy / retained-cosine per truncation width
       Similarity.truncationAudit(emb(s, dir), dims = Seq(8, 16, 32, 64))),
@@ -584,7 +530,7 @@ object ExtensionQueries {
       // quality-aware canonical selection: each near-dup cluster keeps its
       // HIGHEST-quality member (ties to the lower id), not the lowest id;
       // pair surface session-shared with the other cluster-family queries
-      Dedup.applyDedupQuality(docs(s, dir), sharedLshPairs(s, dir),
+      Dedup.applyDedupQuality(docs(s, dir), lshPairs(s, dir).value,
           "doc_id", "text", checkpointDir = None)
         .select(col("doc_id"), col("source"))
         .orderBy("doc_id")
@@ -605,17 +551,14 @@ object ExtensionQueries {
       // Every stage is individually green; THIS checks the composition
       // (barriers, no cross-stage re-execution, the exact shipped order).
       val d = docs(s, dir)
-      val holdout = d.filter(col("doc_id") % 97 === 0)
-        .select(col("doc_id"),
-          array_join(slice(graft.functions.Text.tokens(col("text")), 6, 21), " ").as("text"))
       // dedup stage serves from the session-shared canonical pair surface
       // (the same build-once/serve-many intermediate the five cluster-family
       // queries read) — the pipeline restricts it to its quality survivors;
       // the decontamination stage serves from the shared contamination
       // report (decontaminate_exact/apply's core, identical parameters)
-      operators.Pipeline.trainingManifest(s, d, holdout,
-        pairs = Some(sharedLshPairs(s, dir)),
-        contamination = Some(sharedContamination(s, dir)))
+      operators.Pipeline.trainingManifest(s, d, Canonical.quotingHoldout(d),
+        pairs = Some(lshPairs(s, dir)),
+        contamination = Some(contamination(s, dir)))
     },
     "doc_chunk_reassemble" -> ((s, dir) =>
       // round-trip audit of the chunker: drop each non-first chunk's
@@ -631,22 +574,22 @@ object ExtensionQueries {
       // crawl; per-bucket occupancy shift in signed ppm
       val e = emb(s, dir)
       // Lloyd training session-shared (its own evens-only nlist=8 entry)
+      val even = e.filter(col("vec_id") % 2 === 0)
       Similarity.indexDrift(
-        e.filter(col("vec_id") % 2 === 0), e.filter(col("vec_id") % 2 === 1),
-        nlist = 8, iters = 2,
-        centsOpt = Some(sharedLloydCents(s, dir, "even",
-          e.filter(col("vec_id") % 2 === 0), 8, 2)))
+        even, e.filter(col("vec_id") % 2 === 1),
+        Canonical.driftLloyd.nlist, Canonical.driftLloyd.iters,
+        centsOpt = Some(lloydCents(s, dir, "even", even, Canonical.driftLloyd)))
     },
     "dedup_cluster_stats" -> ((s, dir) =>
       // per-source duplicate-mass report over the MinHash-LSH components —
       // the "which sources pay for the dedup pass" number; shared pairs
-      Dedup.clusterStatsBySource(docs(s, dir), sharedLshPairs(s, dir),
+      Dedup.clusterStatsBySource(docs(s, dir), lshPairs(s, dir).value,
         "doc_id", "source", checkpointDir = None)),
     "dedup_minhash_estimate" -> ((s, dir) =>
       // sketch-quality audit: signature-agreement estimate vs exact Jaccard
       // per verified LSH pair, error in exact integer ppm; shared pairs
-      Dedup.minHashEstimateAudit(docs(s, dir), sharedLshPairs(s, dir),
-        "doc_id", "text", k = 3, numPerm = 64,
+      Dedup.minHashEstimateAudit(docs(s, dir), lshPairs(s, dir).value,
+        "doc_id", "text", k = Canonical.lsh.k, numPerm = Canonical.lsh.numPerm,
         hashFn = graft.functions.Hashing.hash60)),
     "text_mislabel_rate" -> ((s, dir) =>
       // per-source declared-vs-NB-predicted disagreement (mislabeled dump /
@@ -691,9 +634,9 @@ object ExtensionQueries {
     "cluster_balanced" -> ((s, dir) =>
       // diversity cap: at most 50 vectors per Lloyd cluster, hash-drawn;
       // training session-shared with cluster_assign/cluster_purity
-      Similarity.clusterBalancedSample(emb(s, dir), nlist = 4, iters = 2,
-        maxPerCluster = 50,
-        centsOpt = Some(sharedLloydCents(s, dir, "all", emb(s, dir), 4, 2)))),
+      Similarity.clusterBalancedSample(emb(s, dir), Canonical.clusterLloyd.nlist,
+        Canonical.clusterLloyd.iters, maxPerCluster = 50,
+        centsOpt = Some(clusterCents(s, dir)))),
     "vocab_bpe_fertility" -> ((s, dir) =>
       // per-source tokenizer-fertility audit under the round-10 BPE vocab
       TextAnalysis.bpeFertility(docs(s, dir), "source", nMerges = 10)),

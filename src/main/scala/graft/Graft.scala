@@ -2,16 +2,23 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory for the graft engine.
+/** Session factory for the graft engine — the one place a session is built.
+  * The mains (`Bench`, `Verify`, `PlanDump`, `Demo`, `ExecutorLossProof`)
+  * and the test fixtures all call it, so every caller runs with the same SQL
+  * functions (`GraftExtensions`) and the same state-store provider.
   *
-  * Local-mode defaults are tuned for the test harness (`local[32]`, 32 shuffle
-  * partitions); on a real cluster the same settings scale via spark-submit conf.
-  * AQE stays on everywhere: it re-plans shuffle partition counts, converts
-  * sort-merge joins to broadcast at runtime, and splits skewed partitions —
-  * all critical at the 100 TB design point.
+  * Local mode runs `local[cpus]` with `cpus` shuffle partitions; `cpus`
+  * defaults to [[defaultCpus]]. On a real cluster the same settings scale via
+  * spark-submit conf. AQE stays on everywhere: it re-plans shuffle partition
+  * counts, converts sort-merge joins to broadcast at runtime, and splits
+  * skewed partitions — all critical at the 100 TB design point.
+  *
+  * `extraConf` is applied last, so it can override any setting above
+  * (including `spark.master`, e.g. a `local-cluster` master).
   */
 object Graft {
-  def session(appName: String = "graft", cpus: String = defaultCpus): SparkSession = {
+  def session(appName: String = "graft", cpus: String = defaultCpus,
+              extraConf: Map[String, String] = Map.empty): SparkSession = {
     val spark = SparkSession
       .builder()
       .master(s"local[$cpus]")
@@ -28,12 +35,13 @@ object Graft {
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.ui.enabled", "false")
+      .config(extraConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
 
-  /** Defaults to all cores (the driver environment is local[32]). */
+  /** `SPARK_GRAFT_CPUS`, else every available core. */
   def defaultCpus: String =
     sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
 }

@@ -2,7 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.operators.{Canonical, Dedup}
+import graft.sources.Tables
 
 /** Optimization-round plan artifact dumper: writes `.explain("formatted")`
   * output for the named queries to `<outDir>/<query>_<tag>.txt` so plan
@@ -27,34 +30,26 @@ object PlanDump {
     * filter, candidate self-join, exact verify — is visible in one plan.
     * Dumped as `<query>_stage_<tag>.txt` alongside the query dump.
     */
-  private val stagePlans: Map[String, (org.apache.spark.sql.SparkSession, String) =>
-      org.apache.spark.sql.DataFrame] = {
-    import org.apache.spark.sql.functions._
-    import graft.operators.Dedup
-    import graft.sources.Tables
-    def docs(s: org.apache.spark.sql.SparkSession, dir: String) =
-      Tables.table(s, dir, "documents")
+  private val stagePlans: Map[String, (SparkSession, String) => DataFrame] = {
+    def docs(s: SparkSession, dir: String) = Tables.table(s, dir, "documents")
+    val (capped, cont, sub) = (Canonical.ngramCapped, Canonical.containment, Canonical.substring)
     Map(
       "dedup_ngram_capped" -> ((s, dir) =>
         Dedup.ngramJaccardCappedPairs(docs(s, dir), "doc_id", "text",
-          k = 3, threshold = 0.5, maxDf = 50, materialize = false)),
+          capped.k, capped.threshold, capped.maxDf, materialize = false)),
       "dedup_containment" -> ((s, dir) =>
         Dedup.containmentPairs(docs(s, dir), "doc_id", "text",
-          k = 3, threshold = 0.8, maxDf = 50, materialize = false)),
+          cont.k, cont.threshold, cont.maxDf, materialize = false)),
       "dedup_exact_substring" -> ((s, dir) =>
         Dedup.exactSubstringPairs(docs(s, dir), "doc_id", "text",
-          n = 13, maxDf = 50, materialize = false)),
+          sub.n, sub.maxDf, materialize = false)),
       "dedup_substring_trim" -> ((s, dir) =>
         Dedup.substringTrimApply(docs(s, dir), "doc_id", "text",
-          n = 13, minSpan = 20, maxDf = 50, materialize = false)),
+          sub.n, Canonical.minSpan, sub.maxDf, materialize = false)),
       "decontaminate_exact" -> { (s, dir) =>
         val d = docs(s, dir)
-        val holdout = d.filter(col("doc_id") % 97 === 0)
-          .select(col("doc_id"),
-            array_join(slice(graft.functions.Text.tokens(col("text")), 6, 21), " ")
-              .as("text"))
-        Dedup.exactSubstringContamination(d, holdout, "doc_id", "text",
-          n = 13, materialize = false)
+        Dedup.exactSubstringContamination(d, Canonical.quotingHoldout(d), "doc_id", "text",
+          n = Canonical.contamination.n, materialize = false)
       })
   }
 
@@ -62,14 +57,7 @@ object PlanDump {
     require(args.length >= 4,
       "usage: runMain graft.PlanDump <sfDir> <outDir> <tag> <query>[,query...]")
     val Array(sfDir, outDir, tag, names) = args.take(4)
-    val cpus = Graft.defaultCpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session("graft-plandump")
     Files.createDirectories(Paths.get(outDir))
     val queries = names.split(",").toSeq
     val unknown = queries.filterNot(SparkEntry.queries.contains)

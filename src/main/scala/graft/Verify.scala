@@ -1,9 +1,24 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** A reused outDir may still hold the round-13 in-outDir `canonical/` dir;
+    * remove it with everything under it, so a glob over outDir's
+    * subdirectories can't resurrect the phantom row. Throws if any of it
+    * survives.
+    */
+  def removeLegacyCanonical(outDir: String): Unit = {
+    val legacy = Paths.get(outDir, "canonical")
+    if (Files.exists(legacy)) {
+      val tree = Files.walk(legacy)
+      try tree.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+      finally tree.close()
+      if (Files.exists(legacy))
+        throw new IllegalStateException(s"could not remove legacy dir $legacy")
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query subset for fast local
     // re-verification of just-touched operators (the driver always passes
@@ -12,14 +27,7 @@ object Verify {
       case Array(s, o)    => (s, o, None)
       case Array(s, o, q) => (s, o, Some(q.split(",").toSet))
     }
-    val cpus = Graft.defaultCpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session("graft-verify")
     new java.io.File(outDir).mkdirs()
     // Canonical text dumps live in a SIBLING directory, not under outDir:
     // the driver's oracle loop globs outDir subdirectories as per-query
@@ -27,14 +35,7 @@ object Verify {
     // "canonical" error row in CORRECTNESS_r13 (round-13 verdict task 1a).
     val canonicalDir = s"${outDir.stripSuffix("/")}_canonical"
     new java.io.File(canonicalDir).mkdirs()
-    // A reused outDir may still hold the round-13 in-outDir canonical/ dir;
-    // remove it so the driver's glob can't resurrect the phantom row.
-    val legacy = new java.io.File(s"$outDir/canonical")
-    if (legacy.isDirectory) {
-      Option(legacy.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && f.getName.endsWith(".txt")).foreach(_.delete())
-      legacy.delete()
-    }
+    removeLegacyCanonical(outDir)
     // Diagnosability (round-13, VERDICT task 1a): alongside each parquet
     // dump, write a canonical text rendering — columns sorted by name,
     // rows sorted lexicographically, one TAB-joined line per row — plus

@@ -29,10 +29,6 @@ object Hashing {
 
   def fastHash64(c: Column): Column = xxhash64(c)
 
-  /** DuckDB SQL expression equivalent to [[hash60]] applied to `expr`. */
-  def hash60Sql(expr: String): String =
-    s"CAST('0x' || substr(md5($expr), 1, 15) AS BIGINT)"
-
   /** MinHash permutation constants: h_i(x) = (a_i * x + b_i) mod P. Fixed,
     * documented values so both engines generate identical signatures.
     */

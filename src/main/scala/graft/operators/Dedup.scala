@@ -371,7 +371,7 @@ object Dedup {
     * [[substringTrimApply]]: both consume exactly this set (same n, maxDf,
     * hash), and ~70 % of either query's cost is the positional-index build
     * + verify that produces it — so a session running both builds it once
-    * (the `sharedLshPairs` build-once/serve-many shape; round-13 verdict
+    * (the shared LSH-pair surface's build-once/serve-many shape; round-13 verdict
     * task 2) and each query's own plan starts from the matched barrier.
     *
     * Persist bracket rationale (round 7): the positional index feeds the
@@ -407,12 +407,13 @@ object Dedup {
                           hashFn: Column => Column = Hashing.hash60,
                           materialize: Boolean = true,
                           checkpointDir: Option[String] = None,
-                          matched: Option[DataFrame] = None): DataFrame = {
+                          matched: Option[Surface[SubstringParams, DataFrame]] = None): DataFrame = {
     // `matched` injects a PRECOMPUTED (already materialized) quadruple
     // surface from [[substringMatchedQuads]] — the session-shared serve
     // path; when absent the operator builds its own.
-    val matchedDf = matched.getOrElse(
-      substringMatchedQuads(df, idCol, textCol, n, maxDf, hashFn,
+    val matchedDf = matched
+      .map(_.servedTo(SubstringParams(n, maxDf), "exactSubstringPairs"))
+      .getOrElse(substringMatchedQuads(df, idCol, textCol, n, maxDf, hashFn,
         materialize, checkpointDir))
     // gaps-and-islands along each (pa - pb) diagonal, fused to ONE
     // exchange: repartition on the output key (doc_a, doc_b) up front —
@@ -527,12 +528,13 @@ object Dedup {
                          hashFn: Column => Column = Hashing.hash60,
                          materialize: Boolean = true,
                          checkpointDir: Option[String] = None,
-                         matchedOpt: Option[DataFrame] = None): DataFrame = {
+                         matchedOpt: Option[Surface[SubstringParams, DataFrame]] = None): DataFrame = {
     // `matchedOpt` injects the session-shared [[substringMatchedQuads]]
     // surface (already materialized); when absent the operator builds its
     // own behind the standard persist bracket.
-    val matched = matchedOpt.getOrElse(
-      substringMatchedQuads(df, idCol, textCol, n, maxDf, hashFn,
+    val matched = matchedOpt
+      .map(_.servedTo(SubstringParams(n, maxDf), "substringTrimApply"))
+      .getOrElse(substringMatchedQuads(df, idCol, textCol, n, maxDf, hashFn,
         materialize, checkpointDir))
     locally {
       // islands over pb per (doc_b, doc_a, diag): same lockstep-diagonal
@@ -1171,13 +1173,14 @@ object Dedup {
                            minSpanTokens: Int = 13,
                            hashFn: Column => Column = Hashing.hash60,
                            checkpointDir: Option[String] = None,
-                           reportOpt: Option[DataFrame] = None): DataFrame = {
+                           reportOpt: Option[Surface[ContaminationParams, DataFrame]] = None): DataFrame = {
     require(minSpanTokens >= n, s"span threshold $minSpanTokens below the index n=$n")
     // reportOpt injects a PRECOMPUTED [[exactSubstringContamination]] report
     // over the same (train, holdout, n) — the session-shared serve path;
     // when absent the operator derives its own.
-    val flagged = reportOpt.getOrElse(
-        exactSubstringContamination(train, holdout, idCol, textCol, n, hashFn,
+    val flagged = reportOpt
+        .map(_.servedTo(ContaminationParams(n), "applyDecontamination"))
+        .getOrElse(exactSubstringContamination(train, holdout, idCol, textCol, n, hashFn,
           checkpointDir = checkpointDir))
       .filter(col("longest_span") >= minSpanTokens)
       .select(col("doc_id").as("__drop_id"))

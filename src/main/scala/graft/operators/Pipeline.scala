@@ -86,12 +86,14 @@ object Pipeline {
     * 8 shards, seed 7) so the oracle chain is the stage oracles composed.
     *
     * @param pairs optional PRECOMPUTED near-dup pair surface over `docs` at
-    *   the pipeline's canonical parameters (word-3-shingles, 64 perms,
-    *   16 bands, Jaccard ≥ 0.5 — [[Dedup.minHashLshPairs]]'s contract),
-    *   already materialized: a session running several cluster-family
-    *   queries builds that surface once and every consumer serves from it
-    *   (the build-once/serve-many shape of the stored-index queries). When
-    *   absent the pipeline builds its own.
+    *   the pipeline's parameters ([[Canonical.lsh]], built by
+    *   [[Dedup.minHashLshPairs]]), already materialized: a session running
+    *   several cluster-family queries builds that surface once and every
+    *   consumer serves from it (the build-once/serve-many shape of the
+    *   stored-index queries). When absent the pipeline builds its own.
+    * @param contamination optional PRECOMPUTED
+    *   [[Dedup.exactSubstringContamination]] report over (`docs`, `holdout`)
+    *   at [[Canonical.contamination]]; when absent the pipeline derives it.
     */
   def trainingManifest(spark: SparkSession, docs: DataFrame,
                        holdout: DataFrame,
@@ -100,17 +102,18 @@ object Pipeline {
                        packBudget: Int = 512, numShards: Int = 8,
                        seed: Long = 7L,
                        checkpointDir: Option[String] = None,
-                       pairs: Option[DataFrame] = None,
-                       contamination: Option[DataFrame] = None): DataFrame = {
-    // Injected-surface preconditions (unchecked frames silently change the
-    // manifest): the pair surface must carry the canonical pair schema and
-    // the contamination frame the report schema. The parameter contracts
-    // (k=3/64/16/0.5 pairs over THESE docs; n=13 report vs THIS holdout)
-    // are documented above and asserted by the suite's equivalence tests.
-    pairs.foreach(p => require(
+                       pairs: Option[Surface[LshParams, DataFrame]] = None,
+                       contamination: Option[Surface[ContaminationParams, DataFrame]] = None)
+      : DataFrame = {
+    // injected surfaces must have been built at the pipeline's own parameters
+    val lsh = Canonical.lsh
+    val contam = Canonical.contamination
+    val injectedPairs = pairs.map(_.servedTo(lsh, "trainingManifest"))
+    val injectedReport = contamination.map(_.servedTo(contam, "trainingManifest"))
+    injectedPairs.foreach(p => require(
       Seq("doc_a", "doc_b", "jaccard").forall(p.columns.contains),
       s"injected pair surface must carry (doc_a, doc_b, jaccard), got ${p.columns.mkString(",")}"))
-    contamination.foreach(c => require(
+    injectedReport.foreach(c => require(
       Seq("doc_id", "longest_span").forall(c.columns.contains),
       s"injected contamination report must carry (doc_id, longest_span), got ${c.columns.mkString(",")}"))
     // S1: quality gate → (doc_id, source, n_tokens) barrier (3 consumers:
@@ -130,9 +133,9 @@ object Pipeline {
     // pair set (see the scaladoc). The restricted set is re-barriered (it
     // is candidate-pair-sized, tiny) so the component fixpoint scans a
     // snapshot instead of re-running the semi-joins per round.
-    val rawPairs = pairs.getOrElse(
+    val rawPairs = injectedPairs.getOrElse(
       Dedup.minHashLshPairs(docs, "doc_id", "text",
-        k = 3, numPerm = 64, bands = 16, threshold = 0.5,
+        k = lsh.k, numPerm = lsh.numPerm, bands = lsh.bands, threshold = lsh.threshold,
         checkpointDir = checkpointDir))
     val p1Pairs = Materialize.barrier(
       rawPairs
@@ -145,12 +148,12 @@ object Pipeline {
     // S3: verbatim-span flags vs the raw-corpus holdout, computed over the
     // RAW corpus (span geometry is per-doc) and applied to the survivors.
     // `contamination` injects a precomputed exactSubstringContamination
-    // report over the same (docs, holdout, n=13) — the session-shared
-    // serve path; when absent the pipeline derives its own.
-    val flag3 = contamination.getOrElse(
+    // report over the same (docs, holdout) — the session-shared serve path;
+    // when absent the pipeline derives its own.
+    val flag3 = injectedReport.getOrElse(
         Dedup.exactSubstringContamination(docs, holdout,
-          "doc_id", "text", n = 13, checkpointDir = checkpointDir))
-      .filter(col("longest_span") >= 20)
+          "doc_id", "text", n = contam.n, checkpointDir = checkpointDir))
+      .filter(col("longest_span") >= Canonical.minSpan)
       .select(col("doc_id").as("__flag_id"))
     // S4: per-source token budget over the survivors. Three consumers read
     // the survivor counts (bucket-offset aggregation + running-sum join +

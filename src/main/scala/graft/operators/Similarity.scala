@@ -476,6 +476,15 @@ object Similarity {
           max(col("c")).as("csim"))
         .select(col("vec_id"), col("embedding"), col("centroid_id"), col("csim"))
 
+  /** The injected centroid surface (checked against the consumer's own
+    * Lloyd parameters), else a fresh training over `emb`.
+    */
+  private def centroidsFor(emb: DataFrame, nlist: Int, iters: Int,
+                           centsOpt: Option[Surface[LloydParams, Seq[(Long, Array[Double])]]],
+                           consumer: String): Seq[(Long, Array[Double])] =
+    centsOpt.map(_.servedTo(LloydParams(nlist, iters), consumer))
+      .getOrElse(lloydCentroidsLocalValues(emb, nlist, iters))
+
   /** Lloyd centroids as driver-local VALUES: one collect of the full
     * iters-deep [[lloydCentroids]] plan.
     *
@@ -856,6 +865,18 @@ object Similarity {
           .as("exact_sim"))
   }
 
+  /** (IVF centroids, per-subspace PQ codebooks). */
+  type IvfPqBooks = (Seq[(Long, Array[Double])], Seq[Seq[(Long, Array[Double])]])
+
+  /** Both quantizers of [[ivfPqTopK]]: equal round counts train jointly in
+    * one deep plan ([[jointIvfPqBooks]]); unequal counts fall back to the
+    * two separate trainings.
+    */
+  private[graft] def trainIvfPq(emb: DataFrame, p: IvfPqParams): IvfPqBooks =
+    if (p.ivfIters == p.pqIters) jointIvfPqBooks(emb, p.nlist, p.m, p.k, p.pqIters)
+    else (lloydCentroidsLocalValues(emb, p.nlist, p.ivfIters),
+      pqCodebooks(emb, p.m, p.k, p.pqIters))
+
   /** JOINT IVF + PQ training: the m PQ sub-codebooks AND the full-vector IVF
     * coarse quantizer train in ONE deep plan — the full vector rides as
     * pseudo-subspace `m` with its own init width (`nlist` instead of `k`),
@@ -874,8 +895,7 @@ object Similarity {
     * sub-vector table explodes once and scheduling overhead halves.
     */
   private[graft] def jointIvfPqBooks(emb: DataFrame, nlist: Int, m: Int, k: Int,
-                                     iters: Int)
-      : (Seq[(Long, Array[Double])], Seq[Seq[(Long, Array[Double])]]) = {
+                                     iters: Int): IvfPqBooks = {
     val dim = embeddingDim(emb)
     if (dim == 0) return (Seq.empty, Seq.empty)
     require(dim % m == 0, s"embedding dim $dim not divisible into $m subspaces")
@@ -915,19 +935,13 @@ object Similarity {
   def ivfPqTopK(emb: DataFrame, probeId: Long, topK: Int,
                 nlist: Int = 4, nprobe: Int = 3, ivfIters: Int = 2,
                 m: Int = 8, k: Int = 8, pqIters: Int = 2,
-                trainedOpt: Option[(Seq[(Long, Array[Double])],
-                  Seq[Seq[(Long, Array[Double])]])] = None): DataFrame = {
+                trainedOpt: Option[Surface[IvfPqParams, IvfPqBooks]] = None): DataFrame = {
     // trainedOpt injects PRETRAINED (centroids, codebooks) — the
-    // session-shared joint-training memo, which must come from
-    // [[jointIvfPqBooks]] (or the equivalent separate trainings) at the
-    // same parameters over the same input; when absent the query trains.
-    // Equal round counts (the default) train jointly in one deep plan;
-    // unequal counts fall back to the two separate trainings.
-    val (cents, books) = trainedOpt.getOrElse {
-      if (ivfIters == pqIters) jointIvfPqBooks(emb, nlist, m, k, pqIters)
-      else (lloydCentroidsLocalValues(emb, nlist, ivfIters),
-        pqCodebooks(emb, m, k, pqIters))
-    }
+    // session-shared memo, built by [[trainIvfPq]] at the same parameters
+    // over the same input; when absent the query trains.
+    val params = IvfPqParams(nlist, ivfIters, m, k, pqIters)
+    val (cents, books) = trainedOpt.map(_.servedTo(params, "ivfPqTopK"))
+      .getOrElse(trainIvfPq(emb, params))
     if (books.isEmpty || books.exists(_.isEmpty))
       return emb.limit(0).select(col("vec_id"),
         lit(0.0).as("approx_sim"), lit(0.0).as("exact_sim"))
@@ -1110,8 +1124,8 @@ object Similarity {
   def clusterBalancedSample(emb: DataFrame, nlist: Int = 4, iters: Int = 2,
                             maxPerCluster: Int = 50,
                             salt: String = "cbal",
-                            centsOpt: Option[Seq[(Long, Array[Double])]] = None): DataFrame = {
-    val cents = centsOpt.getOrElse(lloydCentroidsLocalValues(emb, nlist, iters))
+                            centsOpt: Option[Surface[LloydParams, Seq[(Long, Array[Double])]]] = None): DataFrame = {
+    val cents = centroidsFor(emb, nlist, iters, centsOpt, "clusterBalancedSample")
     val asn = assignScored(emb, cents)
       .select(col("vec_id"), col("centroid_id"), col("csim"))
     val kept = Sampling.capPerGroup(asn, "vec_id", "centroid_id",
@@ -1130,11 +1144,11 @@ object Similarity {
     * order-dependent float accumulation.
     */
   def kmeansClusterStats(emb: DataFrame, nlist: Int = 4, iters: Int = 2,
-                         centsOpt: Option[Seq[(Long, Array[Double])]] = None): DataFrame = {
+                         centsOpt: Option[Surface[LloydParams, Seq[(Long, Array[Double])]]] = None): DataFrame = {
     // the scored assignment already carries the chosen centroid's cosine, so
     // the old assign + join-back-to-centroids + rescore collapses into the
     // assignment pass itself (narrow projection below the nlist cap)
-    val cents = centsOpt.getOrElse(lloydCentroidsLocalValues(emb, nlist, iters))
+    val cents = centroidsFor(emb, nlist, iters, centsOpt, "kmeansClusterStats")
     assignScored(emb, cents)
       .select(col("centroid_id"), col("csim"))
       .groupBy(col("centroid_id"))
@@ -1163,10 +1177,10 @@ object Similarity {
     */
   def indexDrift(embOld: DataFrame, embNew: DataFrame,
                  nlist: Int = 8, iters: Int = 2,
-                 centsOpt: Option[Seq[(Long, Array[Double])]] = None): DataFrame = {
+                 centsOpt: Option[Surface[LloydParams, Seq[(Long, Array[Double])]]] = None): DataFrame = {
     // centsOpt must be trained over embOld (the snapshot the index was
     // built on) — the session-shared memo passes exactly that
-    val cents = centsOpt.getOrElse(lloydCentroidsLocalValues(embOld, nlist, iters))
+    val cents = centroidsFor(embOld, nlist, iters, centsOpt, "indexDrift")
     def occ(e: DataFrame, n: String) = assignScored(e, cents)
       .groupBy(col("centroid_id")).agg(count(lit(1)).as(n))
     val merged = occ(embOld, "n_old")
@@ -1208,8 +1222,8 @@ object Similarity {
     */
   def clusterLabelPurity(emb: DataFrame, nlist: Int = 4, iters: Int = 2,
                          labelCol: String = "label",
-                         centsOpt: Option[Seq[(Long, Array[Double])]] = None): DataFrame = {
-    val cents = centsOpt.getOrElse(lloydCentroidsLocalValues(emb, nlist, iters))
+                         centsOpt: Option[Surface[LloydParams, Seq[(Long, Array[Double])]]] = None): DataFrame = {
+    val cents = centroidsFor(emb, nlist, iters, centsOpt, "clusterLabelPurity")
     val counts = assignScored(emb, cents)
       .select(col("vec_id"), col("centroid_id"))
       .join(emb.select(col("vec_id"), col(labelCol).as("label")), "vec_id")
@@ -1372,11 +1386,11 @@ object Similarity {
   def semanticDedup(emb: DataFrame, nlist: Int = 4, iters: Int = 4,
                     threshold: Double = 0.45,
                     checkpointDir: Option[String] = None,
-                    centsOpt: Option[Seq[(Long, Array[Double])]] = None): DataFrame = {
+                    centsOpt: Option[Surface[LloydParams, Seq[(Long, Array[Double])]]] = None): DataFrame = {
     // centsOpt injects a PRETRAINED centroid set (the session-shared Lloyd
     // memo — must be lloydCentroidsLocalValues(emb, nlist, iters) over the
     // same input); when absent the operator trains its own.
-    val cents = centsOpt.getOrElse(lloydCentroidsLocalValues(emb, nlist, iters))
+    val cents = centroidsFor(emb, nlist, iters, centsOpt, "semanticDedup")
     val assigned = Materialize.barrier(
       assignScored(PartitionUtil.spread(emb, "vec_id"), cents)
         .select(col("vec_id"), col("centroid_id"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -79,21 +79,4 @@ object ViewMaintenance {
           coalesce(col("dsum"), lit(0).cast(Dec))).as("sum_value"))
       .filter(col("n") > 0)
   }
-
-  /** Apply one delta batch to the view itself (the store the next round's
-    * subtractor reads): unaffected base rows pass through untouched; affected
-    * keys take the delta's latest row, tombstones drop out.
-    */
-  def maintainView(baseView: DataFrame, deltaLatest: DataFrame, key: String,
-      value: String): DataFrame = {
-    val untouched = baseView
-      .join(broadcast(deltaLatest.select(col(key))), Seq(key), "left_anti")
-    untouched.unionByName(
-      deltaLatest.filter(col(value).isNotNull).select(baseView.columns.toIndexedSeq.map(col): _*))
-  }
-
-  /** Column for a stable maintained-sum output: exact decimal cast back to
-    * double for a schema that matches the recompute oracle.
-    */
-  def sumAsDouble(c: Column): Column = c.cast("double")
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * via `SparkSessionExtensions` — so `spark.sql("SELECT graft_dot(a, b)")`
   * works with no Scala imports:
   *
-  *   SparkSession.builder().withExtensions(new GraftExtensions) ...
+  *   graft.Graft.session(...)  // installs it on every engine session
   *   // or: --conf spark.sql.extensions=graft.plans.GraftExtensions
   *
   * graft_dot / graft_cosine evaluate the codegen'd [[DotProduct]]; no custom

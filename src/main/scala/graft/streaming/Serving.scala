@@ -1,7 +1,5 @@
 package graft.streaming
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -17,54 +15,10 @@ import KTableStream.ClientView
   * COMPLETE — the reference's `GET /local-state` returns only the partitions
   * local to one of the 3 instances.
   *
-  * Two implementations:
-  *  - [[ParquetServing]] (default): distributed keyed upsert — each batch's
-  *    changed keys are written executor-side, nothing is materialized on the
-  *    driver. This is the 100 TB path.
-  *  - [[Serving]]: driver-local TrieMap, demo/test convenience only.
-  */
-trait ServingSink {
-  def viewName: String
-
-  /** Apply one micro-batch of view changes (idempotent per (key, batch)). */
-  def upsertBatch(batch: Dataset[ClientView], batchId: Long): Unit
-
-  /** The complete materialized view (interactive query surface,
-    * kafka_streams.clj:83-89).
-    */
-  def snapshot(spark: SparkSession): DataFrame
-
-  /** Driver-side convenience read of the full view — an interactive query,
-    * bounded by the number of live clients, NOT part of the streaming hot
-    * path.
-    */
-  def asMap: Map[String, Seq[String]]
-
-  // the session whose catalog serves interactive queries; foreachBatch runs
-  // with a CLONED session, so views registered there would be invisible
-  @volatile protected var servingSession: Option[SparkSession] = None
-
-  protected def sessionFor(batch: Dataset[ClientView]): SparkSession =
-    servingSession
-      .orElse(SparkSession.getDefaultSession)
-      .getOrElse(batch.sparkSession)
-
-  def start(spark: SparkSession, views: Dataset[ClientView], checkpointDir: String): StreamingQuery = {
-    servingSession = Some(spark)
-    views.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[ClientView], batchId: Long) => upsertBatch(batch, batchId) }
-      .queryName(viewName)
-      .start()
-  }
-}
-
-/** Distributed serving sink: the view is maintained as an append-only keyed
-  * changelog in parquet — exactly the reference's store + changelog-topic
-  * pairing (kafka_streams.clj:80), with the parquet files as the changelog
-  * and read-side latest-per-key compaction as the store.
+  * The view is maintained as an append-only keyed changelog in parquet —
+  * exactly the reference's store + changelog-topic pairing
+  * (kafka_streams.clj:80), with the parquet files as the changelog and
+  * read-side latest-per-key compaction as the store.
   *
   *  - Write path: each micro-batch appends ONLY its changed keys (update-mode
   *    emission), written executor-side — no driver materialization, no
@@ -81,9 +35,29 @@ trait ServingSink {
   */
 class ParquetServing(storeDir: String, val viewName: String = "us_share_holders",
                      compactEvery: Int = 0,
-                     checkpointDir: Option[String] = None)
-    extends ServingSink {
+                     checkpointDir: Option[String] = None) {
 
+  // the session whose catalog serves interactive queries; foreachBatch runs
+  // with a CLONED session, so views registered there would be invisible
+  @volatile private var servingSession: Option[SparkSession] = None
+
+  private def sessionFor(batch: Dataset[ClientView]): SparkSession =
+    servingSession
+      .orElse(SparkSession.getDefaultSession)
+      .getOrElse(batch.sparkSession)
+
+  def start(spark: SparkSession, views: Dataset[ClientView], streamCheckpoint: String): StreamingQuery = {
+    servingSession = Some(spark)
+    views.writeStream
+      .outputMode("update")
+      .option("checkpointLocation", streamCheckpoint)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: Dataset[ClientView], batchId: Long) => upsertBatch(batch, batchId) }
+      .queryName(viewName)
+      .start()
+  }
+
+  /** Apply one micro-batch of view changes (idempotent per (key, batch)). */
   def upsertBatch(batch: Dataset[ClientView], batchId: Long): Unit = {
     batch.toDF()
       .withColumn("batch_id", lit(batchId))
@@ -100,6 +74,9 @@ class ParquetServing(storeDir: String, val viewName: String = "us_share_holders"
     snapshot(session).createOrReplaceTempView(viewName)
   }
 
+  /** The complete materialized view (interactive query surface,
+    * kafka_streams.clj:83-89).
+    */
   def snapshot(spark: SparkSession): DataFrame = {
     import spark.implicits._
     def emptyChanges = Seq.empty[(String, Seq[String], Boolean, Long)]
@@ -129,6 +106,10 @@ class ParquetServing(storeDir: String, val viewName: String = "us_share_holders"
       .orderBy("client")
   }
 
+  /** Driver-side convenience read of the full view — an interactive query,
+    * bounded by the number of live clients, NOT part of the streaming hot
+    * path.
+    */
   def asMap: Map[String, Seq[String]] = {
     val spark = servingSession.orElse(SparkSession.getDefaultSession).get
     snapshot(spark).collect()
@@ -194,29 +175,4 @@ class ParquetServing(storeDir: String, val viewName: String = "us_share_holders"
       fs.delete(new org.apache.hadoop.fs.Path(path, s"batch_id=$id"), true)
     }
   }
-}
-
-/** Driver-local serving store (demo/tests): a TrieMap upsert per batch.
-  * NOT the scale path — `collect()` materializes every batch on the driver;
-  * use [[ParquetServing]] anywhere real.
-  */
-class Serving(val viewName: String = "us_share_holders") extends ServingSink {
-  private val store = TrieMap.empty[String, Seq[String]]
-
-  def upsertBatch(batch: Dataset[ClientView], batchId: Long): Unit = {
-    batch.collect().foreach { cv =>
-      if (cv.deleted) store.remove(cv.client)
-      else store.put(cv.client, cv.nasdaq_position_ids)
-    }
-    snapshot(sessionFor(batch)).createOrReplaceTempView(viewName)
-  }
-
-  def snapshot(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    store.toSeq.map { case (c, ids) => (c, ids) }
-      .toDF("client", "nasdaq_position_ids")
-      .orderBy("client")
-  }
-
-  def asMap: Map[String, Seq[String]] = store.toMap
 }

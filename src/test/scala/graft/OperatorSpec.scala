@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Hashing, Text}
-import graft.operators.{Dedup, LatestPerKey, Multimodal, SetAggregator, TextAnalysis}
+import graft.operators.{Dedup, IvfPqParams, LatestPerKey, LloydParams, Multimodal, SetAggregator,
+  Surface, TextAnalysis}
 import graft.sources.Tables
 
 class OperatorSpec extends SparkSpec {
@@ -2546,22 +2547,26 @@ class OperatorSpec extends SparkSpec {
     val emb = Tables.table(spark, sf0001, "embeddings")
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.mkString("|")).toSeq
-    val c42 = Similarity.lloydCentroidsLocalValues(emb, nlist = 4, iters = 2)
+    def cents(e: org.apache.spark.sql.DataFrame, nlist: Int, iters: Int) =
+      Surface.build(LloydParams(nlist, iters))(p =>
+        Similarity.lloydCentroidsLocalValues(e, p.nlist, p.iters))
+    val c42 = cents(emb, nlist = 4, iters = 2)
     assert(rows(Similarity.kmeansClusterStats(emb, 4, 2, centsOpt = Some(c42)))
       == rows(Similarity.kmeansClusterStats(emb, 4, 2)))
     assert(rows(Similarity.clusterLabelPurity(emb, 4, 2, centsOpt = Some(c42)))
       == rows(Similarity.clusterLabelPurity(emb, 4, 2)))
     assert(rows(Similarity.clusterBalancedSample(emb, 4, 2, 50, centsOpt = Some(c42)))
       == rows(Similarity.clusterBalancedSample(emb, 4, 2, 50)))
-    val c44 = Similarity.lloydCentroidsLocalValues(emb, nlist = 4, iters = 4)
+    val c44 = cents(emb, nlist = 4, iters = 4)
     assert(rows(Similarity.semanticDedup(emb, 4, 4, 0.45, centsOpt = Some(c44)))
       == rows(Similarity.semanticDedup(emb, 4, 4, 0.45)))
     val even = emb.filter("vec_id % 2 = 0")
     val odd = emb.filter("vec_id % 2 = 1")
-    val c82 = Similarity.lloydCentroidsLocalValues(even, nlist = 8, iters = 2)
+    val c82 = cents(even, nlist = 8, iters = 2)
     assert(rows(Similarity.indexDrift(even, odd, 8, 2, centsOpt = Some(c82)))
       == rows(Similarity.indexDrift(even, odd, 8, 2)))
-    val trained = Similarity.jointIvfPqBooks(emb, nlist = 4, m = 8, k = 8, iters = 2)
+    val trained = Surface.build(IvfPqParams(nlist = 4, ivfIters = 2, m = 8, k = 8, pqIters = 2))(
+      p => Similarity.jointIvfPqBooks(emb, p.nlist, p.m, p.k, p.pqIters))
     assert(rows(Similarity.ivfPqTopK(emb, 0L, 5, 4, 3, 2, 8, 8, 2,
         trainedOpt = Some(trained)))
       == rows(Similarity.ivfPqTopK(emb, 0L, 5, 4, 3, 2, 8, 8, 2)))

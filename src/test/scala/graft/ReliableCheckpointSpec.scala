@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 
-import graft.operators.{ConnectedComponents, Dedup}
+import graft.operators.{ConnectedComponents, Dedup, SubstringParams, Surface}
 import graft.sources.Tables
 import graft.streaming.IncrementalNearDup
 
@@ -61,8 +61,8 @@ class ReliableCheckpointSpec extends SparkSpec {
     // the session-shared build-once/serve-many path (round-14): both
     // consumers fed the SAME precomputed quadruple barrier must reproduce
     // their self-built results exactly
-    val quads = Dedup.substringMatchedQuads(docs, "doc_id", "text",
-      n = 13, maxDf = 50)
+    val quads = Surface.build(SubstringParams(n = 13, maxDf = 50))(p =>
+      Dedup.substringMatchedQuads(docs, "doc_id", "text", n = p.n, maxDf = p.maxDf))
     val pairsSelf = rows(Dedup.exactSubstringPairs(docs, "doc_id", "text", n = 13))
     val pairsInj = rows(Dedup.exactSubstringPairs(docs, "doc_id", "text", n = 13,
       matched = Some(quads)))

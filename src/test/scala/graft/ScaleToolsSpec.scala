@@ -18,15 +18,8 @@ class ScaleToolsSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   // This suite needs its OWN session (extensions + warehouse are fixed at
   // session construction); getOrCreate would silently reuse another suite's.
   // The underlying SparkContext is shared and must NOT be stopped here.
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("ScaleToolsSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", warehouse)
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new graft.plans.GraftExtensions)
-    .getOrCreate()
+  lazy val spark: SparkSession = Graft.session("ScaleToolsSpec", "4",
+    Map("spark.sql.warehouse.dir" -> warehouse))
 
   override def beforeAll(): Unit = {
     prevDefault = SparkSession.getDefaultSession

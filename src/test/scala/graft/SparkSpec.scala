@@ -3,19 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session fixture: one local session per suite (UTC, small shuffle). */
+/** Shared session fixture: the shipped [[Graft.session]] at 4 cores. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    // transformWithState requires a provider with column-family support;
-    // RocksDB is also the BASELINE.md posture for streaming state
-    .config("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Graft.session(getClass.getSimpleName, "4")
 
   def sf0001 = "/root/testdata/sf0.001"
 }

@@ -24,7 +24,8 @@ class KTableStreamSpec extends SparkSpec {
     * flatMapGroupsWithState (default) or the transformWithState processor.
     */
   private def run(steps: Seq[Seq[ShareUpdate]],
-                  serving: ServingSink = new Serving,
+                  serving: ParquetServing =
+                    new ParquetServing(Files.createTempDirectory("serving").toString),
                   checkpoint: String = Files.createTempDirectory("ktable").toString,
                   impl: (org.apache.spark.sql.SparkSession, org.apache.spark.sql.Dataset[ShareUpdate]) => org.apache.spark.sql.Dataset[KTableStream.ClientView] = KTableStream.usShareHolders)
       : Seq[Map[String, Seq[String]]] = {
@@ -105,7 +106,7 @@ class KTableStreamSpec extends SparkSpec {
     // the full changelog — the checkpoint skips already-committed batches, so
     // batches 2-3 run against the RESTORED state, not a rebuilt one.
     val checkpoint = Files.createTempDirectory("ktable-restart").toString
-    val serving = new Serving
+    val serving = new ParquetServing(Files.createTempDirectory("serving-restart").toString)
     run(Seq(all.head), serving, checkpoint)
     val resumed = run(all, serving, checkpoint).last
     assert(resumed == uninterrupted)
