@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Session factory for the graft engine — the one place a session is built.
-  * The mains (`Bench`, `Verify`, `PlanDump`, `Demo`, `ExecutorLossProof`)
+  * The mains (`Bench`, `Verify`, `PlanDump`, `ExecutorLossProof`)
   * and the test fixtures all call it, so every caller runs with the same SQL
   * functions (`GraftExtensions`) and the same state-store provider.
   *
@@ -30,8 +30,9 @@ object Graft {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      // RocksDB state store: required by transformWithState (column
-      // families) and the right provider for large state regardless
+      // RocksDB state store: required by StreamingEventAnalytics'
+      // StatefulProcessor (column families) and the right provider for
+      // large state regardless
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.ui.enabled", "false")

@@ -1,63 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{MapState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
 
-import KTableStream.{clientOf, ClientView, ShareUpdate}
+import KTableStream.{ClientView, ShareUpdate}
 
-/** The KTable core on Spark 4's `transformWithState` (StatefulProcessor) —
-  * the preferred engine (SURVEY.md §7 M3); [[KTableStream]] keeps the
-  * `flatMapGroupsWithState` formulation as the portable fallback.
-  *
-  * Scale advantage over the fallback: positions live in a [[MapState]], so
-  * each position is its own state-store entry — an upsert/tombstone touches
-  * ONE RocksDB key instead of rewriting a whole per-client blob, which is
-  * what you want for clients holding many positions at 100 TB.
+/** Forwards to [[KTableStream.usShareHolders]], the one KTable engine. Its
+  * only caller is the benchmark's `--engine processor`
+  * (`perfbench/src/main/scala/graft/perfbench/StreamBench.scala`, the
+  * benchmark's default engine); this object goes when the benchmark drops
+  * `--engine`.
   */
-class KTableProcessor extends StatefulProcessor[String, ShareUpdate, ClientView] {
-
-  @transient private var positions: MapState[String, String] = _
-  @transient private var lastEmitted: ValueState[KTableProcessor.Emitted] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    positions = getHandle.getMapState[String, String](
-      "positions", Encoders.STRING, Encoders.STRING, TTLConfig.NONE)
-    lastEmitted = getHandle.getValueState[KTableProcessor.Emitted](
-      "lastEmitted", Encoders.product[KTableProcessor.Emitted], TTLConfig.NONE)
-  }
-
-  override def handleInputRows(
-      client: String,
-      rows: Iterator[ShareUpdate],
-      timerValues: TimerValues): Iterator[ClientView] = {
-    rows.toSeq.sortBy(_.seq).foreach { r =>
-      r.value match {
-        case None    => positions.removeKey(r.key)
-        case Some(p) => positions.updateValue(r.key, p.exchange)
-      }
-    }
-    val derived = positions.iterator()
-      .collect { case (k, ex) if ex == "NASDAQ" => k }
-      .toSeq.sorted
-    val prev = if (lastEmitted.exists()) lastEmitted.get().ids else Seq.empty
-    val changed = derived != prev
-    if (!positions.keys().hasNext) { positions.clear(); lastEmitted.clear() }
-    else lastEmitted.update(KTableProcessor.Emitted(derived))
-    if (!changed) Iterator.empty
-    else if (derived.isEmpty) Iterator.single(ClientView(client, Seq.empty, deleted = true))
-    else Iterator.single(ClientView(client, derived, deleted = false))
-  }
-}
-
 object KTableProcessor {
-  /** Wrapper so the previously-emitted set has a product encoder. */
-  case class Emitted(ids: Seq[String])
-
-  /** `transformWithState` formulation of the us-share-holders view. */
-  def usShareHolders(spark: SparkSession, changelog: Dataset[ShareUpdate]): Dataset[ClientView] = {
-    import spark.implicits._
-    changelog
-      .groupByKey(u => clientOf(u.key))
-      .transformWithState(new KTableProcessor, TimeMode.None(), OutputMode.Update())
-  }
+  def usShareHolders(spark: SparkSession, changelog: Dataset[ShareUpdate]): Dataset[ClientView] =
+    KTableStream.usShareHolders(spark, changelog)
 }

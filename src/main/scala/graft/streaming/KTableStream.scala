@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.collection.immutable.SortedSet
+
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -8,11 +10,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Reference semantics reproduced here:
   *  - upsert table over a compacted topic (kafka_streams.clj:64): latest value
-  *    per position key, tombstone (null value) deletes — held in per-client
-  *    state as Map(positionKey -> exchange)
+  *    per position key, tombstone (null value) deletes
   *  - filter with retraction (kafka_streams.clj:65-67): a NASDAQ→LON update
-  *    removes the id from the derived set, because the filter is evaluated
-  *    over the *current* state, not the event
+  *    removes the id from the derived set, because the latest value of the
+  *    key decides, not the first one seen
   *  - re-key + incremental set agg with adder/subtractor (kafka_streams.clj:68-79):
   *    the kafka key embeds the client as its prefix ("client:::ticker",
   *    fake_producer.clj:25), so grouping by the prefix lets a single
@@ -25,7 +26,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    updates inside one batch coalesce — SURVEY.md §7 risk 3)
   *
   * Scale: state is partitioned by client across executors (hash exchange =
-  * the repartition topic analog); per-client state is O(positions per client).
+  * the repartition topic analog); per-client state is the client's view row,
+  * O(NASDAQ positions per client), the same size as each row it emits.
   */
 object KTableStream {
 
@@ -33,10 +35,12 @@ object KTableStream {
   case class ShareUpdate(key: String, value: Option[Position], seq: Long)
   case class Position(client: String, id: String, ticker: String, exchange: String, amount: Int)
 
-  /** Per-client state: live positions (key -> exchange) + the previously
-    * emitted derived set, so unchanged sets emit nothing.
+  /** Per-client state: the client's sorted NASDAQ position keys, which is the
+    * view row last emitted for it. Non-NASDAQ positions need no state: the
+    * group is the key's client prefix, so no value change can move a key to
+    * another group, and a key's membership depends only on its latest value.
     */
-  case class ClientState(positions: Map[String, String], lastEmitted: Seq[String])
+  case class ClientState(ids: Seq[String])
 
   /** A change to the derived view; `deleted=true` = row removed
     * (the reference's tombstone on the output changelog).
@@ -49,22 +53,24 @@ object KTableStream {
       client: String,
       rows: Iterator[ShareUpdate],
       state: GroupState[ClientState]): Iterator[ClientView] = {
-    val st = state.getOption.getOrElse(ClientState(Map.empty, Seq.empty))
-    var positions = st.positions
+    val before = state.getOption.fold(Seq.empty[String])(_.ids)
+    var ids = SortedSet(before: _*)
     // arrival order within the batch (Kafka offset analog)
     rows.toSeq.sortBy(_.seq).foreach { r =>
       r.value match {
-        case None    => positions -= r.key           // tombstone (fake_producer.clj:26-29)
-        case Some(p) => positions += (r.key -> p.exchange)
+        case Some(p) if p.exchange == "NASDAQ" => ids += r.key
+        case _ => ids -= r.key // other exchange, or tombstone (fake_producer.clj:26-29)
       }
     }
-    val derived = positions.collect { case (k, ex) if ex == "NASDAQ" => k }.toSeq.sorted
-    val changed = derived != st.lastEmitted
-    if (positions.isEmpty) state.remove()
-    else state.update(ClientState(positions, derived))
-    if (!changed) Iterator.empty
-    else if (derived.isEmpty) Iterator(ClientView(client, Seq.empty, deleted = true))
-    else Iterator(ClientView(client, derived, deleted = false))
+    val after = ids.toSeq
+    if (after == before) Iterator.empty
+    else if (after.isEmpty) {
+      state.remove()
+      Iterator(ClientView(client, Seq.empty, deleted = true))
+    } else {
+      state.update(ClientState(after))
+      Iterator(ClientView(client, after, deleted = false))
+    }
   }
 
   /** The derived `us-share-holders` change stream (kafka_streams.clj:80). */

@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * topology runs forever, state updates per record), and the event-analytics
   * family was batch-only until round 13. This closes the gap for the
   * transition matrix: per-user next-event STEPS emitted incrementally on
-  * Spark 4's `transformWithState` (the [[KTableProcessor]] engine), so the
+  * Spark 4's `transformWithState` (a `StatefulProcessor`), so the
   * Markov matrix is maintainable over a live event stream instead of
   * recomputed per batch.
   *

@@ -68,10 +68,9 @@ class KafkaChangelogSpec extends SparkSpec {
     * integration-untested here; documented in README.)
     */
   test("file-backed changelog streaming e2e: parse -> KTable -> serving") {
-    import java.nio.file.Files
     import graft.streaming.{KTableStream, ParquetServing}
 
-    val srcDir = Files.createTempDirectory("changelog-src").toString
+    val srcDir = tempDir("changelog-src")
     val schema = StructType(Seq(
       StructField("key", BinaryType),
       StructField("value", BinaryType, nullable = true),
@@ -98,10 +97,10 @@ class KafkaChangelogSpec extends SparkSpec {
     val updates = KafkaChangelog.parse(spark, rawStream) // the production parse
     val views = KTableStream.usShareHolders(spark, updates)
     val serving = new ParquetServing(
-      Files.createTempDirectory("changelog-store").toString,
+      tempDir("changelog-store"),
       viewName = "us_share_holders_file_e2e")
     val q = serving.start(spark,
-      views, Files.createTempDirectory("changelog-ckpt").toString)
+      views, tempDir("changelog-ckpt"))
     q.awaitTermination()
     assert(serving.asMap == Map("kima" -> Seq("kima:::MSFT")))
 
@@ -110,12 +109,12 @@ class KafkaChangelogSpec extends SparkSpec {
     writeBatchFile(Seq(
       ("daniel:::AAPL", Some(valueJson("daniel", "AAPL", "NASDAQ", 7)), 4L)))
     val serving2 = new ParquetServing(
-      Files.createTempDirectory("changelog-store2").toString,
+      tempDir("changelog-store2"),
       viewName = "us_share_holders_file_e2e2")
     val q2 = serving2.start(spark,
       KTableStream.usShareHolders(spark,
         KafkaChangelog.parse(spark, spark.readStream.schema(schema).parquet(srcDir))),
-      Files.createTempDirectory("changelog-ckpt2").toString)
+      tempDir("changelog-ckpt2"))
     q2.awaitTermination()
     assert(serving2.asMap == Map(
       "daniel" -> Seq("daniel:::AAPL"), "kima" -> Seq("kima:::MSFT")))

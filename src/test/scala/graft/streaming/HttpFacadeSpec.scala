@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -37,10 +36,10 @@ class HttpFacadeSpec extends SparkSpec {
     val input = MemoryStream[KTableStream.ShareUpdate]
     val views = KTableStream.usShareHolders(spark, input.toDS())
     val serving = new ParquetServing(
-      Files.createTempDirectory("http-store").toString, viewName = "us_share_holders_http")
+      tempDir("http-store"), viewName = "us_share_holders_http")
     val q = views.writeStream
       .outputMode("update")
-      .option("checkpointLocation", Files.createTempDirectory("http-ktable").toString)
+      .option("checkpointLocation", tempDir("http-ktable"))
       .foreachBatch { (b: org.apache.spark.sql.Dataset[KTableStream.ClientView], id: Long) =>
         serving.upsertBatch(b, id)
       }

@@ -1,13 +1,12 @@
 package graft.streaming
 
-import java.nio.file.Files
-
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.StreamingQueryProgress
 
 import graft.SparkSpec
 import graft.operators.ShareHolders
-import KTableStream.{Position, ShareUpdate}
+import KTableStream.{ClientView, Position, ShareUpdate}
 
 class KTableStreamSpec extends SparkSpec {
 
@@ -20,23 +19,20 @@ class KTableStreamSpec extends SparkSpec {
     ShareUpdate(s"$client:::$ticker", None, seq)
 
   /** Drive a changelog through the KTable pipeline step by step; returns the
-    * serving view after each step. `impl` selects the stateful engine:
-    * flatMapGroupsWithState (default) or the transformWithState processor.
+    * serving view after each step and the query's last progress event.
     */
-  private def run(steps: Seq[Seq[ShareUpdate]],
-                  serving: ParquetServing =
-                    new ParquetServing(Files.createTempDirectory("serving").toString),
-                  checkpoint: String = Files.createTempDirectory("ktable").toString,
-                  impl: (org.apache.spark.sql.SparkSession, org.apache.spark.sql.Dataset[ShareUpdate]) => org.apache.spark.sql.Dataset[KTableStream.ClientView] = KTableStream.usShareHolders)
-      : Seq[Map[String, Seq[String]]] = {
+  private def runWithProgress(steps: Seq[Seq[ShareUpdate]],
+                              serving: ParquetServing = new ParquetServing(tempDir("serving")),
+                              checkpoint: String = tempDir("ktable"))
+      : (Seq[Map[String, Seq[String]]], StreamingQueryProgress) = {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[ShareUpdate]
-    val views = impl(spark, input.toDS())
+    val views = KTableStream.usShareHolders(spark, input.toDS())
     val q = views.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[KTableStream.ClientView], id: Long) =>
+      .foreachBatch { (b: Dataset[ClientView], id: Long) =>
         serving.upsertBatch(b, id)
       }
       .start()
@@ -46,8 +42,13 @@ class KTableStreamSpec extends SparkSpec {
       serving.asMap
     }
     q.stop()
-    out
+    (out, q.lastProgress)
   }
+
+  private def run(steps: Seq[Seq[ShareUpdate]],
+                  serving: ParquetServing = new ParquetServing(tempDir("serving")),
+                  checkpoint: String = tempDir("ktable")): Seq[Map[String, Seq[String]]] =
+    runWithProgress(steps, serving, checkpoint)._1
 
   test("canonical smoke scenario (FIXTURES.md A / fake_producer.clj:50-52)") {
     val states = run(Seq(
@@ -88,9 +89,23 @@ class KTableStreamSpec extends SparkSpec {
     assert(states(0) == Map("c" -> Seq("c:::Y")))
   }
 
+  test("state holds exactly the served view rows") {
+    // b never holds a NASDAQ position; c's NASDAQ set empties while it still
+    // holds a LON position; a keeps one of its two NASDAQ positions
+    val (states, progress) = runWithProgress(Seq(
+      Seq(upsert(0, "a", "AAPL", "NASDAQ"), upsert(1, "a", "MSFT", "NASDAQ"),
+        upsert(2, "b", "BT.A", "LON"), upsert(3, "b", "IBM", "NYSE"),
+        upsert(4, "c", "AAPL", "NASDAQ"), upsert(5, "c", "VOD", "LON")),
+      Seq(tombstone(6, "c", "AAPL"), upsert(7, "a", "AAPL", "LON"))))
+    assert(states.last == Map("a" -> Seq("a:::MSFT")))
+    val op = progress.stateOperators.head
+    assert(op.numRowsTotal == states.last.size,
+      s"state rows ${op.numRowsTotal} != served view rows ${states.last.size}")
+  }
+
   test("restart from checkpoint equals uninterrupted run") {
     // the tombstone for c:::T1 only produces the correct retraction if c's
-    // positions map was restored from the checkpointed state store
+    // NASDAQ set was restored from the checkpointed state store
     val all = Seq(
       Seq(upsert(0, "c", "T1", "NASDAQ"), upsert(1, "c", "T2", "NASDAQ"),
         upsert(2, "b", "T9", "LON")),
@@ -105,8 +120,8 @@ class KTableStreamSpec extends SparkSpec {
     // checkpoint + serving store (persistent-sink analog). The source replays
     // the full changelog — the checkpoint skips already-committed batches, so
     // batches 2-3 run against the RESTORED state, not a rebuilt one.
-    val checkpoint = Files.createTempDirectory("ktable-restart").toString
-    val serving = new ParquetServing(Files.createTempDirectory("serving-restart").toString)
+    val checkpoint = tempDir("ktable-restart")
+    val serving = new ParquetServing(tempDir("serving-restart"))
     run(Seq(all.head), serving, checkpoint)
     val resumed = run(all, serving, checkpoint).last
     assert(resumed == uninterrupted)
@@ -123,7 +138,7 @@ class KTableStreamSpec extends SparkSpec {
   }
 
   test("distributed parquet serving sink: M4 gate (canonical scenario via spark.table)") {
-    val store = Files.createTempDirectory("serving-store").toString
+    val store = tempDir("serving-store")
     val serving = new ParquetServing(store, viewName = "us_share_holders_pq")
     val states = run(Seq(
       Seq(upsert(0, "daniel", "AAPL", "NASDAQ", 99)),
@@ -141,8 +156,8 @@ class KTableStreamSpec extends SparkSpec {
   }
 
   test("distributed parquet serving sink: restart replay is idempotent") {
-    val store = Files.createTempDirectory("serving-store-restart").toString
-    val checkpoint = Files.createTempDirectory("ktable-pq-restart").toString
+    val store = tempDir("serving-store-restart")
+    val checkpoint = tempDir("ktable-pq-restart")
     val all = Seq(
       Seq(upsert(0, "c", "T1", "NASDAQ"), upsert(1, "c", "T2", "NASDAQ"),
         upsert(2, "b", "T9", "LON")),
@@ -159,7 +174,7 @@ class KTableStreamSpec extends SparkSpec {
   }
 
   test("distributed serving snapshot plan has no driver-side materialization") {
-    val store = Files.createTempDirectory("serving-store-plan").toString
+    val store = tempDir("serving-store-plan")
     val serving = new ParquetServing(store)
     run(Seq(Seq(upsert(0, "a", "T1", "NASDAQ"))), serving)
     // read path = scan + partial/final agg (latest-per-key) + filter; the
@@ -168,36 +183,6 @@ class KTableStreamSpec extends SparkSpec {
     val plan = serving.snapshot(spark).queryExecution.executedPlan.toString
     assert(plan.contains("HashAggregate") || plan.contains("ObjectHashAggregate") ||
       plan.contains("SortAggregate"))
-  }
-
-  test("transformWithState processor: canonical scenario + retraction") {
-    val states = run(Seq(
-      Seq(upsert(0, "daniel", "AAPL", "NASDAQ", 99)),
-      Seq(upsert(1, "daniel", "BT.A", "LON")),
-      Seq(tombstone(2, "daniel", "AAPL"))),
-      impl = KTableProcessor.usShareHolders)
-    assert(states(0) == Map("daniel" -> Seq("daniel:::AAPL")))
-    assert(states(1) == Map("daniel" -> Seq("daniel:::AAPL")))
-    assert(states(2) == Map.empty)
-
-    val flips = run(Seq(
-      Seq(upsert(0, "c1", "AAPL", "NASDAQ"), upsert(1, "c1", "MSFT", "NASDAQ")),
-      Seq(upsert(2, "c1", "AAPL", "LON"))),
-      impl = KTableProcessor.usShareHolders)
-    assert(flips(1) == Map("c1" -> Seq("c1:::MSFT")))
-  }
-
-  test("transformWithState == flatMapGroupsWithState on a random changelog") {
-    val rnd = new scala.util.Random(11)
-    val updates = (0 until 300).map { seq =>
-      val c = s"client${rnd.nextInt(6)}"
-      val t = Seq("AAPL", "MSFT", "BT.A")(rnd.nextInt(3))
-      if (rnd.nextInt(4) == 0) tombstone(seq, c, t)
-      else upsert(seq, c, t, Seq("NASDAQ", "LON")(rnd.nextInt(2)))
-    }
-    val a = run(updates.grouped(71).toSeq).last
-    val b = run(updates.grouped(71).toSeq, impl = KTableProcessor.usShareHolders).last
-    assert(a == b)
   }
 
   test("throughput sanity: sustains the self-imposed upsert rate (BASELINE.md)") {
