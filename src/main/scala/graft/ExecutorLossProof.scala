@@ -112,11 +112,14 @@ object ExecutorLossProof {
           removedSeen = true
       })
 
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-loss-ckpt").toString
+      val ckpt = java.nio.file.Files.createTempDirectory("graft-loss-ckpt")
       val t0 = System.nanoTime()
-      val pairs = graft.operators.Dedup.exactSubstringPairs(
-        fixture(spark, nDocs), "doc_id", "text", n = 13,
-        checkpointDir = Some(ckpt)).count()
+      // the barrier files are only needed while the query runs
+      val pairs =
+        try graft.operators.Dedup.exactSubstringPairs(
+          fixture(spark, nDocs), "doc_id", "text", n = 13,
+          checkpointDir = Some(ckpt.toString)).count()
+        finally org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
       val t1 = System.nanoTime()
 
       // the kill must have landed MID-QUERY, the scheduler must have seen the

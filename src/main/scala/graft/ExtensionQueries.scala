@@ -543,7 +543,6 @@ object ExtensionQueries {
         .orderBy("doc_id")
     },
     "pipeline_e2e" -> { (s, dir) =>
-      import org.apache.spark.sql.functions._
       // the WHOLE pipeline as one operator: quality gate -> quality-aware
       // near-dup dedup -> exact-substring decontamination (raw-corpus
       // holdout, the decontaminate_apply fixture) -> per-source token

@@ -30,9 +30,8 @@ object Graft {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      // RocksDB state store: required by StreamingEventAnalytics'
-      // StatefulProcessor (column families) and the right provider for
-      // large state regardless
+      // RocksDB state store: the KTable's per-client state lives here; it
+      // spills to local disk, so state is not bounded by the executor heap
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.ui.enabled", "false")

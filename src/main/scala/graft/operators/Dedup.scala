@@ -106,7 +106,7 @@ object Dedup {
     * caching at all.
     */
   private def withShingleIndex(ex0raw: DataFrame, materialize: Boolean,
-                               checkpointDir: Option[String] = None)
+                               checkpointDir: Option[String])
                               (build: DataFrame => DataFrame): DataFrame = {
     if (!materialize) build(ex0raw)
     else {
@@ -127,7 +127,7 @@ object Dedup {
     */
   private def withShingleIndexes(exAraw: DataFrame, exBraw: DataFrame,
                                  materialize: Boolean,
-                                 checkpointDir: Option[String] = None)
+                                 checkpointDir: Option[String])
                                 (build: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     if (!materialize) build(exAraw, exBraw)
     else {
@@ -738,7 +738,7 @@ object Dedup {
     * verified exactly, so LSH false positives never reach the output.
     */
   /** Per-doc shingle-hash sets: (doc_id, hs ARRAY<LONG>, sz). Public so
-    * incremental/streaming dedup can persist and reuse the index.
+    * incremental dedup can persist and reuse the index.
     */
   def shingleSets(ex0: DataFrame): DataFrame =
     ex0.groupBy("doc_id")
@@ -842,14 +842,9 @@ object Dedup {
     * store without ever re-scanning or re-signing the historical corpus —
     * the shape a growing corpus actually needs (re-running full-corpus
     * dedup per ingest batch is quadratic in corpus lifetime).
-    *
-    * The index layout (`dir/bands`, `dir/sets`) is SHARED with the
-    * streaming ingest loop ([[graft.streaming.IncrementalNearDup]]), which
-    * admits/rejects inside `foreachBatch` and extends the same store — a
-    * batch-built index seeds a streaming ingest and vice versa
-    * (interop-asserted in the suite). These batch entries serve scheduled
-    * pipelines and the REPORT shape (flagged pairs with their Jaccard)
-    * rather than admit/reject.
+    * These entries serve scheduled pipelines and the REPORT shape (flagged
+    * pairs with their Jaccard); [[applyIncrementalDedup]] is the
+    * admit/reject shape.
     */
   def minhashIndexStore(docs: DataFrame, dir: String, idCol: String, textCol: String,
                         k: Int = 3, numPerm: Int = 64, bands: Int = 16,
@@ -933,9 +928,9 @@ object Dedup {
   /** End-to-end INCREMENTAL dedup application: drop every new-batch doc
     * [[dedupIncremental]] flags against the stored corpus index, return the
     * surviving batch — the admit step of the ingest loop as a batch
-    * operator. (The streaming loop, [[graft.streaming.IncrementalNearDup]],
-    * additionally self-dedups WITHIN the batch; at this API level that is
-    * [[minHashLshPairs]] over the batch composed with [[applyDedup]].)
+    * operator. (Near-dups WITHIN the batch are not flagged here; at this
+    * API level that is [[minHashLshPairs]] over the batch composed with
+    * [[applyDedup]].)
     * Same anti-join shape as [[applyFuzzyDecontamination]]: the flag list
     * is batch-bounded and broadcasts, the batch is never shuffled.
     */
@@ -1160,13 +1155,12 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** End-to-end decontamination APPLICATION — the batch sibling of the
-    * streaming span gate ([[graft.streaming.StreamingDecontaminate]]): drop
-    * every training document whose longest TRUE verbatim run against the
-    * holdout reaches `minSpanTokens` (the Lee-et-al rule; isolated
-    * sub-threshold n-gram overlap is tolerated), return the surviving
-    * corpus. Span geometry comes from [[exactSubstringContamination]] —
-    * string-verified matches, lockstep diagonal stitching.
+  /** End-to-end decontamination APPLICATION: drop every training document
+    * whose longest TRUE verbatim run against the holdout reaches
+    * `minSpanTokens` (the Lee-et-al rule; isolated sub-threshold n-gram
+    * overlap is tolerated), return the surviving corpus. Span geometry comes
+    * from [[exactSubstringContamination]] — string-verified matches,
+    * lockstep diagonal stitching.
     */
   def applyDecontamination(train: DataFrame, holdout: DataFrame,
                            idCol: String, textCol: String, n: Int = 13,
@@ -1362,27 +1356,6 @@ object Dedup {
       .select("source_a", "source_b", "n_cross_pairs", "n_docs_a", "n_docs_b")
       .orderBy("source_a", "source_b")
   }
-
-  /** The shingle index for a document frame (see [[shingleHashesExploded]]). */
-  def shingleIndex(df: DataFrame, idCol: String, textCol: String, k: Int,
-                   hashFn: Column => Column = Hashing.hash60): DataFrame =
-    shingleHashesExploded(df, idCol, textCol, k, hashFn)
-
-  /** The POSITIONAL shingle index — (doc_id, pos, h), not deduplicated —
-    * for span-level consumers (see [[exactSubstringContamination]] and the
-    * streaming span gate).
-    */
-  def positionalShingleIndex(df: DataFrame, idCol: String, textCol: String, k: Int,
-                             hashFn: Column => Column = Hashing.hash60): DataFrame =
-    shingleHashesPositional(df, idCol, textCol, k, hashFn)
-
-  /** Positional shingles WITH their text — (doc_id, pos, g). For remnant
-    * re-derivation in exact-verify steps (the streaming span gate) and tiny
-    * holdout indexes; never build this over a full corpus (strings, not
-    * fixed-width longs).
-    */
-  def positionalShingleText(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
-    shingleTextPositional(df, idCol, textCol, k)
 
   def minHashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       k: Int = 3, numPerm: Int = 64, bands: Int = 16,

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Hashing, Text}
-import graft.operators.{Dedup, IvfPqParams, LatestPerKey, LloydParams, Multimodal, SetAggregator,
-  Surface, TextAnalysis}
+import graft.operators.{Dedup, IvfPqParams, LatestPerKey, LloydParams, Multimodal, Surface,
+  TextAnalysis}
 import graft.sources.Tables
 
 class OperatorSpec extends SparkSpec {
@@ -289,7 +289,6 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("MixedCodec sniffs payloads: PNG routes to ImageIO, anything else to the stub") {
-    import graft.operators.Multimodal
     import graft.operators.Multimodal.{ImageIoCodec, MediaRow, MixedCodec, StubCodec}
     val png = ImageIoCodec.encodePng(ImageIoCodec.solidImage(4, 3, 10, 20, 30))
     val raw = "not an image".getBytes("UTF-8")
@@ -314,33 +313,6 @@ class OperatorSpec extends SparkSpec {
     assert(MixedCodec.frames(MediaRow(1L, tiff, 0L), 16, 1).size ==
       StubCodec.frames(MediaRow(1L, tiff, 0L), 16, 1).size)
     assert(ImageIoCodec.frames(MediaRow(1L, tiff, 0L), 0, 1).size == 2)
-  }
-
-  test("SetAggregator: typed groupByKey path equals the DataFrame pipeline (Q18)") {
-    import org.apache.spark.sql.functions.udaf
-    val changelog = Tables.shareHoldersChangelog(spark, sf0001)
-    // typed path: latest-per-key -> filter -> typed set aggregation
-    val latest = graft.operators.LatestPerKey(changelog, Seq("key"), Seq("seq"))
-      .filter(!col("tombstone") && col("exchange") === "NASDAQ")
-      .select(col("client"), col("key"))
-    val typedResult = latest.as[(String, String)]
-      .groupByKey(_._1)
-      .mapValues(_._2)
-      .agg(SetAggregator.toColumn.name("nasdaq_position_ids"))
-      .collect().toMap
-
-    // and the SQL-facing registered-UDAF path (spark.udf.register surface)
-    spark.udf.register("set_agg", udaf(SetAggregator))
-    latest.createOrReplaceTempView("latest_positions")
-    val udafResult = spark.sql(
-      "SELECT client, set_agg(key) AS ids FROM latest_positions GROUP BY client")
-      .collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
-
-    val reference = graft.operators.ShareHolders
-      .nasdaqPositionsByClient(changelog)
-      .collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
-    assert(typedResult == reference)
-    assert(udafResult == reference)
   }
 
   test("langId: argmax scoring, deterministic ties, und fallback") {
@@ -558,16 +530,16 @@ class OperatorSpec extends SparkSpec {
     val oneDoc = Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text")
     // empty stored corpus: the index persists as empty (schema-bearing)
     // tables and flagging anything against it returns nothing
-    val dir1 = java.nio.file.Files.createTempDirectory("graft-mh-e1").toString
+    val dir1 = tempDir("graft-mh-e1")
     Dedup.minhashIndexStore(emptyDocs, dir1, "doc_id", "text")
     assert(Dedup.dedupIncremental(spark, dir1, oneDoc, "doc_id", "text").count() == 0)
     // empty ingest batch against a real store
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-mh-e2").toString
+    val dir2 = tempDir("graft-mh-e2")
     Dedup.minhashIndexStore(oneDoc, dir2, "doc_id", "text")
     assert(Dedup.dedupIncremental(spark, dir2, emptyDocs, "doc_id", "text").count() == 0)
     // BPE store on an empty corpus: zero merges, empty type table, and the
     // stored encode of ANY corpus is empty (no vocabulary to join)
-    val dir3 = java.nio.file.Files.createTempDirectory("graft-bpe-e").toString
+    val dir3 = tempDir("graft-bpe-e")
     TextAnalysis.bpeStore(emptyDocs, dir3)
     assert(spark.read.parquet(s"$dir3/merges").count() == 0)
     assert(TextAnalysis.bpeEncodeStored(spark, dir3, oneDoc).count() == 0)
@@ -582,7 +554,7 @@ class OperatorSpec extends SparkSpec {
     val d = Tables.table(spark, sf0001, "documents")
     val stored = d.filter(col("doc_id") % 10 =!= 0)
     val batch = d.filter(col("doc_id") % 10 === 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-mh").toString
+    val dir = tempDir("graft-mh")
     Dedup.minhashIndexStore(stored, dir, "doc_id", "text", k = 3, numPerm = 64, bands = 16)
     val inc = Dedup.dedupIncremental(spark, dir, batch, "doc_id", "text",
         k = 3, numPerm = 64, bands = 16, threshold = 0.5)
@@ -682,7 +654,7 @@ class OperatorSpec extends SparkSpec {
 
   test("bpeStore/bpeEncodeStored: stored encode == one-shot, plan has no training rounds") {
     val d = Tables.table(spark, sf0001, "documents")
-    val dir = java.nio.file.Files.createTempDirectory("graft-bpe").toString
+    val dir = tempDir("graft-bpe")
     TextAnalysis.bpeStore(d, dir, nMerges = 10)
     // the persisted merge list IS bpeTrain's output
     val merges = spark.read.parquet(s"$dir/merges").orderBy("merge_rank")
@@ -825,7 +797,6 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("ImageIoCodec: features read real pixels (PNG round-trip matches closed form)") {
-    import graft.operators.Multimodal
     import graft.operators.Multimodal.{ImageIoCodec, MediaRow}
     for (id <- Seq(0L, 17L, 255L, 9999L)) {
       val (w, h) = (8 + (id % 8).toInt, 8 + (id % 5).toInt)
@@ -879,7 +850,7 @@ class OperatorSpec extends SparkSpec {
   test("ivf stored-index search equals the build-and-search result") {
     import graft.operators.Similarity
     val emb = Tables.table(spark, "/root/testdata/sf0.001", "embeddings")
-    val dir = java.nio.file.Files.createTempDirectory("ivf-store").toString
+    val dir = tempDir("ivf-store")
     Similarity.ivfStore(emb, dir, nlist = 4, iters = 4)
     val stored = Similarity.ivfSearchStored(spark, dir, emb, probeId = 0L, k = 5, nprobe = 3)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -897,7 +868,7 @@ class OperatorSpec extends SparkSpec {
     import graft.operators.Similarity
     val emb = Tables.table(spark, "/root/testdata/sf0.001", "embeddings")
     val (old, fresh) = (emb.filter(col("vec_id") % 2 === 0), emb.filter(col("vec_id") % 2 =!= 0))
-    val dir = java.nio.file.Files.createTempDirectory("ivf-append").toString
+    val dir = tempDir("ivf-append")
     Similarity.ivfStore(old, dir, nlist = 4, iters = 2)
     Similarity.ivfAppend(spark, dir, fresh)
     // the extended index covers the full corpus exactly once
@@ -1245,7 +1216,7 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("csv source: changelog roundtrip through the csv format") {
-    val dir = java.nio.file.Files.createTempDirectory("csv-src").toString
+    val dir = tempDir("csv-src")
     Tables.shareHoldersChangelog(spark, sf0001).limit(100)
       .write.mode("overwrite").option("header", "true").csv(dir)
     val back = spark.read.option("header", "true").option("inferSchema", "true").csv(dir)
@@ -1257,7 +1228,7 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("json source: changelog roundtrip through the json format") {
-    val dir = java.nio.file.Files.createTempDirectory("json-src").toString
+    val dir = tempDir("json-src")
     Tables.shareHoldersChangelog(spark, sf0001).limit(100)
       .write.mode("overwrite").json(dir)
     val back = spark.read.json(dir)
@@ -1309,7 +1280,7 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("orc source: changelog roundtrip preserves types exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("orc-src").toString
+    val dir = tempDir("orc-src")
     val orig = Tables.shareHoldersChangelog(spark, sf0001).limit(100)
     orig.write.mode("overwrite").orc(dir)
     val back = spark.read.orc(dir)
@@ -1403,7 +1374,6 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("doc chunking: full coverage, exact overlap, short docs one chunk") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val docs = Seq(
       (1L, (1 to 100).map(i => s"w$i").mkString(" ")), // 100 tokens -> 2 chunks
@@ -1863,7 +1833,7 @@ class OperatorSpec extends SparkSpec {
   test("pqStore/pqEncodeStored: stored encode == one-shot, store holds the codebooks") {
     import graft.operators.Similarity
     val emb = Tables.table(spark, sf0001, "embeddings")
-    val dir = java.nio.file.Files.createTempDirectory("graft-pq").toString
+    val dir = tempDir("graft-pq")
     Similarity.pqStore(emb, dir, m = 8, k = 8, iters = 2)
     // the persisted codebooks ARE pqCodebooks' output
     val stored = spark.read.parquet(s"$dir/codebooks").collect()
@@ -2095,7 +2065,7 @@ class OperatorSpec extends SparkSpec {
     val holdout = d.filter(col("doc_id") % 97 === 0)
       .select(col("doc_id"),
         array_join(slice(graft.functions.Text.tokens(col("text")), 6, 21), " ").as("text"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-holdout").toString
+    val dir = tempDir("graft-holdout")
     Dedup.holdoutIndexStore(holdout, dir, "doc_id", "text", n = 13)
     val stored = Dedup.decontaminateStored(spark, dir, d, "doc_id", "text", n = 13)
       .collect().map(_.toSeq)
@@ -2266,7 +2236,7 @@ class OperatorSpec extends SparkSpec {
   test("ivfPqAppend: appended rows match stored-artifact assignment+encode; search sees them") {
     import graft.operators.Similarity
     val emb = Tables.table(spark, sf0001, "embeddings")
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-app").toString
+    val dir = tempDir("graft-ivfpq-app")
     Similarity.ivfPqStore(emb, dir, nlist = 4, ivfIters = 2, m = 8, k = 8, pqIters = 2)
     // batch = copies of vectors 0..4 under fresh ids (id 1000000 + i): the
     // id-0 copy is an exact probe duplicate the search must then surface
@@ -2654,7 +2624,7 @@ class OperatorSpec extends SparkSpec {
   test("ivfPqStore/ivfPqSearchStored: stored == one-shot ranking; inverted lists carry no floats") {
     import graft.operators.Similarity
     val emb = Tables.table(spark, sf0001, "embeddings")
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
+    val dir = tempDir("graft-ivfpq")
     Similarity.ivfPqStore(emb, dir, nlist = 4, ivfIters = 4,
       m = 8, k = 8, pqIters = 2)
     val stored = Similarity.ivfPqSearchStored(spark, dir, emb, probeId = 0L,

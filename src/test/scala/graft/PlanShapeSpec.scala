@@ -592,7 +592,7 @@ class PlanShapeSpec extends SparkSpec {
     // PartitionFilter (planning-time pruning — no runtime-filter heuristic
     // involved) and read only (vec_id, code).
     val emb = Tables.table(spark, sf0001, "embeddings")
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-plan").toString
+    val dir = tempDir("graft-ivfpq-plan")
     Similarity.ivfPqStore(emb, dir, nlist = 4, ivfIters = 4,
       m = 8, k = 8, pqIters = 2)
     val p = plan(Similarity.ivfPqSearchStored(spark, dir, emb, probeId = 0L,

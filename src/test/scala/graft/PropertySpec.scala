@@ -2,25 +2,11 @@ package graft
 
 import org.scalacheck.{Gen, Prop, Properties}
 
-import graft.operators.SetAggregator
-
-/** Pure ScalaCheck laws (no Spark session): the algebra the operators rely on. */
-object AggregatorLaws extends Properties("SetAggregator") {
-
-  private val ids = Gen.listOf(Gen.oneOf((1 to 40).map(i => s"id$i")))
-
-  property("reduce-fold equals sorted distinct") = Prop.forAll(ids) { xs =>
-    xs.foldLeft(SetAggregator.zero)(SetAggregator.reduce) == xs.toSet &&
-      SetAggregator.finish(xs.toSet) == xs.distinct.sorted
-  }
-
-  property("merge is commutative and associative (shuffle-order independence)") =
-    Prop.forAll(ids, ids, ids) { (a, b, c) =>
-      val (sa, sb, sc) = (a.toSet, b.toSet, c.toSet)
-      SetAggregator.merge(sa, sb) == SetAggregator.merge(sb, sa) &&
-        SetAggregator.merge(SetAggregator.merge(sa, sb), sc) ==
-          SetAggregator.merge(sa, SetAggregator.merge(sb, sc))
-    }
+/** Pure ScalaCheck laws (no Spark session): the algebra the operators rely on.
+  * The hyperplane-LSH sign table must be ±1 and identical on every call, so
+  * the signatures of two runs (and the oracle's SQL table) agree.
+  */
+object SimilarityLaws extends Properties("Similarity") {
 
   property("hyperplane signs are deterministic ±1") =
     Prop.forAll(Gen.choose(0, 63), Gen.choose(0, 127)) { (i, d) =>
@@ -126,61 +112,5 @@ object PackingLaws extends Properties("Packing") {
       val bad = ChunkMeta(1L, 0, n, 1L, 0)
       Prop.throws(classOf[IllegalArgumentException])(
         Packing.packIterator(Iterator(bad), budget).toList)
-    }
-}
-
-/** Laws for the forward as-of matcher: in-order delivery (each batch's
-  * events at or above the previous high-water mark) must reproduce the
-  * batch forward-as-of-with-tolerance result exactly, for ANY batch split.
-  */
-object ForwardAsOfLaws extends Properties("StreamingAsOf.forwardStep") {
-  import graft.streaming.StreamingAsOf
-  import graft.streaming.StreamingAsOf.{Enriched, FEvent, FState}
-
-  private val tol = 10L
-  private val scenarios: Gen[(List[FEvent], List[Int])] = for {
-    n <- Gen.choose(0, 24)
-    evs <- Gen.listOfN(n, for {
-      t <- Gen.choose(0L, 60L)
-      side <- Gen.oneOf(0, 1)
-    } yield (t, side))
-    cuts <- Gen.listOf(Gen.choose(0, math.max(n - 1, 0)))
-  } yield {
-    // in-order delivery: sort by time; unique payloads label each event
-    val ordered = evs.sortBy(_._1).zipWithIndex.map { case ((t, side), i) =>
-      FEvent("k", t, side, s"pl$i-t$t", new java.sql.Timestamp(t))
-    }
-    (ordered, cuts.distinct.sorted)
-  }
-
-  private def batchReference(evs: Seq[FEvent]): Set[(String, Long, String)] = {
-    val builds = evs.filter(_.side == 0).groupBy(_.t)
-      .map { case (t, es) => (t, es.map(_.pl).max) }.toSeq.sortBy(_._1)
-    evs.filter(_.side == 1).flatMap { p =>
-      builds.collectFirst {
-        case (bt, bpl) if bt >= p.t && bt <= p.t + tol => (p.pl, bt, bpl)
-      }
-    }.toSet
-  }
-
-  property("any in-order batch split + final flush equals the batch result") =
-    Prop.forAll(scenarios) { case (evs, cuts) =>
-      val batches = { // split the ordered stream at the generated cut points
-        val bounds = (0 +: cuts.filter(_ <= evs.size) :+ evs.size).distinct.sorted
-        bounds.zip(bounds.drop(1)).map { case (a, b) => evs.slice(a, b) }
-      }
-      var st = FState(Nil, Nil)
-      var wm = 0L // watermark trails: max event time of PRIOR batches
-      val emitted = Seq.newBuilder[Enriched]
-      batches.foreach { b =>
-        val (next, out) = StreamingAsOf.forwardStep(st, b, wm, tol)
-        st = next; emitted ++= out
-        if (b.nonEmpty) wm = math.max(wm, b.map(_.t).max)
-      }
-      val (_, tail) = StreamingAsOf.forwardStep(st, Nil, Long.MaxValue / 2, tol)
-      emitted ++= tail
-      val got = emitted.result().map(e => (e.probePl, e.buildT, e.buildPl)).toSet
-      val want = batchReference(evs)
-      Prop(got == want) :| s"got $got, want $want"
     }
 }

@@ -1,12 +1,9 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 
 import graft.operators.{ConnectedComponents, Dedup, SubstringParams, Surface}
 import graft.sources.Tables
-import graft.streaming.IncrementalNearDup
 
 /** The reliable-checkpoint option (graft.operators.Materialize) across every
   * barrier family: each operator's `checkpointDir` mode must produce the
@@ -20,9 +17,6 @@ class ReliableCheckpointSpec extends SparkSpec {
   private def docs = Tables.table(spark, sf0001, "documents")
     .limit(400) // plenty of planted near-dups at sf0.001; keeps the suite fast
 
-  private def ckptDir(tag: String) =
-    Files.createTempDirectory(s"graft-rel-$tag").toString
-
   private def barrierDirs(dir: String): Seq[String] =
     Option(new java.io.File(dir).listFiles()).toSeq.flatten
       .filter(f => f.isDirectory && f.getName.startsWith("barrier-"))
@@ -32,7 +26,7 @@ class ReliableCheckpointSpec extends SparkSpec {
     df.collect().map(_.mkString("|")).toSet
 
   test("exact-substring family: reliable mode matches default and writes barriers") {
-    val dir = ckptDir("substr")
+    val dir = tempDir("graft-rel-substr")
     val default = rows(Dedup.exactSubstringPairs(docs, "doc_id", "text", n = 13))
     val reliable = rows(Dedup.exactSubstringPairs(docs, "doc_id", "text", n = 13,
       checkpointDir = Some(dir)))
@@ -43,7 +37,7 @@ class ReliableCheckpointSpec extends SparkSpec {
   }
 
   test("substring trim: reliable mode matches default and trims the same spans") {
-    val dir = ckptDir("trim")
+    val dir = tempDir("graft-rel-trim")
     val default = rows(Dedup.substringTrimApply(docs, "doc_id", "text",
       n = 13, minSpan = 20))
     val reliable = rows(Dedup.substringTrimApply(docs, "doc_id", "text",
@@ -79,7 +73,7 @@ class ReliableCheckpointSpec extends SparkSpec {
 
   test("fuzzy contamination: reliable mode matches default") {
     val holdout = docs.filter("doc_id % 40 = 0")
-    val dir = ckptDir("fuzzy")
+    val dir = tempDir("graft-rel-fuzzy")
     val default = rows(Dedup.fuzzyContamination(docs, holdout, "doc_id", "text",
       k = 3, numPerm = 64, bands = 32, threshold = 0.4))
     val reliable = rows(Dedup.fuzzyContamination(docs, holdout, "doc_id", "text",
@@ -94,7 +88,7 @@ class ReliableCheckpointSpec extends SparkSpec {
     // act as the benchmark, the rest are the training corpus
     val holdout = docs.filter("doc_id % 40 = 0")
     val train = docs.filter("doc_id % 40 <> 0")
-    val dir = ckptDir("decon")
+    val dir = tempDir("graft-rel-decon")
     val default = rows(Dedup.applyDecontamination(
       train, holdout, "doc_id", "text", n = 13, minSpanTokens = 20).select("doc_id"))
     val reliable = rows(Dedup.applyDecontamination(
@@ -105,7 +99,7 @@ class ReliableCheckpointSpec extends SparkSpec {
   }
 
   test("MinHash-LSH family (withShingleIndex bracket): reliable matches default") {
-    val dir = ckptDir("minhash")
+    val dir = tempDir("graft-rel-minhash")
     val default = rows(Dedup.minHashLshPairs(docs, "doc_id", "text",
       k = 3, numPerm = 64, bands = 16, threshold = 0.5))
     val reliable = rows(Dedup.minHashLshPairs(docs, "doc_id", "text",
@@ -118,7 +112,7 @@ class ReliableCheckpointSpec extends SparkSpec {
   test("applyDedup end-to-end: reliable mode (incl. CC rounds) matches default") {
     val pairs = Dedup.minHashLshPairs(docs, "doc_id", "text",
       k = 3, numPerm = 64, bands = 16, threshold = 0.5)
-    val dir = ckptDir("apply")
+    val dir = tempDir("graft-rel-apply")
     val default = rows(Dedup.applyDedup(docs, pairs, "doc_id").select("doc_id"))
     val reliable = rows(Dedup.applyDedup(docs, pairs, "doc_id",
       checkpointDir = Some(dir)).select("doc_id"))
@@ -130,7 +124,7 @@ class ReliableCheckpointSpec extends SparkSpec {
     import spark.implicits._
     // a length-9 chain forces multiple pointer-jump rounds
     val pairs = (1L to 8L).map(i => (i, i + 1)).toDF("a", "b")
-    val dir = ckptDir("ccclean")
+    val dir = tempDir("graft-rel-ccclean")
     val got = ConnectedComponents.components(pairs, "a", "b", checkpointDir = Some(dir))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == (1L to 9L).map(_ -> 1L).toMap)
@@ -143,28 +137,11 @@ class ReliableCheckpointSpec extends SparkSpec {
     assert(left.nonEmpty, "reliable mode wrote no barrier files at all")
   }
 
-  test("IncrementalNearDup: reliable mode admits the same documents") {
-    import spark.implicits._
-    def run(ckpt: Option[String]): Set[Long] = {
-      val hist = Files.createTempDirectory("neardup-rel").toString
-      val dedup = new IncrementalNearDup(hist, threshold = 0.5, checkpointDir = ckpt)
-      val base = "fast column scan with vector units and simd gather ops"
-      val mutated = base.split(" ").updated(9, "loads").mkString(" ")
-      val other = "hash join probe side build partition radix bits tune it"
-      dedup.processBatch(spark,
-        Seq((1L, base), (2L, mutated), (3L, other)).toDF("doc_id", "text"))
-        .collect().map(_.getLong(0)).toSet
-    }
-    val dir = ckptDir("neardup")
-    assert(run(Some(dir)) == run(None))
-    assert(barrierDirs(dir).nonEmpty)
-  }
-
   test("ParquetServing.compact: reliable mode folds identically") {
     import spark.implicits._
     import graft.streaming.{KTableStream, ParquetServing}
     def run(ckpt: Option[String]): Map[String, Seq[String]] = {
-      val store = Files.createTempDirectory("serving-rel").toString
+      val store = tempDir("serving-rel")
       val serving = new ParquetServing(store, viewName = "rel_compact_view",
         checkpointDir = ckpt)
       serving.upsertBatch(Seq(
@@ -178,31 +155,12 @@ class ReliableCheckpointSpec extends SparkSpec {
       serving.compact(spark)
       serving.asMap
     }
-    val dir = ckptDir("serving")
+    val dir = tempDir("graft-rel-serving")
     assert(run(Some(dir)) == run(None))
     // round 9: compact() deletes its barrier once the folded write lands —
     // the frame is fully consumed inside the method, and a long-running
     // stream compacts indefinitely, so leftover dirs would grow unboundedly
     assert(barrierDirs(dir).isEmpty,
       s"compact leaked barrier dirs: ${barrierDirs(dir)}")
-  }
-
-  test("IncrementalNearDup: reliable barriers rotate — at most one dir retained") {
-    import spark.implicits._
-    val dir = ckptDir("neardup-rot")
-    val hist = Files.createTempDirectory("neardup-rot-hist").toString
-    val dedup = new IncrementalNearDup(hist, threshold = 0.5,
-      checkpointDir = Some(dir))
-    def batch(id: Long, text: String) =
-      dedup.processBatch(spark, Seq((id, text)).toDF("doc_id", "text")).count()
-    batch(1L, "fast column scan with vector units and simd gather ops")
-    assert(barrierDirs(dir).size == 1) // current batch's barrier is live
-    batch(2L, "hash join probe side build partition radix bits tune it")
-    // batch 2 deleted batch 1's barrier before writing its own
-    assert(barrierDirs(dir).size == 1,
-      s"barriers accumulated instead of rotating: ${barrierDirs(dir)}")
-    batch(3L, "sort merge join spill threshold and page size tuning notes")
-    assert(barrierDirs(dir).size == 1,
-      s"barriers accumulated instead of rotating: ${barrierDirs(dir)}")
   }
 }

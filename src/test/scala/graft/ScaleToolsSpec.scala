@@ -11,8 +11,8 @@ import graft.sources.Tables
   * bucketed (shuffle-free) joins. Separate suite because it needs its own
   * session (extensions + warehouse dir are session-construction-time).
   */
-class ScaleToolsSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
-  private val warehouse = java.nio.file.Files.createTempDirectory("graft-wh").toString
+class ScaleToolsSpec extends AnyFunSuite with TempDirs {
+  private val warehouse = tempDir("graft-wh")
   private var prevDefault: Option[SparkSession] = None
 
   // This suite needs its OWN session (extensions + warehouse are fixed at
@@ -27,10 +27,11 @@ class ScaleToolsSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     SparkSession.clearActiveSession()
   }
 
-  override def afterAll(): Unit = {
-    SparkSession.clearActiveSession()
-    prevDefault.foreach(SparkSession.setDefaultSession)
-  }
+  override def afterAll(): Unit =
+    try {
+      SparkSession.clearActiveSession()
+      prevDefault.foreach(SparkSession.setDefaultSession)
+    } finally super.afterAll()
 
   def sf0001 = "/root/testdata/sf0.001"
 
@@ -278,7 +279,7 @@ class ScaleToolsSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
       (20L, 21L), (20L, 22L), (21L, 22L)).toDF("a", "b")
     val local = ConnectedComponents.components(pairs, "a", "b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
+    val dir = tempDir("graft_cc_ckpt")
     val reliable = ConnectedComponents.components(pairs, "a", "b", checkpointDir = Some(dir))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(reliable == local)
@@ -1066,7 +1067,7 @@ class ScaleToolsSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
       array((0 until 64).map(d => uh(lit("nb"), col("id"), lit(d))): _*)
         .as("embedding")).localCheckpoint()
     def run(n: Int): (Long, Int, Double) = {
-      val dir = java.nio.file.Files.createTempDirectory(s"ivf-append-$n").toString
+      val dir = tempDir(s"ivf-append-$n")
       Similarity.ivfStore(base, dir, nlist = 8, iters = 2)
       val nv = batch(n)
       val t0 = System.nanoTime()
@@ -1136,7 +1137,7 @@ class ScaleToolsSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     }
     def run(n: Int, nlist: Int): (Long, Long, Int) = {
       val emb = corpus(n)
-      val dir = java.nio.file.Files.createTempDirectory(s"ivfpq10x-$n").toString
+      val dir = tempDir(s"ivfpq10x-$n")
       Similarity.ivfPqStore(emb, dir, nlist = nlist, ivfIters = 2,
         m = 8, k = 8, pqIters = 2)
       val df = Similarity.ivfPqSearchStored(spark, dir, emb, probeId = 0L,
@@ -1508,7 +1509,7 @@ class ScaleToolsSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     def txt(idc: Column) = array_join(transform(sequence(lit(0), lit(9)),
       j => concat_ws("_", lit("d"), idc, j)), " ")
     def run(n: Int): (Set[(Long, Long, Double)], Int, Double) = {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-mhinc-$n").toString
+      val dir = tempDir(s"graft-mhinc-$n")
       val stored = spark.range(n).select(col("id").as("doc_id"), txt(col("id")).as("text"))
       Dedup.minhashIndexStore(stored, dir, "doc_id", "text")
       val stride = n / 50
@@ -1547,7 +1548,7 @@ class ScaleToolsSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     def txt(idc: Column) = array_join(transform(sequence(lit(0), lit(9)),
       j => concat_ws("_", lit("d"), idc, j)), " ")
     val n = 2000
-    val dir = java.nio.file.Files.createTempDirectory("graft-mhinc-backfill").toString
+    val dir = tempDir("graft-mhinc-backfill")
     val stored = spark.range(n).select(col("id").as("doc_id"), txt(col("id")).as("text"))
     Dedup.minhashIndexStore(stored, dir, "doc_id", "text")
     // backfill batch: same cardinality as the store; every 4th doc is a

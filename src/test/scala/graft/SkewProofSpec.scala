@@ -56,7 +56,6 @@ class SkewProofSpec extends SparkSpec {
   }
 
   test("salted join levels a planted 50%-hot key; plain join funnels it") {
-    import spark.implicits._
     val nFact = 200000
     val nKeys = 1000
     // key 0 owns half the fact; the rest is uniform

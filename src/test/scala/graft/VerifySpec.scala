@@ -1,13 +1,13 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-class VerifySpec extends AnyFunSuite {
+class VerifySpec extends AnyFunSuite with TempDirs {
 
   test("legacy canonical/ cleanup removes nested dirs and any file kind") {
-    val out = Files.createTempDirectory("graft-verify-out")
+    val out = Path.of(tempDir("graft-verify-out"))
     val legacy = out.resolve("canonical")
     Files.createDirectories(legacy.resolve("sub/nested"))
     Files.writeString(legacy.resolve("q1.txt"), "a\n")

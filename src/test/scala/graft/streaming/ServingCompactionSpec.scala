@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import KTableStream.ClientView
 
@@ -26,7 +24,7 @@ class ServingCompactionSpec extends SparkSpec {
   }
 
   test("compact folds history, keeps tombstones, survives replay of the max batch") {
-    val dir = Files.createTempDirectory("serving-compact").toString
+    val dir = tempDir("serving-compact")
     val serving = new ParquetServing(dir, viewName = "compact_spec_view")
 
     serving.upsertBatch(views(
@@ -64,7 +62,7 @@ class ServingCompactionSpec extends SparkSpec {
   }
 
   test("auto-compaction keeps the partition count bounded under a stream") {
-    val dir = Files.createTempDirectory("serving-autocompact").toString
+    val dir = tempDir("serving-autocompact")
     val serving = new ParquetServing(dir, viewName = "autocompact_view", compactEvery = 2)
     (0L to 6L).foreach { i =>
       serving.upsertBatch(views((s"c$i", Seq(s"c$i:::T"), false)), i)
@@ -76,7 +74,7 @@ class ServingCompactionSpec extends SparkSpec {
   }
 
   test("compact is a no-op below three batch partitions") {
-    val dir = Files.createTempDirectory("serving-compact2").toString
+    val dir = tempDir("serving-compact2")
     val serving = new ParquetServing(dir, viewName = "compact_spec_view2")
     serving.compact(spark) // empty store: no crash
     serving.upsertBatch(views(("a", Seq("a:::T"), false)), 0L)

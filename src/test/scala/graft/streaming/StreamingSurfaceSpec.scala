@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -27,7 +26,7 @@ class StreamingSurfaceSpec extends SparkSpec {
       .select(col("window.start").as("w"), col("k"), col("n"))
     val q = agg.writeStream
       .outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("wm").toString)
+      .option("checkpointLocation", tempDir("wm"))
       .format("memory").queryName("windowed")
       .start()
 
@@ -58,7 +57,7 @@ class StreamingSurfaceSpec extends SparkSpec {
       .dropDuplicatesWithinWatermark("id")
     val q = dedup.writeStream
       .outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("dd").toString)
+      .option("checkpointLocation", tempDir("dd"))
       .format("memory").queryName("deduped")
       .start()
     input.addData((ts(0), "x"), (ts(1), "x"), (ts(2), "y"))
@@ -78,7 +77,7 @@ class StreamingSurfaceSpec extends SparkSpec {
     val joined = input.toDF().toDF("ts", "ticker").join(dim, "ticker")
     val q = joined.writeStream
       .outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ss").toString)
+      .option("checkpointLocation", tempDir("ss"))
       .format("memory").queryName("enriched")
       .start()
     input.addData((ts(0), "AAPL"), (ts(1), "BT.A"), (ts(2), "UNKNOWN"))
@@ -102,7 +101,7 @@ class StreamingSurfaceSpec extends SparkSpec {
         col("rts") <= col("lts") + expr("INTERVAL 10 MINUTES"))
     val q = joined.writeStream
       .outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ssj").toString)
+      .option("checkpointLocation", tempDir("ssj"))
       .format("memory").queryName("ssjoin")
       .start()
     left.addData((ts(0), "a"), (ts(0), "b"))
@@ -120,7 +119,7 @@ class StreamingSurfaceSpec extends SparkSpec {
     val q = input.toDF().toDF("ts", "k")
       .groupBy("k").count()
       .writeStream.outputMode("update").format("console")
-      .option("checkpointLocation", Files.createTempDirectory("console").toString)
+      .option("checkpointLocation", tempDir("console"))
       .start()
     input.addData((ts(0), "a"), (ts(1), "a"))
     q.processAllAvailable()
@@ -138,7 +137,7 @@ class StreamingSurfaceSpec extends SparkSpec {
       .select(col("window.start").as("w"), col("n"))
     val q = agg.writeStream
       .outputMode("complete")
-      .option("checkpointLocation", Files.createTempDirectory("sw").toString)
+      .option("checkpointLocation", tempDir("sw"))
       .format("memory").queryName("sliding")
       .start()
     input.addData((ts(7), "a"))
