@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Hashing, Text}
-import graft.operators.{Dedup, IvfPqParams, LatestPerKey, LloydParams, Multimodal, Surface,
-  TextAnalysis}
+import graft.operators.{Dedup, IvfPqParams, LatestPerKey, LloydParams, Multimodal, SetAggregator,
+  Surface, TextAnalysis}
 import graft.sources.Tables
 
 class OperatorSpec extends SparkSpec {
@@ -313,6 +313,33 @@ class OperatorSpec extends SparkSpec {
     assert(MixedCodec.frames(MediaRow(1L, tiff, 0L), 16, 1).size ==
       StubCodec.frames(MediaRow(1L, tiff, 0L), 16, 1).size)
     assert(ImageIoCodec.frames(MediaRow(1L, tiff, 0L), 0, 1).size == 2)
+  }
+
+  test("SetAggregator: typed groupByKey path equals the DataFrame pipeline (Q18)") {
+    import org.apache.spark.sql.functions.udaf
+    val changelog = Tables.shareHoldersChangelog(spark, sf0001)
+    // typed path: latest-per-key -> filter -> typed set aggregation
+    val latest = graft.operators.LatestPerKey(changelog, Seq("key"), Seq("seq"))
+      .filter(!col("tombstone") && col("exchange") === "NASDAQ")
+      .select(col("client"), col("key"))
+    val typedResult = latest.as[(String, String)]
+      .groupByKey(_._1)
+      .mapValues(_._2)
+      .agg(SetAggregator.toColumn.name("nasdaq_position_ids"))
+      .collect().toMap
+
+    // and the SQL-facing registered-UDAF path (spark.udf.register surface)
+    spark.udf.register("set_agg", udaf(SetAggregator))
+    latest.createOrReplaceTempView("latest_positions")
+    val udafResult = spark.sql(
+      "SELECT client, set_agg(key) AS ids FROM latest_positions GROUP BY client")
+      .collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
+
+    val reference = graft.operators.ShareHolders
+      .nasdaqPositionsByClient(changelog)
+      .collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
+    assert(typedResult == reference)
+    assert(udafResult == reference)
   }
 
   test("langId: argmax scoring, deterministic ties, und fallback") {

@@ -2,11 +2,25 @@ package graft
 
 import org.scalacheck.{Gen, Prop, Properties}
 
-/** Pure ScalaCheck laws (no Spark session): the algebra the operators rely on.
-  * The hyperplane-LSH sign table must be ±1 and identical on every call, so
-  * the signatures of two runs (and the oracle's SQL table) agree.
-  */
-object SimilarityLaws extends Properties("Similarity") {
+import graft.operators.SetAggregator
+
+/** Pure ScalaCheck laws (no Spark session): the algebra the operators rely on. */
+object AggregatorLaws extends Properties("SetAggregator") {
+
+  private val ids = Gen.listOf(Gen.oneOf((1 to 40).map(i => s"id$i")))
+
+  property("reduce-fold equals sorted distinct") = Prop.forAll(ids) { xs =>
+    xs.foldLeft(SetAggregator.zero)(SetAggregator.reduce) == xs.toSet &&
+      SetAggregator.finish(xs.toSet) == xs.distinct.sorted
+  }
+
+  property("merge is commutative and associative (shuffle-order independence)") =
+    Prop.forAll(ids, ids, ids) { (a, b, c) =>
+      val (sa, sb, sc) = (a.toSet, b.toSet, c.toSet)
+      SetAggregator.merge(sa, sb) == SetAggregator.merge(sb, sa) &&
+        SetAggregator.merge(SetAggregator.merge(sa, sb), sc) ==
+          SetAggregator.merge(sa, SetAggregator.merge(sb, sc))
+    }
 
   property("hyperplane signs are deterministic ±1") =
     Prop.forAll(Gen.choose(0, 63), Gen.choose(0, 127)) { (i, d) =>

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -19,7 +18,7 @@ class DocumentIngestSpec extends SparkSpec {
       input.toDF().toDF("doc_id", "text", "ts"), minTokens = 3, maxStopRatio = 0.5)
     val q = out.writeStream
       .outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ingest").toString)
+      .option("checkpointLocation", tempDir("ingest"))
       .format("memory").queryName("ingested")
       .start()
 
@@ -44,7 +43,7 @@ class DocumentIngestSpec extends SparkSpec {
   test("ingest dedup state survives a restart from checkpoint") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val checkpoint = Files.createTempDirectory("ingest-restart").toString
+    val checkpoint = tempDir("ingest-restart")
     val seen = scala.collection.concurrent.TrieMap.empty[Long, Unit]
 
     def start(input: MemoryStream[(Long, String, Timestamp)]) =
@@ -92,7 +91,7 @@ class DocumentIngestSpec extends SparkSpec {
       minTokens = 3, chunkSize = 8, overlap = 3)
     val q = out.writeStream
       .outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ingest-chunk").toString)
+      .option("checkpointLocation", tempDir("ingest-chunk"))
       .format("memory").queryName("chunked")
       .start()
     input.addData(fixture: _*)
