@@ -15,10 +15,10 @@ import graft.streaming.KTableStream.{Position, ShareUpdate}
   * as the reference produces for amount=0 (fake_producer.clj:26-29,
   * NotSerializeNil kafka_streams.clj:21-26).
   *
-  * No broker exists in the test container, so [[parse]] — everything between
-  * the raw Kafka frame and the typed changelog — is factored out and unit
-  * tested on static frames; [[readStream]]/[[writeBatch]] only add the
-  * format("kafka") endpoints.
+  * No broker exists in the test container, so [[parse]] and [[rejected]] —
+  * everything between the raw Kafka frame and the typed changelog — are
+  * factored out and unit tested on static frames; [[readStream]] and
+  * [[writeBatch]] only add the format("kafka") endpoints.
   */
 object KafkaChangelog {
 
@@ -31,16 +31,44 @@ object KafkaChangelog {
     StructField("amount", IntegerType)))
 
   /** Raw Kafka frame (key/value binary, offset long) -> typed changelog.
-    * Null value => tombstone (`ShareUpdate.value = None`).
+    * Null value => tombstone (`ShareUpdate.value = None`). Frames that
+    * cannot enter the changelog are dropped here and surface in [[rejected]]
+    * instead of failing the job: on a stream a restart replays the same
+    * offset, so one bad frame would otherwise stop the query for good.
     */
   def parse(spark: SparkSession, kafkaFrame: DataFrame): Dataset[ShareUpdate] = {
     import spark.implicits._
-    kafkaFrame
-      .select(
-        col("key").cast("string").as("key"),
-        from_json(col("value").cast("string"), valueSchema).as("value"),
-        col("offset").as("seq"))
+    classified(kafkaFrame)
+      .filter(col("reason").isNull)
+      .select("key", "value", "seq")
       .as[ShareUpdate]
+  }
+
+  /** The frames [[parse]] drops, as (key, value, offset, reason) strings:
+    * reason `null key` (no client to group by), or `malformed value` (a
+    * non-null value that does not parse to all five [[valueSchema]] fields:
+    * garbage, truncated JSON, a missing or non-integer `amount`, ...).
+    */
+  def rejected(spark: SparkSession, kafkaFrame: DataFrame): DataFrame =
+    classified(kafkaFrame)
+      .filter(col("reason").isNotNull)
+      .select(col("key"), col("raw").as("value"), col("seq").as("offset"), col("reason"))
+
+  private def classified(kafkaFrame: DataFrame): DataFrame = {
+    // the one-element explode keeps the parse to one evaluation per frame: a
+    // filter over a projected column is pushed below the projection with
+    // from_json inlined into each null check, but never below a generator
+    val parsed = kafkaFrame.select(
+      col("key").cast("string").as("key"),
+      col("value").cast("string").as("raw"),
+      explode(array(from_json(col("value").cast("string"), valueSchema))).as("value"),
+      col("offset").as("seq"))
+    val complete = valueSchema.fieldNames
+      .map(f => col(s"value.$f").isNotNull)
+      .foldLeft(col("value").isNotNull)(_ && _)
+    parsed.withColumn("reason",
+      when(col("key").isNull, lit("null key"))
+        .when(col("raw").isNotNull && !complete, lit("malformed value")))
   }
 
   /** Streaming read of the compacted topic (op #1, kafka_streams.clj:64). */

@@ -1,6 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import scala.collection.immutable.TreeMap
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -9,26 +12,34 @@ import KTableStream.ClientView
 
 /** Serving layer ≈ the reference's queryable state store + interactive query
   * (kafka_streams.clj:80,83-89): `foreachBatch` upserts the change stream into
-  * a queryable store, read via [[snapshot]] / a temp view.
+  * a queryable store, read via [[asMap]] / a temp view.
   *
   * Deliberate upgrade over the reference (SURVEY.md §3.2): the served view is
   * COMPLETE — the reference's `GET /local-state` returns only the partitions
   * local to one of the 3 instances.
   *
-  * The view is maintained as an append-only keyed changelog in parquet —
-  * exactly the reference's store + changelog-topic pairing
-  * (kafka_streams.clj:80), with the parquet files as the changelog and
-  * read-side latest-per-key compaction as the store.
+  * The durable store is an append-only keyed changelog in parquet — exactly
+  * the reference's store + changelog-topic pairing (kafka_streams.clj:80),
+  * with the parquet files as the changelog and latest-per-key over them
+  * ([[snapshot]]) as the store. Reads are served from a driver-side copy of
+  * that fold, advanced by each batch's changes, the way Structured Streaming
+  * serves versioned state instead of recomputing it from the log.
   *
-  *  - Write path: each micro-batch appends ONLY its changed keys (update-mode
-  *    emission), written executor-side — no driver materialization, no
-  *    collect. Partitioned by batch id with dynamic partition overwrite, so a
-  *    replayed batch after restart overwrites its own partition: idempotent
-  *    exactly-once output.
-  *  - Read path: latest-per-key over the changelog (partial-agg `max_by`, one
-  *    shuffle), tombstoned rows dropped. At 100 TB-scale view sizes a
-  *    periodic compaction job would fold old batch partitions; the read is
-  *    partition-prunable either way.
+  *  - Write path: each micro-batch runs once and carries ONLY its changed
+  *    keys (update-mode emission: at most one whole-set row per changed
+  *    client). They are appended to the changelog executor-side, partitioned
+  *    by batch id with dynamic partition overwrite, so a replayed batch after
+  *    restart overwrites its own partition: idempotent exactly-once output.
+  *  - Read path: the same rows reach the driver with the write and are
+  *    folded into an immutable client -> ids map, which [[asMap]] returns
+  *    and `viewName` serves as a local relation; a lookup or
+  *    `GET /local-state` starts no Spark job and costs O(live clients), not
+  *    O(batches ever written). The map is bootstrapped once per instance
+  *    from the store's latest-per-key, so a new instance over an existing
+  *    store (restart) converges, and a replayed batch folds to the same map
+  *    because every change row carries the client's whole set. The driver
+  *    already held the whole view on every `GET /local-state`, so the copy
+  *    adds no new driver-memory bound.
   *
   * In a deployment with a transactional table format (Delta/Iceberg) the
   * upsert becomes a MERGE; plain parquet keeps this self-contained.
@@ -40,6 +51,9 @@ class ParquetServing(storeDir: String, val viewName: String = "us_share_holders"
   // the session whose catalog serves interactive queries; foreachBatch runs
   // with a CLONED session, so views registered there would be invisible
   @volatile private var servingSession: Option[SparkSession] = None
+
+  // the served view, sorted by client; null until bootstrapped from the store
+  @volatile private var view: TreeMap[String, Seq[String]] = null
 
   private def sessionFor(batch: Dataset[ClientView]): SparkSession =
     servingSession
@@ -59,25 +73,55 @@ class ParquetServing(storeDir: String, val viewName: String = "us_share_holders"
 
   /** Apply one micro-batch of view changes (idempotent per (key, batch)). */
   def upsertBatch(batch: Dataset[ClientView], batchId: Long): Unit = {
-    batch.toDF()
+    val session = sessionFor(batch)
+    // bootstrapped from the batches BELOW this one, so a replayed batch's
+    // stale partition never reaches the map (and a fresh store reads nothing)
+    val before = served(session, below = Some(batchId))
+    // the write is the one run of the stateful plan, and it also hands the
+    // rows to the driver: a result task's accumulator updates are merged once
+    // per partition (never from a failed or duplicate attempt), so `written`
+    // holds exactly the rows written. A separate collect would cost a second
+    // job per batch (and a persist to keep the plan from running twice).
+    val written = batch.sparkSession.sparkContext.collectionAccumulator[ClientView]
+    batch.mapPartitions(_.map { c => written.add(c); c })(Encoders.product[ClientView])
       .withColumn("batch_id", lit(batchId))
       .write
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id")
       .parquet(storeDir)
-    val session = sessionFor(batch)
+    val changes = written.value.asScala
     // periodic fold: keeps the changelog partition count bounded under a
     // long-running stream. Replay-safe — a replayed batch re-runs its own
     // compact() too, which converges (see compact's invariants).
     if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) compact(session)
-    snapshot(session).createOrReplaceTempView(viewName)
+    val after = changes.foldLeft(before) { (m, c) =>
+      if (c.deleted) m - c.client else m.updated(c.client, c.nasdaq_position_ids)
+    }
+    view = after
+    import session.implicits._
+    after.toSeq.toDF("client", "nasdaq_position_ids").createOrReplaceTempView(viewName)
   }
 
-  /** The complete materialized view (interactive query surface,
-    * kafka_streams.clj:83-89).
+  /** The served map, bootstrapped once from the store's batches `below`. */
+  private def served(spark: => SparkSession, below: Option[Long]): TreeMap[String, Seq[String]] = {
+    val current = view
+    if (current != null) current
+    else synchronized {
+      if (view == null) view = TreeMap.from(
+        latest(spark, below).collect().iterator.map(r => r.getString(0) -> r.getSeq[String](1)))
+      view
+    }
+  }
+
+  /** The complete materialized view as the durable changelog holds it: a
+    * distributed latest-per-key over every batch partition, O(history) until
+    * [[compact]] folds it. It bootstraps the served map and checks it;
+    * interactive reads go through [[asMap]] / `viewName`.
     */
-  def snapshot(spark: SparkSession): DataFrame = {
+  def snapshot(spark: SparkSession): DataFrame = latest(spark, below = None)
+
+  private def latest(spark: SparkSession, below: Option[Long]): DataFrame = {
     import spark.implicits._
     def emptyChanges = Seq.empty[(String, Seq[String], Boolean, Long)]
       .toDF("client", "nasdaq_position_ids", "deleted", "batch_id")
@@ -99,26 +143,24 @@ class ParquetServing(storeDir: String, val viewName: String = "us_share_holders"
     }
     val changes =
       if (!fs.exists(path) || !hasDataFile) emptyChanges
-      else spark.read.parquet(storeDir)
+      else below.foldLeft(spark.read.parquet(storeDir))((all, b) => all.filter(col("batch_id") < b))
     LatestPerKey(changes, keys = Seq("client"), ordering = Seq("batch_id"))
       .filter(!col("deleted"))
       .select("client", "nasdaq_position_ids")
       .orderBy("client")
   }
 
-  /** Driver-side convenience read of the full view — an interactive query,
-    * bounded by the number of live clients, NOT part of the streaming hot
-    * path.
+  /** The full view (interactive query, kafka_streams.clj:83-89) as of the
+    * last applied batch; starts no Spark job once bootstrapped.
     */
-  def asMap: Map[String, Seq[String]] = {
-    val spark = servingSession.orElse(SparkSession.getDefaultSession).get
-    snapshot(spark).collect()
-      .map(r => r.getString(0) -> r.getSeq[String](1)).toMap
-  }
+  def asMap: Map[String, Seq[String]] =
+    served(servingSession.orElse(SparkSession.getDefaultSession).get, below = None)
 
   /** Periodic changelog compaction: fold old batch partitions into a single
-    * base partition so the read-side latest-per-key scans O(base + recent)
-    * instead of O(all batches ever). Read results are unchanged.
+    * base partition so the store's disk use and its latest-per-key
+    * ([[snapshot]], and with it a restart's bootstrap) scan O(base + recent)
+    * instead of O(all batches ever). Reads never scan the store, and their
+    * results are unchanged.
     *
     * Safety invariants:
     *  - Only batches STRICTLY BELOW the current max are folded. The max

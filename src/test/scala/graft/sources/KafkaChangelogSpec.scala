@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Dataset, Row}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -17,10 +18,13 @@ class KafkaChangelogSpec extends SparkSpec {
       StructField("offset", LongType)))
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows.map { case (k, v, o) =>
-        Row(k.getBytes("UTF-8"), v.map(_.getBytes("UTF-8")).orNull, o)
+        Row(Option(k).map(_.getBytes("UTF-8")).orNull, v.map(_.getBytes("UTF-8")).orNull, o)
       }),
       schema)
   }
+
+  private def valueJson(client: String, ticker: String, exchange: String, amount: Int): String =
+    s"""{"client":"$client","id":"$client:::$ticker","ticker":"$ticker","exchange":"$exchange","amount":$amount}"""
 
   test("parse: upsert json and null-value tombstone") {
     val frame = kafkaFrame(Seq(
@@ -32,6 +36,71 @@ class KafkaChangelogSpec extends SparkSpec {
     assert(got(0) == ShareUpdate("daniel:::AAPL",
       Some(graft.streaming.KTableStream.Position("daniel", "daniel:::AAPL", "AAPL", "NASDAQ", 99)), 0L))
     assert(got(1) == ShareUpdate("daniel:::AAPL", None, 1L))
+  }
+
+  test("parse: malformed frames and null keys go to the rejected output") {
+    val good = valueJson("daniel", "AAPL", "NASDAQ", 99)
+    val bad = Seq(
+      "not json at all",
+      good.take(40), // truncated
+      """{"client":"daniel","id":"daniel:::MSFT","ticker":"MSFT","exchange":"NASDAQ"}""",
+      """{"client":"daniel","id":"daniel:::MSFT","ticker":"MSFT","exchange":"NASDAQ","amount":"x"}""",
+      """{"client":"daniel","id":"daniel:::MSFT","ticker":"MSFT","exchange":"NASDAQ","amount":1.5}""")
+    val frame = kafkaFrame(
+      Seq(("daniel:::AAPL", Some(good), 0L)) ++
+        bad.zipWithIndex.map { case (v, i) => ("daniel:::MSFT", Some(v), 1L + i) } ++
+        Seq((null, Some(good), 6L), (null, None, 7L), ("daniel:::AAPL", None, 8L)))
+
+    // good rows keep their meaning; a null value stays a tombstone
+    val got = KafkaChangelog.parse(spark, frame).collect().sortBy(_.seq).toSeq
+    assert(got == Seq(
+      ShareUpdate("daniel:::AAPL",
+        Some(graft.streaming.KTableStream.Position("daniel", "daniel:::AAPL", "AAPL", "NASDAQ", 99)), 0L),
+      ShareUpdate("daniel:::AAPL", None, 8L)))
+
+    val rejected = KafkaChangelog.rejected(spark, frame).collect()
+      .map(r => r.getLong(2) -> (Option(r.getString(0)), Option(r.getString(1)), r.getString(3)))
+      .toMap
+    assert(rejected == bad.zipWithIndex.map { case (v, i) =>
+        (1L + i) -> ((Some("daniel:::MSFT"), Some(v), "malformed value"))
+      }.toMap ++ Map(
+        6L -> ((None, Some(good), "null key")),
+        7L -> ((None, None, "null key"))))
+  }
+
+  test("a malformed frame between good ones does not stop the stream") {
+    import graft.streaming.{KTableStream, ParquetServing}
+    import KafkaChangelogSpec.Frame
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    def frame(key: String, value: Option[String], offset: Long) =
+      Frame(Option(key).map(_.getBytes("UTF-8")).orNull, value.map(_.getBytes("UTF-8")).orNull, offset)
+    val batches = Seq(
+      Seq(frame("daniel:::AAPL", Some(valueJson("daniel", "AAPL", "NASDAQ", 99)), 0L),
+        frame("daniel:::MSFT", Some("""{"client":"daniel","id":"daniel:::MSFT""""), 1L),
+        frame("kima:::MSFT", Some(valueJson("kima", "MSFT", "NASDAQ", 45)), 2L)),
+      Seq(frame(null, Some(valueJson("kima", "GOOG", "NASDAQ", 3)), 3L),
+        frame("daniel:::GOOG", Some(valueJson("daniel", "GOOG", "NASDAQ", 5)), 4L),
+        frame("kima:::MSFT", Some("garbage"), 5L),
+        frame("daniel:::AAPL", None, 6L)))
+    def view(name: String, batches: Seq[Seq[Frame]]): Map[String, Seq[String]] = {
+      val input = MemoryStream[Frame]
+      val serving = new ParquetServing(tempDir(s"$name-store"), viewName = name)
+      val q = KTableStream.usShareHolders(spark, KafkaChangelog.parse(spark, input.toDF()))
+        .writeStream
+        .outputMode("update")
+        .option("checkpointLocation", tempDir(s"$name-ckpt"))
+        .foreachBatch { (b: Dataset[KTableStream.ClientView], id: Long) => serving.upsertBatch(b, id) }
+        .start()
+      try batches.foreach { b => input.addData(b); q.processAllAvailable() }
+      finally q.stop()
+      serving.asMap
+    }
+    val withBad = view("bad_frames_view", batches)
+    val badOffsets = Set(1L, 3L, 5L)
+    val goodOnly = view("good_frames_view", batches.map(_.filterNot(f => badOffsets(f.offset))))
+    assert(withBad == Map("daniel" -> Seq("daniel:::GOOG"), "kima" -> Seq("kima:::MSFT")))
+    assert(withBad == goodOnly)
   }
 
   test("producer helper: amount=0 encodes a tombstone (fake_producer.clj:26-29)") {
@@ -83,9 +152,6 @@ class KafkaChangelogSpec extends SparkSpec {
         }), schema)
         .write.mode("append").parquet(srcDir)
 
-    def valueJson(client: String, ticker: String, exchange: String, amount: Int): String =
-      s"""{"client":"$client","id":"$client:::$ticker","ticker":"$ticker","exchange":"$exchange","amount":$amount}"""
-
     // the reference REPL scenario (fake_producer.clj:50-52) + a second client
     writeBatchFile(Seq(
       ("daniel:::AAPL", Some(valueJson("daniel", "AAPL", "NASDAQ", 99)), 0L),
@@ -119,4 +185,9 @@ class KafkaChangelogSpec extends SparkSpec {
     assert(serving2.asMap == Map(
       "daniel" -> Seq("daniel:::AAPL"), "kima" -> Seq("kima:::MSFT")))
   }
+}
+
+object KafkaChangelogSpec {
+  /** A raw Kafka frame, as a MemoryStream row. */
+  final case class Frame(key: Array[Byte], value: Array[Byte], offset: Long)
 }

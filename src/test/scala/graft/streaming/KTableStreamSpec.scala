@@ -1,7 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.Dataset
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQueryProgress
 
 import graft.SparkSpec
@@ -39,10 +46,21 @@ class KTableStreamSpec extends SparkSpec {
     val out = steps.map { batch =>
       input.addData(batch)
       q.processAllAvailable()
+      assertReadsAgree(serving)
       serving.asMap
     }
     q.stop()
     (out, q.lastProgress)
+  }
+
+  private def collected(df: DataFrame): Map[String, Seq[String]] =
+    df.collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
+
+  /** The served map, the registered view and the durable store agree. */
+  private def assertReadsAgree(serving: ParquetServing): Unit = {
+    val store = collected(serving.snapshot(spark))
+    assert(serving.asMap == store, "served map != parquet store")
+    assert(collected(spark.table(serving.viewName)) == store, "registered view != parquet store")
   }
 
   private def run(steps: Seq[Seq[ShareUpdate]],
@@ -183,6 +201,90 @@ class KTableStreamSpec extends SparkSpec {
     val plan = serving.snapshot(spark).queryExecution.executedPlan.toString
     assert(plan.contains("HashAggregate") || plan.contains("ObjectHashAggregate") ||
       plan.contains("SortAggregate"))
+  }
+
+  /** Runs `body` and counts the Spark jobs it started on this thread. */
+  private def jobsStartedBy[A](body: => A): (A, Int) = {
+    val tag = "graft.jobs.probe"
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag))).foreach(seen.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "body")
+      val out = try body finally sc.setLocalProperty(tag, "marker")
+      // the listener bus delivers in order: once the marker job's start has
+      // arrived, so has the start of every job the body ran
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.contains("marker")) {
+        assert(System.nanoTime() < deadline, "the marker job never reached the listener")
+        Thread.sleep(5)
+      }
+      (out, seen.asScala.count(_ == "body"))
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a lookup and asMap on the served view start no Spark job") {
+    val serving = new ParquetServing(tempDir("serving-jobs"), viewName = "us_share_holders_jobs")
+    val states = run(Seq(
+      Seq(upsert(0, "a", "T1", "NASDAQ"), upsert(1, "b", "T2", "NASDAQ")),
+      Seq(upsert(2, "a", "T3", "NASDAQ"), tombstone(3, "b", "T2"))), serving)
+    val (rows, lookupJobs) = jobsStartedBy {
+      spark.table(serving.viewName).filter(col("client") === "a")
+        .collect().map(_.getSeq[String](1)).toSeq
+    }
+    assert(rows == Seq(Seq("a:::T1", "a:::T3")))
+    assert(lookupJobs == 0, s"a one-client lookup started $lookupJobs jobs")
+    val (view, mapJobs) = jobsStartedBy(serving.asMap)
+    assert(view == states.last && view == Map("a" -> Seq("a:::T1", "a:::T3")))
+    assert(mapJobs == 0, s"asMap started $mapJobs jobs")
+    // the counter does see a read of the parquet store
+    assert(jobsStartedBy(serving.snapshot(spark).collect())._2 > 0)
+  }
+
+  test("a fresh instance that replays the max batch converges to the uninterrupted one") {
+    val store = tempDir("serving-replay")
+    val checkpoint = tempDir("ktable-replay")
+    val steps = Seq(
+      Seq(upsert(0, "a", "T1", "NASDAQ"), upsert(1, "b", "T2", "NASDAQ")),
+      Seq(tombstone(2, "a", "T1"), upsert(3, "c", "T3", "NASDAQ")),
+      Seq(upsert(4, "b", "T2", "LON"), upsert(5, "c", "T4", "NASDAQ"),
+        upsert(6, "d", "T5", "NASDAQ")))
+    val uninterrupted = new ParquetServing(store)
+    run(steps, uninterrupted, checkpoint)
+    // un-commit the max batch: the restarted query runs it again, as after a
+    // crash between its foreachBatch and its commit
+    val maxBatch = steps.size - 1L
+    Seq(s"commits/$maxBatch", s"commits/.$maxBatch.crc")
+      .foreach(f => Files.deleteIfExists(Paths.get(checkpoint, f)))
+
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val input = MemoryStream[ShareUpdate]
+    steps.foreach(input.addData(_)) // one offset per step, as in the first run
+    val fresh = new ParquetServing(store)
+    val applied = new ConcurrentLinkedQueue[Long]()
+    val q = KTableStream.usShareHolders(spark, input.toDS()).writeStream
+      .outputMode("update")
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (b: Dataset[ClientView], id: Long) =>
+        applied.add(id)
+        fresh.upsertBatch(b, id)
+      }
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    assert(applied.asScala.toSeq == Seq(maxBatch), "only the max batch is replayed")
+    assert(fresh.asMap == uninterrupted.asMap)
+    assert(collected(fresh.snapshot(spark)) == collected(uninterrupted.snapshot(spark)))
+    assert(fresh.asMap == Map("c" -> Seq("c:::T3", "c:::T4"), "d" -> Seq("d:::T5")))
+    assertReadsAgree(fresh)
   }
 
   test("throughput sanity: sustains the self-imposed upsert rate (BASELINE.md)") {

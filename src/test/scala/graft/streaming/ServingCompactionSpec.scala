@@ -15,6 +15,10 @@ class ServingCompactionSpec extends SparkSpec {
     rows.map { case (c, ids, d) => ClientView(c, ids, d) }.toDS()
   }
 
+  /** The view as the parquet store holds it: `asMap` no longer reads it. */
+  private def stored(serving: ParquetServing): Map[String, Seq[String]] =
+    serving.snapshot(spark).collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
+
   private def partitions(dir: String): Seq[Long] = {
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
@@ -38,12 +42,14 @@ class ServingCompactionSpec extends SparkSpec {
     val before = serving.asMap
     assert(before == Map(
       "bob" -> Seq("bob:::MSFT", "bob:::AMZN"), "carol" -> Seq("carol:::NVDA")))
+    assert(stored(serving) == before)
     assert(partitions(dir) == Seq(0L, 1L, 2L, 3L))
 
     serving.compact(spark)
     // batches 0..2 folded into base partition 2; max batch 3 untouched
     assert(partitions(dir) == Seq(2L, 3L))
     assert(serving.asMap == before, "compaction must not change read results")
+    assert(stored(serving) == before, "compaction must not change the stored view")
     // the tombstone survives INSIDE the base (not just by absence)
     val base = spark.read.parquet(dir).where("batch_id = 2")
     assert(base.where("client = 'alice' AND deleted").count() == 1)
@@ -51,14 +57,17 @@ class ServingCompactionSpec extends SparkSpec {
     // restart replay: the max batch re-runs foreachBatch with the same id
     serving.upsertBatch(lastBatch, 3L)
     assert(serving.asMap == before, "replayed max batch must stay idempotent")
+    assert(stored(serving) == before, "replayed max batch must stay idempotent in the store")
 
     // compaction is re-runnable and converges (crash-between-steps recovery)
     serving.compact(spark)
     assert(partitions(dir) == Seq(2L, 3L) && serving.asMap == before)
+    assert(stored(serving) == before)
 
     // life goes on: a later batch deletes and re-adds
     serving.upsertBatch(views(("alice", Seq("alice:::TSLA"), false)), 4L)
     assert(serving.asMap == before + ("alice" -> Seq("alice:::TSLA")))
+    assert(stored(serving) == serving.asMap)
   }
 
   test("auto-compaction keeps the partition count bounded under a stream") {
@@ -71,6 +80,7 @@ class ServingCompactionSpec extends SparkSpec {
     // compactEvery recent ones instead of 7
     assert(partitions(dir).size <= 3, s"got ${partitions(dir)}")
     assert(serving.asMap == (0L to 6L).map(i => s"c$i" -> Seq(s"c$i:::T")).toMap)
+    assert(stored(serving) == serving.asMap)
   }
 
   test("compact is a no-op below three batch partitions") {
@@ -82,5 +92,6 @@ class ServingCompactionSpec extends SparkSpec {
     serving.compact(spark)
     assert(partitions(dir) == Seq(0L, 1L), "nothing worth folding below the max")
     assert(serving.asMap == Map("a" -> Seq("a:::T"), "b" -> Seq("b:::T")))
+    assert(stored(serving) == serving.asMap)
   }
 }
