@@ -4,6 +4,8 @@ import java.net.InetSocketAddress
 import java.net.URLDecoder
 import java.nio.charset.StandardCharsets
 
+import scala.collection.immutable.SortedMap
+
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 /** HTTP ingest/query facade mirroring the reference's API surface
@@ -43,18 +45,60 @@ class HttpFacade(
       URLDecoder.decode(k, "UTF-8") -> URLDecoder.decode(v, "UTF-8")
     }.toMap
 
-  private def jsonStr(s: String): String = {
-    val sb = new StringBuilder("\"")
-    s.foreach {
-      case '\\' => sb.append("\\\\")
-      case '"' => sb.append("\\\"")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < 0x20 => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
+  /** Appends `s` as a JSON string literal. */
+  private def appendJson(sb: java.lang.StringBuilder, s: String): Unit = {
+    sb.append('"')
+    var i = 0
+    while (i < s.length) {
+      s.charAt(i) match {
+        case '\\' => sb.append("\\\\")
+        case '"' => sb.append("\\\"")
+        case '\n' => sb.append("\\n")
+        case '\r' => sb.append("\\r")
+        case '\t' => sb.append("\\t")
+        case c if c < 0x20 =>
+          val hex = Integer.toHexString(c)
+          sb.append("\\u").append("0000", hex.length, 4).append(hex)
+        case c => sb.append(c)
+      }
+      i += 1
     }
-    sb.append("\"").toString
+    sb.append('"')
+  }
+
+  /** The `GET /local-state` body: rows in client order, written into one
+    * builder sized for the common case (no character needs escaping). A map
+    * already sorted by `Ordering.String`, as the served map is, is not
+    * sorted again.
+    */
+  private def renderState(view: Map[String, Seq[String]]): String = {
+    val rows = view match {
+      case sorted: SortedMap[String, Seq[String]] @unchecked if sorted.ordering == Ordering.String => sorted
+      case other => other.toSeq.sortBy(_._1)
+    }
+    var size = 2
+    rows.foreach { case (k, ids) =>
+      size += k.length + 22
+      ids.foreach(id => size += id.length + 3)
+    }
+    val sb = new java.lang.StringBuilder(size)
+    sb.append('[')
+    var first = true
+    rows.foreach { case (k, ids) =>
+      if (!first) sb.append(',')
+      first = false
+      sb.append("{\"key\":")
+      appendJson(sb, k)
+      sb.append(",\"value\":[")
+      var firstId = true
+      ids.foreach { id =>
+        if (!firstId) sb.append(',')
+        firstId = false
+        appendJson(sb, id)
+      }
+      sb.append("]}")
+    }
+    sb.append(']').toString
   }
 
   server.createContext("/set-shares", (ex: HttpExchange) =>
@@ -72,10 +116,7 @@ class HttpFacade(
 
   server.createContext("/local-state", (ex: HttpExchange) =>
     try {
-      val rows = state().toSeq.sortBy(_._1).map { case (k, ids) =>
-        s"""{"key":${jsonStr(k)},"value":${ids.map(jsonStr).mkString("[", ",", "]")}}"""
-      }
-      respond(ex, 200, rows.mkString("[", ",", "]"))
+      respond(ex, 200, renderState(state()))
     } catch {
       case e: Exception => respond(ex, 500, s"error: ${e.getMessage}")
     })

@@ -3,8 +3,10 @@ package graft.streaming
 import scala.collection.immutable.TreeMap
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.graftbridge.TableBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.LatestPerKey
@@ -31,10 +33,13 @@ import KTableStream.ClientView
   *    by batch id with dynamic partition overwrite, so a replayed batch after
   *    restart overwrites its own partition: idempotent exactly-once output.
   *  - Read path: the same rows reach the driver with the write and are
-  *    folded into an immutable client -> ids map, which [[asMap]] returns
-  *    and `viewName` serves as a local relation; a lookup or
-  *    `GET /local-state` starts no Spark job and costs O(live clients), not
-  *    O(batches ever written). The map is bootstrapped once per instance
+  *    folded into an immutable client -> ids map, which [[asMap]] returns.
+  *    `viewName` is registered once as a keyed DataSource V2 table over
+  *    that map ([[ServedTable]]), read whenever a query is planned: a
+  *    one-client lookup is a map get, O(log live clients), planned as a bare
+  *    `LocalTableScan`; neither it nor `GET /local-state` starts a Spark job
+  *    or grows with the batches ever written. The instance that applied the
+  *    latest batch owns `viewName`. The map is bootstrapped once per instance
   *    from the store's latest-per-key, so a new instance over an existing
   *    store (restart) converges, and a replayed batch folds to the same map
   *    because every change row carries the client's whole set. The driver
@@ -54,6 +59,9 @@ class ParquetServing(storeDir: String, val viewName: String = "us_share_holders"
 
   // the served view, sorted by client; null until bootstrapped from the store
   @volatile private var view: TreeMap[String, Seq[String]] = null
+
+  // `viewName`'s table: a keyed read of `view`, set before it is registered
+  private val table = new ServedTable(viewName, () => view)
 
   private def sessionFor(batch: Dataset[ClientView]): SparkSession =
     servingSession
@@ -82,25 +90,37 @@ class ParquetServing(storeDir: String, val viewName: String = "us_share_holders"
     // per partition (never from a failed or duplicate attempt), so `written`
     // holds exactly the rows written. A separate collect would cost a second
     // job per batch (and a persist to keep the plan from running twice).
-    val written = batch.sparkSession.sparkContext.collectionAccumulator[ClientView]
-    batch.mapPartitions(_.map { c => written.add(c); c })(Encoders.product[ClientView])
+    // The rows travel as the plan's own encoded rows (copies, since the
+    // iterator reuses its row), not as deserialized ClientView objects; the
+    // select fixes the field order the fold below decodes.
+    val changeRows = batch.toDF().select("client", "nasdaq_position_ids", "deleted")
+    val written = batch.sparkSession.sparkContext.collectionAccumulator[InternalRow]
+    val rows = changeRows.queryExecution.toRdd.mapPartitions(_.map { r => written.add(r.copy()); r })
+    TableBridge.frame(batch.sparkSession, rows, changeRows.schema)
       .withColumn("batch_id", lit(batchId))
       .write
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id")
       .parquet(storeDir)
-    val changes = written.value.asScala
     // periodic fold: keeps the changelog partition count bounded under a
     // long-running stream. Replay-safe — a replayed batch re-runs its own
     // compact() too, which converges (see compact's invariants).
     if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) compact(session)
-    val after = changes.foldLeft(before) { (m, c) =>
-      if (c.deleted) m - c.client else m.updated(c.client, c.nasdaq_position_ids)
+    val after = written.value.asScala.foldLeft(before) { (m, r) =>
+      val client = r.getUTF8String(0).toString
+      if (r.getBoolean(2)) m - client
+      else {
+        val ids = r.getArray(1)
+        m.updated(client, Vector.tabulate(ids.numElements())(ids.getUTF8String(_).toString))
+      }
     }
     view = after
-    import session.implicits._
-    after.toSeq.toDF("client", "nasdaq_position_ids").createOrReplaceTempView(viewName)
+    // registered once: the table reads `view` whenever a query is planned.
+    // The instance that applied the latest batch owns the name, so another
+    // instance's registration is taken over here.
+    if (!TableBridge.servesView(session, viewName, table))
+      TableBridge.frame(session, table).createOrReplaceTempView(viewName)
   }
 
   /** The served map, bootstrapped once from the store's batches `below`. */

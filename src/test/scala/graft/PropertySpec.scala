@@ -1,8 +1,12 @@
 package graft
 
-import org.scalacheck.{Gen, Prop, Properties}
+import org.apache.spark.sql.functions.col
+import org.scalacheck.{Gen, Prop, Properties, Test}
+import org.scalacheck.util.Pretty
 
 import graft.operators.SetAggregator
+import graft.streaming.KTableStream.ClientView
+import graft.streaming.ParquetServing
 
 /** Pure ScalaCheck laws (no Spark session): the algebra the operators rely on. */
 object AggregatorLaws extends Properties("SetAggregator") {
@@ -127,4 +131,58 @@ object PackingLaws extends Properties("Packing") {
       Prop.throws(classOf[IllegalArgumentException])(
         Packing.packIterator(Iterator(bad), budget).toList)
     }
+}
+
+/** The served view under random whole-set change sequences, applied through
+  * `ParquetServing.upsertBatch` in random batch splits with one batch
+  * replayed under its own id (a crash between `foreachBatch` and the commit):
+  * for every client, the keyed lookup through the view equals `asMap.get`,
+  * the collected `snapshot` row and the fold of the changes.
+  */
+class ServedViewPropertySpec extends SparkSpec {
+  private val universe = (1 to 10).map(i => f"c$i%02d")
+  private val absent = Seq("c00", "c11", "")
+
+  private val change: Gen[ClientView] = for {
+    client <- Gen.oneOf(universe)
+    ids <- Gen.someOf(Seq("AAPL", "MSFT", "GOOG").map(t => s"$client:::$t"))
+  } yield ClientView(client, ids.toSeq.sorted, deleted = ids.isEmpty)
+
+  // a change sequence cut into batches; update mode emits one row per
+  // changed client and batch, the last change in it
+  private val batches: Gen[Seq[Seq[ClientView]]] = for {
+    changes <- Gen.listOf(change).map(_.take(24))
+    nBatches <- Gen.choose(1, 4)
+    cuts <- Gen.listOfN(nBatches - 1, Gen.choose(0, changes.size))
+  } yield {
+    val bounds = 0 +: cuts.sorted :+ changes.size
+    bounds.zip(bounds.tail).map { case (from, to) =>
+      changes.slice(from, to).groupBy(_.client).values.map(_.last).toSeq.sortBy(_.client)
+    }
+  }
+
+  test("keyed lookup == asMap.get == snapshot row for any change sequence, split and replay") {
+    import spark.implicits._
+    val prop = Prop.forAllNoShrink(batches, Gen.choose(0, 3)) { (steps, replayAt) =>
+      val serving = new ParquetServing(tempDir("served-property"), viewName = "served_property")
+      val replayed = replayAt min (steps.size - 1)
+      steps.zipWithIndex.foreach { case (b, id) =>
+        serving.upsertBatch(spark.createDataset(b), id.toLong)
+        if (id == replayed) serving.upsertBatch(spark.createDataset(b), id.toLong)
+      }
+      val expected = steps.flatten.foldLeft(Map.empty[String, Seq[String]]) { (m, c) =>
+        if (c.deleted) m - c.client else m.updated(c.client, c.nasdaq_position_ids)
+      }
+      val store = serving.snapshot(spark).collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
+      val map = serving.asMap
+      val agree = (universe ++ absent).forall { client =>
+        val looked = spark.table(serving.viewName).filter(col("client") === client)
+          .collect().map(_.getSeq[String](1)).toSeq
+        looked == map.get(client).toSeq && looked == store.get(client).toSeq
+      }
+      Prop(map == expected && agree) :| s"batches $steps, replayed $replayed"
+    }
+    val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(20).withWorkers(1), prop)
+    assert(result.passed, Pretty.pretty(result))
+  }
 }

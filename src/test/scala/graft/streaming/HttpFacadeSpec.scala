@@ -86,4 +86,29 @@ class HttpFacadeSpec extends SparkSpec {
       q.stop()
     }
   }
+
+  test("GET /local-state escapes keys and ids byte for byte, sorted or not") {
+    // quote, backslash, tab, U+0001 and non-ASCII (2-, 3- and 4-byte UTF-8)
+    val view = Map(
+      "q\"uote" -> Seq("q\"uote:::A\\B", "q\"uote:::\u0001"),
+      "tab\there" -> Seq("tab\there:::T\r\n"),
+      "ünï" -> Seq("ünï:::€", "ünï:::\uD83D\uDE00"),
+      "a" -> Seq.empty)
+    val expected =
+      """[{"key":"a","value":[]},""" +
+        """{"key":"q\"uote","value":["q\"uote:::A\\B","q\"uote:::""" + "\\u0001" + """"]},""" +
+        """{"key":"tab\there","value":["tab\there:::T\r\n"]},""" +
+        """{"key":"ünï","value":["ünï:::€","ünï:::😀"]}]"""
+    for (state <- Seq(view, scala.collection.immutable.TreeMap.from(view))) {
+      val facade = new HttpFacade(produce = (_, _, _, _) => (), state = () => state)
+      facade.start()
+      try {
+        val bytes = http.send(
+          HttpRequest.newBuilder(URI.create(s"http://localhost:${facade.boundPort}/local-state")).build(),
+          HttpResponse.BodyHandlers.ofByteArray()).body()
+        assert(bytes.sameElements(expected.getBytes(java.nio.charset.StandardCharsets.UTF_8)),
+          new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
+      } finally facade.stop()
+    }
+  }
 }
