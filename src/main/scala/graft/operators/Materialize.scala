@@ -4,10 +4,10 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.DataFrame
 
-/** Uniform eager-materialization barrier for the dedup/serving pipelines.
+/** Uniform eager-materialization barrier for the dedup pipelines.
   *
   * Every multi-consumer intermediate in this library (candidate pair lists,
-  * matched-position remnants, compaction folds) needs an eager barrier so
+  * matched-position remnants) needs an eager barrier so
   * downstream stages don't re-execute the producing pipeline. Two modes:
   *
   *  - '''default''' (`checkpointDir = None`): `localCheckpoint` — blocks in

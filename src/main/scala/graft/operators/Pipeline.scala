@@ -94,6 +94,10 @@ object Pipeline {
     * @param contamination optional PRECOMPUTED
     *   [[Dedup.exactSubstringContamination]] report over (`docs`, `holdout`)
     *   at [[Canonical.contamination]]; when absent the pipeline derives it.
+    *
+    * Injected surfaces are `localCheckpoint`-backed, so neither may be
+    * combined with a `checkpointDir`: the run would silently lose its
+    * executor-loss guarantee on them. That combination is refused.
     */
   def trainingManifest(spark: SparkSession, docs: DataFrame,
                        holdout: DataFrame,
@@ -105,6 +109,9 @@ object Pipeline {
                        pairs: Option[Surface[LshParams, DataFrame]] = None,
                        contamination: Option[Surface[ContaminationParams, DataFrame]] = None)
       : DataFrame = {
+    require(checkpointDir.isEmpty || (pairs.isEmpty && contamination.isEmpty),
+      "trainingManifest: injected pairs/contamination surfaces are localCheckpoint-backed " +
+        "and cannot serve a reliable run (checkpointDir is set)")
     // injected surfaces must have been built at the pipeline's own parameters
     val lsh = Canonical.lsh
     val contam = Canonical.contamination

@@ -890,7 +890,7 @@ object TextAnalysis {
     */
   def reassembleChunks(docs: DataFrame, chunkSize: Int = 64,
                        overlap: Int = 16): DataFrame = {
-    val chunks = chunkCore(docs, chunkSize, overlap, carry = Nil)
+    val chunks = chunkCore(docs, chunkSize, overlap)
     val ctoks = Text.tokens(col("chunk_text"))
     val part = when(col("chunk_idx") === 0, col("chunk_text"))
       .otherwise(array_join(
@@ -1165,7 +1165,7 @@ object TextAnalysis {
   }
 
   def chunkDocuments(docs: DataFrame, chunkSize: Int = 64, overlap: Int = 16): DataFrame =
-    chunkCore(docs, chunkSize, overlap, carry = Nil).orderBy("doc_id", "chunk_idx")
+    chunkCore(docs, chunkSize, overlap).orderBy("doc_id", "chunk_idx")
 
   /** Metadata-only chunk SCHEDULE: the (doc_id, chunk_idx, n_tokens) rows
     * of [[chunkDocuments]] derived from per-document token counts alone —
@@ -1194,30 +1194,24 @@ object TextAnalysis {
         least(lit(chunkSize), col("n") - col("chunk_idx") * step).cast("int").as("n_tokens"))
   }
 
-  /** Sort-free chunking core shared by the batch operator above and the
-    * streaming ingest stage ([[graft.streaming.DocumentIngest.chunked]]) —
-    * a global sort is neither streamable nor needed there. `carry` columns
-    * pass through unchanged onto every chunk row (the streaming stage keeps
-    * the ingest signals alongside each chunk).
+  /** Sort-free chunking core shared by [[chunkDocuments]], which sorts its
+    * output, and [[reassembleChunks]], which needs no global sort.
     */
-  private[graft] def chunkCore(docs: DataFrame, chunkSize: Int, overlap: Int,
-                               carry: Seq[String]): DataFrame = {
+  private def chunkCore(docs: DataFrame, chunkSize: Int, overlap: Int): DataFrame = {
     require(overlap >= 0 && chunkSize > overlap, "need chunkSize > overlap >= 0")
     val step = chunkSize - overlap
-    val carried = carry.map(col)
     docs
-      .select(col("doc_id") +: carried :+ Text.tokens(col("text")).as("toks"): _*)
+      .select(col("doc_id"), Text.tokens(col("text")).as("toks"))
       .withColumn("n", size(col("toks")))
       .filter(col("n") > 0)
       // smallest m with (m-1)*step + chunkSize >= n, at least 1
       .withColumn("nchunks",
         greatest(lit(1), ceil((col("n") - lit(overlap)).cast("double") / step).cast("int")))
-      .select(col("doc_id") +: carried :+ col("toks") :+ col("n") :+
-        explode(sequence(lit(0), col("nchunks") - 1)).as("chunk_idx"): _*)
-      .select(col("doc_id") +: carried :+
-        col("chunk_idx") :+
-        least(lit(chunkSize), col("n") - col("chunk_idx") * step).cast("int").as("n_tokens") :+
+      .select(col("doc_id"), col("toks"), col("n"),
+        explode(sequence(lit(0), col("nchunks") - 1)).as("chunk_idx"))
+      .select(col("doc_id"), col("chunk_idx"),
+        least(lit(chunkSize), col("n") - col("chunk_idx") * step).cast("int").as("n_tokens"),
         array_join(slice(col("toks"), col("chunk_idx") * step + 1, lit(chunkSize)), " ")
-          .as("chunk_text"): _*)
+          .as("chunk_text"))
   }
 }

@@ -7,7 +7,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graftbridge.TableBridge
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.LatestPerKey
 import KTableStream.ClientView
@@ -49,13 +48,7 @@ import KTableStream.ClientView
   * In a deployment with a transactional table format (Delta/Iceberg) the
   * upsert becomes a MERGE; plain parquet keeps this self-contained.
   */
-class ParquetServing(storeDir: String, val viewName: String = "us_share_holders",
-                     compactEvery: Int = 0,
-                     checkpointDir: Option[String] = None) {
-
-  // the session whose catalog serves interactive queries; foreachBatch runs
-  // with a CLONED session, so views registered there would be invisible
-  @volatile private var servingSession: Option[SparkSession] = None
+class ParquetServing(storeDir: String, val viewName: String = "us_share_holders") {
 
   // the served view, sorted by client; null until bootstrapped from the store
   @volatile private var view: TreeMap[String, Seq[String]] = null
@@ -63,25 +56,12 @@ class ParquetServing(storeDir: String, val viewName: String = "us_share_holders"
   // `viewName`'s table: a keyed read of `view`, set before it is registered
   private val table = new ServedTable(viewName, () => view)
 
-  private def sessionFor(batch: Dataset[ClientView]): SparkSession =
-    servingSession
-      .orElse(SparkSession.getDefaultSession)
-      .getOrElse(batch.sparkSession)
-
-  def start(spark: SparkSession, views: Dataset[ClientView], streamCheckpoint: String): StreamingQuery = {
-    servingSession = Some(spark)
-    views.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", streamCheckpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[ClientView], batchId: Long) => upsertBatch(batch, batchId) }
-      .queryName(viewName)
-      .start()
-  }
-
   /** Apply one micro-batch of view changes (idempotent per (key, batch)). */
   def upsertBatch(batch: Dataset[ClientView], batchId: Long): Unit = {
-    val session = sessionFor(batch)
+    // the session whose catalog serves interactive queries: the default one,
+    // since foreachBatch runs with a CLONED session whose views would be
+    // invisible to it; the batch's own only when no default is set
+    val session = SparkSession.getDefaultSession.getOrElse(batch.sparkSession)
     // bootstrapped from the batches BELOW this one, so a replayed batch's
     // stale partition never reaches the map (and a fresh store reads nothing)
     val before = served(session, below = Some(batchId))
@@ -103,10 +83,6 @@ class ParquetServing(storeDir: String, val viewName: String = "us_share_holders"
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id")
       .parquet(storeDir)
-    // periodic fold: keeps the changelog partition count bounded under a
-    // long-running stream. Replay-safe — a replayed batch re-runs its own
-    // compact() too, which converges (see compact's invariants).
-    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) compact(session)
     val after = written.value.asScala.foldLeft(before) { (m, r) =>
       val client = r.getUTF8String(0).toString
       if (r.getBoolean(2)) m - client
@@ -135,9 +111,9 @@ class ParquetServing(storeDir: String, val viewName: String = "us_share_holders"
   }
 
   /** The complete materialized view as the durable changelog holds it: a
-    * distributed latest-per-key over every batch partition, O(history) until
-    * [[compact]] folds it. It bootstraps the served map and checks it;
-    * interactive reads go through [[asMap]] / `viewName`.
+    * distributed latest-per-key over every batch partition, O(history). It
+    * bootstraps the served map and checks it; interactive reads go through
+    * [[asMap]] / `viewName`.
     */
   def snapshot(spark: SparkSession): DataFrame = latest(spark, below = None)
 
@@ -174,67 +150,5 @@ class ParquetServing(storeDir: String, val viewName: String = "us_share_holders"
     * last applied batch; starts no Spark job once bootstrapped.
     */
   def asMap: Map[String, Seq[String]] =
-    served(servingSession.orElse(SparkSession.getDefaultSession).get, below = None)
-
-  /** Periodic changelog compaction: fold old batch partitions into a single
-    * base partition so the store's disk use and its latest-per-key
-    * ([[snapshot]], and with it a restart's bootstrap) scan O(base + recent)
-    * instead of O(all batches ever). Reads never scan the store, and their
-    * results are unchanged.
-    *
-    * Safety invariants:
-    *  - Only batches STRICTLY BELOW the current max are folded. The max
-    *    batch is the one batch a restart can replay (its `foreachBatch` ran
-    *    but the stream checkpoint may not have committed); every batch below
-    *    it must have committed for the max to have run at all. Leaving the
-    *    max partition untouched keeps replay-overwrites-its-own-partition
-    *    idempotency intact.
-    *  - The base RETAINS tombstone rows (`deleted = true`): dropping them
-    *    would let a replayed pre-compaction upsert resurrect a deleted key.
-    *  - The base is stamped with the MAX FOLDED batch id, so at read time it
-    *    supersedes every folded partition per key (`max_by` on batch_id) —
-    *    a crash between the base write and the partition deletes just leaves
-    *    redundant rows that the next compact() sweeps; re-running converges.
-    */
-  def compact(spark: SparkSession): Unit = {
-    val path = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(path)) return
-    val batchIds = fs.listStatus(path).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("batch_id=") => n.stripPrefix("batch_id=").toLong }
-      .sorted
-    if (batchIds.size < 3) return // nothing worth folding below the max
-    val maxBatch = batchIds.last
-    val baseId = batchIds.init.last // max folded id = the base partition
-    // materialize BEFORE writing: the write overwrites partitions the plan
-    // reads from. localCheckpoint by default; the constructor's
-    // checkpointDir switches to the executor-loss-safe parquet barrier
-    // (graft.operators.Materialize) for long-running cluster streams — a
-    // lost executor between here and the write would otherwise kill the
-    // stream mid-compaction.
-    val foldedPlan = LatestPerKey(
-        spark.read.parquet(storeDir).filter(col("batch_id") < lit(maxBatch)),
-        keys = Seq("client"), ordering = Seq("batch_id"))
-      .withColumn("batch_id", lit(baseId))
-    // capture the reliable path so it can be deleted below: the folded frame
-    // is fully consumed by the write inside this method, and a long-running
-    // stream compacts indefinitely — leaking one barrier dir per compaction
-    // would grow checkpointDir without bound
-    val (folded, barrierPath) = checkpointDir match {
-      case Some(dir) =>
-        val (f, p) = graft.operators.Materialize.reliable(foldedPlan, dir)
-        (f, Some(p))
-      case None => (foldedPlan.localCheckpoint(), None)
-    }
-    folded.write
-      .mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(storeDir)
-    barrierPath.foreach(graft.operators.Materialize.delete(folded, _))
-    batchIds.filter(_ < baseId).foreach { id =>
-      fs.delete(new org.apache.hadoop.fs.Path(path, s"batch_id=$id"), true)
-    }
-  }
+    served(SparkSession.getDefaultSession.get, below = None)
 }

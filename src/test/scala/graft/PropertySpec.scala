@@ -4,27 +4,13 @@ import org.apache.spark.sql.functions.col
 import org.scalacheck.{Gen, Prop, Properties, Test}
 import org.scalacheck.util.Pretty
 
-import graft.operators.SetAggregator
 import graft.streaming.KTableStream.ClientView
 import graft.streaming.ParquetServing
 
-/** Pure ScalaCheck laws (no Spark session): the algebra the operators rely on. */
-object AggregatorLaws extends Properties("SetAggregator") {
-
-  private val ids = Gen.listOf(Gen.oneOf((1 to 40).map(i => s"id$i")))
-
-  property("reduce-fold equals sorted distinct") = Prop.forAll(ids) { xs =>
-    xs.foldLeft(SetAggregator.zero)(SetAggregator.reduce) == xs.toSet &&
-      SetAggregator.finish(xs.toSet) == xs.distinct.sorted
-  }
-
-  property("merge is commutative and associative (shuffle-order independence)") =
-    Prop.forAll(ids, ids, ids) { (a, b, c) =>
-      val (sa, sb, sc) = (a.toSet, b.toSet, c.toSet)
-      SetAggregator.merge(sa, sb) == SetAggregator.merge(sb, sa) &&
-        SetAggregator.merge(SetAggregator.merge(sa, sb), sc) ==
-          SetAggregator.merge(sa, SetAggregator.merge(sb, sc))
-    }
+/** Pure ScalaCheck laws (no Spark session): the random-hyperplane signs
+  * the LSH operators rely on.
+  */
+object SimilarityLaws extends Properties("Similarity") {
 
   property("hyperplane signs are deterministic ±1") =
     Prop.forAll(Gen.choose(0, 63), Gen.choose(0, 127)) { (i, d) =>

@@ -137,30 +137,4 @@ class ReliableCheckpointSpec extends SparkSpec {
     assert(left.nonEmpty, "reliable mode wrote no barrier files at all")
   }
 
-  test("ParquetServing.compact: reliable mode folds identically") {
-    import spark.implicits._
-    import graft.streaming.{KTableStream, ParquetServing}
-    def run(ckpt: Option[String]): Map[String, Seq[String]] = {
-      val store = tempDir("serving-rel")
-      val serving = new ParquetServing(store, viewName = "rel_compact_view",
-        checkpointDir = ckpt)
-      serving.upsertBatch(Seq(
-        KTableStream.ClientView("alice", Seq("alice:::AAPL"), deleted = false)).toDS(), 0L)
-      serving.upsertBatch(Seq(
-        KTableStream.ClientView("alice", Seq.empty, deleted = true)).toDS(), 1L)
-      serving.upsertBatch(Seq(
-        KTableStream.ClientView("bob", Seq("bob:::MSFT"), deleted = false)).toDS(), 2L)
-      serving.upsertBatch(Seq(
-        KTableStream.ClientView("carol", Seq("carol:::NVDA"), deleted = false)).toDS(), 3L)
-      serving.compact(spark)
-      serving.asMap
-    }
-    val dir = tempDir("graft-rel-serving")
-    assert(run(Some(dir)) == run(None))
-    // round 9: compact() deletes its barrier once the folded write lands —
-    // the frame is fully consumed inside the method, and a long-running
-    // stream compacts indefinitely, so leftover dirs would grow unboundedly
-    assert(barrierDirs(dir).isEmpty,
-      s"compact leaked barrier dirs: ${barrierDirs(dir)}")
-  }
 }

@@ -1615,35 +1615,14 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
     // the hot source must SPREAD: with AQE's small-partition coalescing off
     // (test scale makes every partition tiny), the heaviest shuffle-read
     // stage — the (source, bucket) running-sum window — must land on >1 task
-    val byStage = scala.collection.concurrent.TrieMap[
-      Int, scala.collection.mutable.ArrayBuffer[Long]]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null && m.shuffleReadMetrics.recordsRead > 0)
-          byStage.getOrElseUpdate(t.stageId,
-            scala.collection.mutable.ArrayBuffer()) += m.shuffleReadMetrics.recordsRead
-      }
-    }
     val conf = spark.conf
     val oldCoalesce = conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true")
     conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      Sampling.tokenBudgetPerSource(corpus(20000), "doc_id", "source", "text",
-        budget(20000)).count()
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (byStage.isEmpty && System.nanoTime() < deadline) Thread.sleep(100)
-      var last = -1; var same = 0
-      while (same < 3) {
-        Thread.sleep(100)
-        val c = byStage.values.map(_.size).sum
-        if (c == last) same += 1 else { same = 0; last = c }
-      }
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      conf.set("spark.sql.adaptive.coalescePartitions.enabled", oldCoalesce)
-    }
+    val byStage =
+      try SparkSpec.shuffleReadsBy(spark) {
+        Sampling.tokenBudgetPerSource(corpus(20000), "doc_id", "source", "text",
+          budget(20000)).count()
+      } finally conf.set("spark.sql.adaptive.coalescePartitions.enabled", oldCoalesce)
     assert(byStage.nonEmpty, "no shuffle-read metrics captured")
     val heaviest = byStage.values.maxBy(_.sum)
     assert(heaviest.size >= 3,
@@ -1703,34 +1682,13 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
         s"n=$n: bucketed result diverged from the single-window reference")
     }
     // the constant-quality corpus must SPREAD across tasks
-    val byStage = scala.collection.concurrent.TrieMap[
-      Int, scala.collection.mutable.ArrayBuffer[Long]]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null && m.shuffleReadMetrics.recordsRead > 0)
-          byStage.getOrElseUpdate(t.stageId,
-            scala.collection.mutable.ArrayBuffer()) += m.shuffleReadMetrics.recordsRead
-      }
-    }
     val conf = spark.conf
     val oldCoalesce = conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true")
     conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      Sampling.qualityTokenBudget(corpus(20000), budget(20000)).count()
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (byStage.isEmpty && System.nanoTime() < deadline) Thread.sleep(100)
-      var last = -1; var same = 0
-      while (same < 3) {
-        Thread.sleep(100)
-        val c = byStage.values.map(_.size).sum
-        if (c == last) same += 1 else { same = 0; last = c }
-      }
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      conf.set("spark.sql.adaptive.coalescePartitions.enabled", oldCoalesce)
-    }
+    val byStage =
+      try SparkSpec.shuffleReadsBy(spark) {
+        Sampling.qualityTokenBudget(corpus(20000), budget(20000)).count()
+      } finally conf.set("spark.sql.adaptive.coalescePartitions.enabled", oldCoalesce)
     assert(byStage.nonEmpty, "no shuffle-read metrics captured")
     val heaviest = byStage.values.maxBy(_.sum)
     assert(heaviest.size >= 3,

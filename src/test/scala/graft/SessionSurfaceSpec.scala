@@ -55,6 +55,22 @@ class SessionSurfaceSpec extends SparkSpec {
     assert(msg.contains("trainingManifest"), msg)
   }
 
+  test("trainingManifest refuses injected surfaces in reliable-checkpoint mode") {
+    import spark.implicits._
+    // built at the canonical parameters, so only the checkpointDir is at fault
+    val pairs = Surface.build(Canonical.lsh)(_ =>
+      Seq.empty[(Long, Long, Double)].toDF("doc_a", "doc_b", "jaccard"))
+    val report = Surface.build(Canonical.contamination)(_ =>
+      Seq.empty[(Long, Int)].toDF("doc_id", "longest_span"))
+    val holdout = Canonical.quotingHoldout(docs)
+    val reliable = Some(tempDir("manifest-reliable"))
+    val msg = refused(Pipeline.trainingManifest(spark, docs, holdout,
+      checkpointDir = reliable, pairs = Some(pairs)))
+    assert(msg.contains("trainingManifest") && msg.contains("checkpointDir"), msg)
+    refused(Pipeline.trainingManifest(spark, docs, holdout,
+      checkpointDir = reliable, contamination = Some(report)))
+  }
+
   test("Lloyd and IVF+PQ consumers refuse centroids trained at other rounds") {
     val cents = Surface.build(LloydParams(nlist = 4, iters = 4))(p =>
       Similarity.lloydCentroidsLocalValues(emb, p.nlist, p.iters))

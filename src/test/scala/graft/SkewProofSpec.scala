@@ -1,9 +1,5 @@
 package graft
 
-import scala.collection.concurrent.TrieMap
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 import graft.operators.SkewJoin
@@ -18,38 +14,14 @@ import graft.operators.SkewJoin
   */
 class SkewProofSpec extends SparkSpec {
 
-  private class ShuffleReadListener extends SparkListener {
-    val byStage = TrieMap[Int, ArrayBuffer[Long]]()
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null && m.shuffleReadMetrics.recordsRead > 0)
-        byStage.getOrElseUpdate(t.stageId, ArrayBuffer()) +=
-          m.shuffleReadMetrics.recordsRead
-    }
-  }
-
   /** max/median shuffle-read records across tasks of the heaviest-read
     * stage (= the join stage on these plans).
     */
   private def skewRatio(run: => Unit): (Double, Long, Long) = {
-    val l = new ShuffleReadListener
-    spark.sparkContext.addSparkListener(l)
-    try {
-      run
-      // listener events are delivered async: first wait for ANY metric to
-      // arrive (bounded), then for the counts to settle
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (l.byStage.isEmpty && System.nanoTime() < deadline) Thread.sleep(100)
-      var last = -1; var same = 0
-      while (same < 3) {
-        Thread.sleep(100)
-        val n = l.byStage.values.map(_.size).sum
-        if (n == last) same += 1 else { same = 0; last = n }
-      }
-    } finally spark.sparkContext.removeSparkListener(l)
-    assert(l.byStage.nonEmpty,
+    val byStage = SparkSpec.shuffleReadsBy(spark)(run)
+    assert(byStage.nonEmpty,
       "no shuffle-read task metrics captured — listener events lost or the plan had no shuffle")
-    val tasks = l.byStage.values.maxBy(_.sum).toSeq.sorted
+    val tasks = byStage.values.maxBy(_.sum).sorted
     val max = tasks.last
     val median = tasks(tasks.size / 2)
     (max.toDouble / median, max, median)

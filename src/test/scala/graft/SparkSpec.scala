@@ -2,9 +2,10 @@ package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -40,5 +41,38 @@ trait SparkSpec extends AnyFunSuite with TempDirs {
       sc.setLocalProperty(tag, null)
       sc.removeSparkListener(listener)
     }
+  }
+}
+
+object SparkSpec {
+  /** Runs `body` and returns, per stage, the shuffle records each task read,
+    * for every task on `spark`'s context that read any.
+    */
+  def shuffleReadsBy(spark: SparkSession)(body: => Any): Map[Int, Seq[Long]] = {
+    val byStage = TrieMap[Int, ConcurrentLinkedQueue[Long]]()
+    val listener = new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+        val m = t.taskMetrics
+        if (m != null && m.shuffleReadMetrics.recordsRead > 0)
+          byStage.getOrElseUpdate(t.stageId, new ConcurrentLinkedQueue[Long]())
+            .add(m.shuffleReadMetrics.recordsRead)
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      // listener events are delivered async: first wait for ANY metric to
+      // arrive (bounded), then for the counts to settle
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (byStage.isEmpty && System.nanoTime() < deadline) Thread.sleep(100)
+      var last = -1; var same = 0
+      while (same < 3) {
+        Thread.sleep(100)
+        val n = byStage.values.map(_.size).sum
+        if (n == last) same += 1 else { same = 0; last = n }
+      }
+    } finally sc.removeSparkListener(listener)
+    byStage.map { case (stage, reads) => stage -> reads.asScala.toSeq }.toMap
   }
 }

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Dataset, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
@@ -159,29 +160,30 @@ class KafkaChangelogSpec extends SparkSpec {
       ("kima:::MSFT", Some(valueJson("kima", "MSFT", "NASDAQ", 45)), 2L),
       ("daniel:::AAPL", None, 3L))) // tombstone: daniel's NASDAQ set empties
 
-    val rawStream = spark.readStream.schema(schema).parquet(srcDir)
-    val updates = KafkaChangelog.parse(spark, rawStream) // the production parse
-    val views = KTableStream.usShareHolders(spark, updates)
-    val serving = new ParquetServing(
-      tempDir("changelog-store"),
-      viewName = "us_share_holders_file_e2e")
-    val q = serving.start(spark,
-      views, tempDir("changelog-ckpt"))
-    q.awaitTermination()
+    // each run drains the source dir once into a fresh store
+    def serve(name: String): ParquetServing = {
+      val serving = new ParquetServing(tempDir(s"$name-store"), viewName = s"us_share_holders_$name")
+      val rawStream = spark.readStream.schema(schema).parquet(srcDir)
+      val updates = KafkaChangelog.parse(spark, rawStream) // the production parse
+      KTableStream.usShareHolders(spark, updates)
+        .writeStream
+        .outputMode("update")
+        .option("checkpointLocation", tempDir(s"$name-ckpt"))
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (b: Dataset[KTableStream.ClientView], id: Long) => serving.upsertBatch(b, id) }
+        .start()
+        .awaitTermination()
+      serving
+    }
+
+    val serving = serve("file_e2e")
     assert(serving.asMap == Map("kima" -> Seq("kima:::MSFT")))
 
     // a second changelog file lands later: a fresh run over the same source
     // dir replays the full (now longer) changelog into a fresh store
     writeBatchFile(Seq(
       ("daniel:::AAPL", Some(valueJson("daniel", "AAPL", "NASDAQ", 7)), 4L)))
-    val serving2 = new ParquetServing(
-      tempDir("changelog-store2"),
-      viewName = "us_share_holders_file_e2e2")
-    val q2 = serving2.start(spark,
-      KTableStream.usShareHolders(spark,
-        KafkaChangelog.parse(spark, spark.readStream.schema(schema).parquet(srcDir))),
-      tempDir("changelog-ckpt2"))
-    q2.awaitTermination()
+    val serving2 = serve("file_e2e2")
     assert(serving2.asMap == Map(
       "daniel" -> Seq("daniel:::AAPL"), "kima" -> Seq("kima:::MSFT")))
   }
