@@ -588,8 +588,7 @@ object ExtensionQueries {
       // sketch-quality audit: signature-agreement estimate vs exact Jaccard
       // per verified LSH pair, error in exact integer ppm; shared pairs
       Dedup.minHashEstimateAudit(docs(s, dir), lshPairs(s, dir).value,
-        "doc_id", "text", k = Canonical.lsh.k, numPerm = Canonical.lsh.numPerm,
-        hashFn = graft.functions.Hashing.hash60)),
+        "doc_id", "text", k = Canonical.lsh.k, numPerm = Canonical.lsh.numPerm)),
     "text_mislabel_rate" -> ((s, dir) =>
       // per-source declared-vs-NB-predicted disagreement (mislabeled dump /
       // language-mixing source detector)

@@ -19,13 +19,38 @@ object Verify {
     }
   }
 
+  private val usage = "usage: graft.Verify <sfDir> <outDir> [query,query,...]"
+
+  /** `(sfDir, outDir, subset)` from the command line, or why it is rejected:
+    * a wrong argument count, or a subset name that is not in `known`. The
+    * optional third argument is a comma-separated query subset for fast
+    * local re-verification of just-touched operators; without it the whole
+    * surface runs.
+    */
+  def parseArgs(args: Array[String],
+                known: Set[String]): Either[String, (String, String, Option[Set[String]])] =
+    args match {
+      case Array(s, o) => Right((s, o, None))
+      case Array(s, o, q) =>
+        val only = q.split(",", -1).toSet
+        val unknown = only -- known
+        if (unknown.isEmpty) Right((s, o, Some(only)))
+        else Left(s"unknown queries ${unknown.toSeq.sorted.map(n => s"'$n'").mkString(", ")}")
+      case _ => Left(s"expected 2 or 3 arguments, got ${args.length}")
+    }
+
+  /** The oracle entries written to `oracle_sql.json`: every entry, or only
+    * the subset's, so a subset run reports no other query as missing.
+    */
+  def oracleFor(oracle: Map[String, String], only: Option[Set[String]]): Map[String, String] =
+    only.fold(oracle)(names => oracle.filter { case (name, _) => names.contains(name) })
+
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg: comma-separated query subset for fast local
-    // re-verification of just-touched operators (the driver always passes
-    // exactly two args and gets the full surface)
-    val (sfDir, outDir, only) = args match {
-      case Array(s, o)    => (s, o, None)
-      case Array(s, o, q) => (s, o, Some(q.split(",").toSet))
+    val (sfDir, outDir, only) = parseArgs(args, SparkEntry.queries.keySet) match {
+      case Right(parsed) => parsed
+      case Left(error) =>
+        System.err.println(s"VERIFY ERROR: $error\n$usage")
+        sys.exit(2)
     }
     val spark = Graft.session("graft-verify")
     new java.io.File(outDir).mkdirs()
@@ -97,7 +122,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = oracleFor(SparkEntry.oracleSql, only)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // machine-written surface manifest: the declared/oracle counts README

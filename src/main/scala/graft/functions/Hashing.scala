@@ -5,15 +5,10 @@ import org.apache.spark.sql.functions._
 
 /** Hashing utilities shared by the dedup / fingerprint operators.
   *
-  * Two families:
-  *
-  *  - [[hash60]]: 60-bit hash derived from MD5 (first 15 hex chars). MD5 is
-  *    standardized, so DuckDB computes the identical value
-  *    (`CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)`) — this is what makes
-  *    MinHash/SimHash results oracle-checkable across engines.
-  *  - [[fastHash64]]: xxhash64 — the 100 TB fast path (codegen'd, no MD5
-  *    cost). Same operator semantics, different (non-portable) hash values;
-  *    use when cross-engine reproducibility is not required.
+  * [[hash60]] is a 60-bit hash derived from MD5 (first 15 hex chars). MD5 is
+  * standardized, so DuckDB computes the identical value
+  * (`CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)`) — this is what makes
+  * MinHash/SimHash results oracle-checkable across engines.
   */
 object Hashing {
   /** Mersenne prime 2^31 - 1; all MinHash arithmetic is mod this. */
@@ -26,8 +21,6 @@ object Hashing {
     */
   def hash60Composed(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
-
-  def fastHash64(c: Column): Column = xxhash64(c)
 
   /** MinHash permutation constants: h_i(x) = (a_i * x + b_i) mod P. Fixed,
     * documented values so both engines generate identical signatures.

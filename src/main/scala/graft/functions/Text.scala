@@ -26,10 +26,6 @@ object Text {
         i => concat_ws(" ", slice(toks, i, lit(k)))))
       .otherwise(array().cast("array<string>"))
 
-  /** Distinct word k-shingles (set semantics for Jaccard). */
-  def shingleSet(text: Column, k: Int): Column =
-    array_distinct(wordShingles(tokens(text), k))
-
   /** Tiny per-language stopword profiles for the n-gram/stopword language-ID
     * heuristic. Deliberately small and fixed: the point is the *operator*
     * (scoring + argmax at scale), not lexical coverage.

@@ -18,9 +18,8 @@ import graft.functions.{Hashing, Text}
   *  - MinHash/SimHash signatures are ONE imperative aggregate each
   *    (graft.plans.MinHashSignature / SimHashAggregate) with map-side partial
   *    merge, so each document's shingles collapse before the exchange.
-  *  - With [[graft.functions.Hashing.hash60]] the whole pipeline is
-  *    reproducible in DuckDB (MD5 is portable); swap in `fastHash64` for
-  *    xxhash64 when cross-engine parity is not needed.
+  *  - Every shingle and token hash is [[graft.functions.Hashing.hash60]], so
+  *    the whole pipeline is reproducible in DuckDB (MD5 is portable).
   */
 object Dedup {
 
@@ -33,9 +32,6 @@ object Dedup {
       .select("canonical_id", "dup_count")
       .orderBy("canonical_id")
 
-  private def spread(df: DataFrame, byCol: String): DataFrame =
-    PartitionUtil.spread(df, byCol)
-
   /** Distinct (doc_id, h) shingle-hash pairs, already exploded.
     *
     * Shingles are built with posexplode + `lead()` windows rather than
@@ -44,9 +40,8 @@ object Dedup {
     * which tokenize/lead/concat/md5 all stay in codegen. The window sort is
     * per-document on the already-spread exchange.
     */
-  private def shingleHashesRaw(df0: DataFrame, idCol: String, textCol: String, k: Int,
-                               hashFn: Column => Column): DataFrame =
-    shingleHashesPositional(df0, idCol, textCol, k, hashFn).drop("pos")
+  private def shingleHashesRaw(df0: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
+    shingleHashesPositional(df0, idCol, textCol, k).drop("pos")
 
   /** Positional shingles WITH the shingle text: (doc_id, pos, g). Only for
     * small frames (benchmark holdouts) or remnant re-derivation — the
@@ -65,7 +60,7 @@ object Dedup {
     // bounds filter pos <= size-k matches the old lead-not-null condition.
     // Measured at sf0.1: dedup_exact_substring 2.5 -> 1.9 s (the index build
     // is its floor), with every shingle consumer sharing the win.
-    spread(df0, idCol)
+    PartitionUtil.spread(df0, idCol)
       .select(col(idCol).as("doc_id"), Text.tokens(col(textCol)).as("toks"))
       .select(col("doc_id"), col("toks"), posexplode(col("toks")).as(Seq("pos", "t")))
       .filter(col("pos") <= size(col("toks")) - k)
@@ -77,14 +72,12 @@ object Dedup {
     * the span-level operators need to know WHERE a match sits to stitch
     * consecutive matched k-grams into maximal verbatim runs.
     */
-  private def shingleHashesPositional(df0: DataFrame, idCol: String, textCol: String, k: Int,
-                                      hashFn: Column => Column): DataFrame =
+  private def shingleHashesPositional(df0: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
     shingleTextPositional(df0, idCol, textCol, k)
-      .select(col("doc_id"), col("pos"), hashFn(col("g")).as("h"))
+      .select(col("doc_id"), col("pos"), Hashing.hash60(col("g")).as("h"))
 
-  private def shingleHashesExploded(df0: DataFrame, idCol: String, textCol: String, k: Int,
-                                    hashFn: Column => Column): DataFrame =
-    shingleHashesRaw(df0, idCol, textCol, k, hashFn).distinct()
+  private def shingleHashesExploded(df0: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
+    shingleHashesRaw(df0, idCol, textCol, k).distinct()
 
   /** Persist-lifecycle bracket for the exploded shingle index.
     *
@@ -154,19 +147,18 @@ object Dedup {
     * distinct shared shingles (n_hits), ordered by doc id.
     */
   def contaminationReport(train: DataFrame, holdout: DataFrame,
-                          idCol: String, textCol: String, k: Int = 5,
-                          hashFn: Column => Column = Hashing.hash60): DataFrame = {
+                          idCol: String, textCol: String, k: Int = 5): DataFrame = {
     // holdout is a benchmark set — tiny by definition at any scale. One
     // distinct over bare hashes (no per-doc distinct needed: membership is
     // all the train side asks), then an EXPLICIT broadcast so the big train
     // side is filtered with zero shuffle — not left to AQE runtime conversion.
-    val holdSh = shingleHashesRaw(holdout, idCol, textCol, k, hashFn)
+    val holdSh = shingleHashesRaw(holdout, idCol, textCol, k)
       .select(col("h")).distinct()
     // train side stays RAW: the broadcast join discards the overwhelming
     // majority of shingle occurrences before any exchange, so deduplicating
     // (doc_id, h) moves from a full-corpus shuffle to count(DISTINCT h) over
     // only the contaminated remnant.
-    shingleHashesRaw(train, idCol, textCol, k, hashFn)
+    shingleHashesRaw(train, idCol, textCol, k)
       .join(broadcast(holdSh), "h")
       .groupBy(col("doc_id"))
       .agg(countDistinct(col("h")).as("n_hits"))
@@ -184,11 +176,10 @@ object Dedup {
     * integer per-mille (floor) so both engines agree exactly.
     */
   def contaminationOverlap(train: DataFrame, holdout: DataFrame,
-                           idCol: String, textCol: String, k: Int = 5,
-                           hashFn: Column => Column = Hashing.hash60): DataFrame = {
-    val holdSh = shingleHashesRaw(holdout, idCol, textCol, k, hashFn)
+                           idCol: String, textCol: String, k: Int = 5): DataFrame = {
+    val holdSh = shingleHashesRaw(holdout, idCol, textCol, k)
       .select(col("h")).distinct().withColumn("hit", lit(1))
-    shingleHashesExploded(train, idCol, textCol, k, hashFn)
+    shingleHashesExploded(train, idCol, textCol, k)
       .join(broadcast(holdSh), Seq("h"), "left")
       .groupBy(col("doc_id"))
       .agg(
@@ -231,11 +222,10 @@ object Dedup {
     */
   def exactSubstringContamination(train: DataFrame, holdout: DataFrame,
                                   idCol: String, textCol: String, n: Int = 13,
-                                  hashFn: Column => Column = Hashing.hash60,
                                   materialize: Boolean = true,
                                   checkpointDir: Option[String] = None): DataFrame =
-    contaminationWithIndex(train, holdoutGramIndex(holdout, idCol, textCol, n, hashFn),
-      idCol, textCol, n, hashFn, materialize, checkpointDir)
+    contaminationWithIndex(train, holdoutGramIndex(holdout, idCol, textCol, n),
+      idCol, textCol, n, materialize, checkpointDir)
 
   /** The positional holdout n-gram index `(hold_id, hpos, hg, h)` — the
     * benchmark-registry artifact the decontamination serves from.
@@ -243,11 +233,10 @@ object Dedup {
     * alongside the hash costs nothing and enables exact verify.
     */
   private def holdoutGramIndex(holdout: DataFrame, idCol: String,
-                               textCol: String, n: Int,
-                               hashFn: Column => Column): DataFrame =
+                               textCol: String, n: Int): DataFrame =
     shingleTextPositional(holdout, idCol, textCol, n)
       .select(col("doc_id").as("hold_id"), col("pos").as("hpos"), col("g").as("hg"))
-      .withColumn("h", hashFn(col("hg")))
+      .withColumn("h", Hashing.hash60(col("hg")))
 
   /** Persist the holdout n-gram index as parquet — the build-once half of
     * STORED decontamination, the same registry pattern as `bpeStore`/
@@ -258,9 +247,8 @@ object Dedup {
     * version). The index is bounded by the benchmark suite size.
     */
   def holdoutIndexStore(holdout: DataFrame, dir: String, idCol: String,
-                        textCol: String, n: Int = 13,
-                        hashFn: Column => Column = Hashing.hash60): Unit =
-    holdoutGramIndex(holdout, idCol, textCol, n, hashFn)
+                        textCol: String, n: Int = 13): Unit =
+    holdoutGramIndex(holdout, idCol, textCol, n)
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/grams")
 
   /** Lee-et-al exact-substring decontamination against a STORED holdout
@@ -273,11 +261,10 @@ object Dedup {
   def decontaminateStored(spark: org.apache.spark.sql.SparkSession, dir: String,
                           train: DataFrame, idCol: String, textCol: String,
                           n: Int = 13,
-                          hashFn: Column => Column = Hashing.hash60,
                           materialize: Boolean = true,
                           checkpointDir: Option[String] = None): DataFrame =
     contaminationWithIndex(train, spark.read.parquet(s"$dir/grams"),
-      idCol, textCol, n, hashFn, materialize, checkpointDir)
+      idCol, textCol, n, materialize, checkpointDir)
 
   /** The shared decontamination body: candidate join against a (broadcast)
     * positional holdout index, exact-text verification over the remnant,
@@ -285,14 +272,13 @@ object Dedup {
     */
   private def contaminationWithIndex(train: DataFrame, holdSh: DataFrame,
                                      idCol: String, textCol: String, n: Int,
-                                     hashFn: Column => Column,
                                      materialize: Boolean,
                                      checkpointDir: Option[String]): DataFrame = {
     // materialized: the matched remnant feeds the remnant-id derivation,
     // the text verify, and two aggregations — left lazy, the corpus scan
     // re-executes per consumer (materialize=false keeps the raw dataflow
     // for plan-shape assertions)
-    val hashMatched0 = shingleHashesPositional(train, idCol, textCol, n, hashFn)
+    val hashMatched0 = shingleHashesPositional(train, idCol, textCol, n)
       .join(broadcast(holdSh), "h")
       .select("doc_id", "pos", "hold_id", "hpos", "hg")
     val hashMatched =
@@ -384,15 +370,14 @@ object Dedup {
     */
   def substringMatchedQuads(df: DataFrame, idCol: String, textCol: String,
                             n: Int = 13, maxDf: Int = 50,
-                            hashFn: Column => Column = Hashing.hash60,
                             materialize: Boolean = true,
                             checkpointDir: Option[String] = None): DataFrame =
     if (!materialize)
       verifiedSubstringMatches(df,
-        shingleHashesPositional(df, idCol, textCol, n, hashFn),
+        shingleHashesPositional(df, idCol, textCol, n),
         idCol, textCol, n, maxDf)
     else {
-      val pos = shingleHashesPositional(df, idCol, textCol, n, hashFn).persist()
+      val pos = shingleHashesPositional(df, idCol, textCol, n).persist()
       pos.count() // barrier: df-cap pass + both self-join sides share it
       // safe to unpersist BEFORE the caller's action: the barrier is eager
       // and the returned frame reads only its blocks
@@ -404,7 +389,6 @@ object Dedup {
 
   def exactSubstringPairs(df: DataFrame, idCol: String, textCol: String,
                           n: Int = 13, maxDf: Int = 50,
-                          hashFn: Column => Column = Hashing.hash60,
                           materialize: Boolean = true,
                           checkpointDir: Option[String] = None,
                           matched: Option[Surface[SubstringParams, DataFrame]] = None): DataFrame = {
@@ -413,7 +397,7 @@ object Dedup {
     // path; when absent the operator builds its own.
     val matchedDf = matched
       .map(_.servedTo(SubstringParams(n, maxDf), "exactSubstringPairs"))
-      .getOrElse(substringMatchedQuads(df, idCol, textCol, n, maxDf, hashFn,
+      .getOrElse(substringMatchedQuads(df, idCol, textCol, n, maxDf,
         materialize, checkpointDir))
     // gaps-and-islands along each (pa - pb) diagonal, fused to ONE
     // exchange: repartition on the output key (doc_a, doc_b) up front —
@@ -525,7 +509,6 @@ object Dedup {
     */
   def substringTrimApply(df: DataFrame, idCol: String, textCol: String,
                          n: Int = 13, minSpan: Int = 20, maxDf: Int = 50,
-                         hashFn: Column => Column = Hashing.hash60,
                          materialize: Boolean = true,
                          checkpointDir: Option[String] = None,
                          matchedOpt: Option[Surface[SubstringParams, DataFrame]] = None): DataFrame = {
@@ -534,7 +517,7 @@ object Dedup {
     // own behind the standard persist bracket.
     val matched = matchedOpt
       .map(_.servedTo(SubstringParams(n, maxDf), "substringTrimApply"))
-      .getOrElse(substringMatchedQuads(df, idCol, textCol, n, maxDf, hashFn,
+      .getOrElse(substringMatchedQuads(df, idCol, textCol, n, maxDf,
         materialize, checkpointDir))
     locally {
       // islands over pb per (doc_b, doc_a, diag): same lockstep-diagonal
@@ -605,14 +588,13 @@ object Dedup {
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         k: Int = 3, threshold: Double = 0.5,
-                        hashFn: Column => Column = Hashing.hash60,
                         materialize: Boolean = true,
                         checkpointDir: Option[String] = None): DataFrame = {
     // the exploded inverted index is cached for the bracket's lifetime only:
     // the self-join would otherwise recompute tokenization+md5 for both
     // sides. The persisted form is (doc_id, h) longs — far smaller than the
     // source text.
-    withShingleIndex(shingleHashesExploded(df, idCol, textCol, k, hashFn),
+    withShingleIndex(shingleHashesExploded(df, idCol, textCol, k),
         materialize, checkpointDir) { ex0 =>
       val sz = ex0.groupBy("doc_id").agg(count(lit(1)).as("sz"))
       // (a round-13 A/B also dropped SINGLETON hashes from the self-join
@@ -658,7 +640,6 @@ object Dedup {
     */
   def ngramJaccardCappedPairs(df: DataFrame, idCol: String, textCol: String,
                               k: Int = 3, threshold: Double = 0.5, maxDf: Int = 50,
-                              hashFn: Column => Column = Hashing.hash60,
                               materialize: Boolean = true,
                               checkpointDir: Option[String] = None,
                               minDf: Int = 2): DataFrame = {
@@ -671,7 +652,7 @@ object Dedup {
     // corpus is Heaps-law-shaped, with identical output (suite-asserted).
     // The committed sf0.1 fixture is the opposite extreme (0.08% singleton
     // mass), where round 13 measured the fold-in as a wash.
-    withShingleIndex(shingleHashesExploded(df, idCol, textCol, k, hashFn),
+    withShingleIndex(shingleHashesExploded(df, idCol, textCol, k),
         materialize, checkpointDir) { ex0 =>
     // the index keeps only shingles with 2 <= df <= maxDf: above the cap is
     // boilerplate (O(d²) pairs, no signal), and df = 1 hashes can never
@@ -765,10 +746,9 @@ object Dedup {
     */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
                        k: Int = 3, threshold: Double = 0.8, maxDf: Int = 50,
-                       hashFn: Column => Column = Hashing.hash60,
                        materialize: Boolean = true,
                        checkpointDir: Option[String] = None): DataFrame = {
-    withShingleIndex(shingleHashesExploded(df, idCol, textCol, k, hashFn),
+    withShingleIndex(shingleHashesExploded(df, idCol, textCol, k),
         materialize, checkpointDir) { ex0 =>
     // 2 <= df <= maxDf index: singleton hashes never pair, so they skip the
     // self-join for free; `dropped` absorbs them and the prune bound stays
@@ -847,27 +827,12 @@ object Dedup {
     * admit/reject shape.
     */
   def minhashIndexStore(docs: DataFrame, dir: String, idCol: String, textCol: String,
-                        k: Int = 3, numPerm: Int = 64, bands: Int = 16,
-                        hashFn: Column => Column = Hashing.hash60): Unit =
-    writeMinhashIndex(docs, dir, idCol, textCol, k, numPerm, bands, hashFn, "overwrite")
-
-  /** Extend the stored index with an ingest batch (after flagging it):
-    * append its signatures and shingle sets — the maintenance half of the
-    * incremental loop, the mirror of [[Similarity.ivfAppend]].
-    */
-  def minhashIndexAppend(docs: DataFrame, dir: String, idCol: String, textCol: String,
-                         k: Int = 3, numPerm: Int = 64, bands: Int = 16,
-                         hashFn: Column => Column = Hashing.hash60): Unit =
-    writeMinhashIndex(docs, dir, idCol, textCol, k, numPerm, bands, hashFn, "append")
-
-  private def writeMinhashIndex(docs: DataFrame, dir: String, idCol: String,
-                                textCol: String, k: Int, numPerm: Int, bands: Int,
-                                hashFn: Column => Column, mode: String): Unit = {
-    val ex = shingleHashesExploded(docs, idCol, textCol, k, hashFn).persist()
+                        k: Int = 3, numPerm: Int = 64, bands: Int = 16): Unit = {
+    val ex = shingleHashesExploded(docs, idCol, textCol, k).persist()
     ex.count() // signatures + sets share the index; compute it once
     try {
-      bandedSignatures(ex, numPerm, bands).write.mode(mode).parquet(s"$dir/bands")
-      shingleSets(ex).write.mode(mode).parquet(s"$dir/sets")
+      bandedSignatures(ex, numPerm, bands).write.mode("overwrite").parquet(s"$dir/bands")
+      shingleSets(ex).write.mode("overwrite").parquet(s"$dir/sets")
     } finally {
       ex.unpersist(blocking = false)
       ()
@@ -897,11 +862,10 @@ object Dedup {
   def dedupIncremental(spark: SparkSession, dir: String, newDocs: DataFrame,
                        idCol: String, textCol: String,
                        k: Int = 3, numPerm: Int = 64, bands: Int = 16,
-                       threshold: Double = 0.5,
-                       hashFn: Column => Column = Hashing.hash60): DataFrame = {
+                       threshold: Double = 0.5): DataFrame = {
     val storedBands = spark.read.parquet(s"$dir/bands")
     val storedSets = spark.read.parquet(s"$dir/sets")
-    val exN = shingleHashesExploded(newDocs, idCol, textCol, k, hashFn)
+    val exN = shingleHashesExploded(newDocs, idCol, textCol, k)
     // NO broadcast hints on the batch side (round-11 verdict): AQE
     // broadcasts an ingest-sized batch at runtime from its observed size,
     // while a backfill-sized batch degrades safely to a shuffle join
@@ -937,10 +901,9 @@ object Dedup {
   def applyIncrementalDedup(spark: SparkSession, dir: String, newDocs: DataFrame,
                             idCol: String, textCol: String,
                             k: Int = 3, numPerm: Int = 64, bands: Int = 16,
-                            threshold: Double = 0.5,
-                            hashFn: Column => Column = Hashing.hash60): DataFrame = {
+                            threshold: Double = 0.5): DataFrame = {
     val flagged = dedupIncremental(spark, dir, newDocs, idCol, textCol,
-        k, numPerm, bands, threshold, hashFn)
+        k, numPerm, bands, threshold)
       .select(col("new_id").as("__drop_id")).distinct()
     // no broadcast hint: the flag list is batch-bounded, so AQE broadcasts
     // it for ingest slices but a backfill-sized batch stays off the driver
@@ -1120,12 +1083,11 @@ object Dedup {
   def minHashEstimateAudit(docs: DataFrame, idCol: String, textCol: String,
                            k: Int = 3, numPerm: Int = 64, bands: Int = 16,
                            threshold: Double = 0.5,
-                           hashFn: Column => Column = Hashing.hash60,
                            checkpointDir: Option[String] = None): DataFrame =
     minHashEstimateAudit(docs,
       minHashLshPairs(docs, idCol, textCol, k, numPerm, bands,
-        threshold, hashFn, checkpointDir = checkpointDir),
-      idCol, textCol, k, numPerm, hashFn)
+        threshold, checkpointDir = checkpointDir),
+      idCol, textCol, k, numPerm)
 
   /** [[minHashEstimateAudit]] over a PRECOMPUTED pair set (see the
     * [[applyDedupQuality]] overload for the build-once/serve-many shape);
@@ -1133,10 +1095,9 @@ object Dedup {
     */
   def minHashEstimateAudit(docs: DataFrame, pairs: DataFrame,
                            idCol: String, textCol: String,
-                           k: Int, numPerm: Int,
-                           hashFn: Column => Column): DataFrame = {
+                           k: Int, numPerm: Int): DataFrame = {
     require(1000000 % numPerm == 0, s"numPerm $numPerm must divide 1e6 for exact ppm")
-    val sigs = shingleHashesExploded(docs, idCol, textCol, k, hashFn)
+    val sigs = shingleHashesExploded(docs, idCol, textCol, k)
       .groupBy("doc_id")
       .agg(graft.plans.MinHashAggregate.minhashSignature(col("h"), numPerm).as("sig"))
     val matches = aggregate(
@@ -1165,7 +1126,6 @@ object Dedup {
   def applyDecontamination(train: DataFrame, holdout: DataFrame,
                            idCol: String, textCol: String, n: Int = 13,
                            minSpanTokens: Int = 13,
-                           hashFn: Column => Column = Hashing.hash60,
                            checkpointDir: Option[String] = None,
                            reportOpt: Option[Surface[ContaminationParams, DataFrame]] = None): DataFrame = {
     require(minSpanTokens >= n, s"span threshold $minSpanTokens below the index n=$n")
@@ -1174,7 +1134,7 @@ object Dedup {
     // when absent the operator derives its own.
     val flagged = reportOpt
         .map(_.servedTo(ContaminationParams(n), "applyDecontamination"))
-        .getOrElse(exactSubstringContamination(train, holdout, idCol, textCol, n, hashFn,
+        .getOrElse(exactSubstringContamination(train, holdout, idCol, textCol, n,
           checkpointDir = checkpointDir))
       .filter(col("longest_span") >= minSpanTokens)
       .select(col("doc_id").as("__drop_id"))
@@ -1207,11 +1167,10 @@ object Dedup {
                          idCol: String, textCol: String,
                          k: Int = 3, numPerm: Int = 64, bands: Int = 32,
                          threshold: Double = 0.4,
-                         hashFn: Column => Column = Hashing.hash60,
                          materialize: Boolean = true,
                          checkpointDir: Option[String] = None): DataFrame =
-    withShingleIndexes(shingleHashesExploded(train, idCol, textCol, k, hashFn),
-        shingleHashesExploded(holdout, idCol, textCol, k, hashFn),
+    withShingleIndexes(shingleHashesExploded(train, idCol, textCol, k),
+        shingleHashesExploded(holdout, idCol, textCol, k),
         materialize, checkpointDir) { (exT, exH) =>
       val shH = shingleSets(exH)
         .select(col("doc_id").as("hold_id"), col("hs").as("hsb"), col("sz").as("szb"))
@@ -1242,10 +1201,9 @@ object Dedup {
   def applyFuzzyDecontamination(train: DataFrame, holdout: DataFrame,
                                 idCol: String, textCol: String,
                                 k: Int = 3, numPerm: Int = 64, bands: Int = 32,
-                                threshold: Double = 0.4,
-                                hashFn: Column => Column = Hashing.hash60): DataFrame = {
+                                threshold: Double = 0.4): DataFrame = {
     val flagged = fuzzyContamination(train, holdout, idCol, textCol,
-        k, numPerm, bands, threshold, hashFn)
+        k, numPerm, bands, threshold)
       .select(col("doc_id").as("__drop_id")).distinct()
     train.join(flagged, col(idCol) === col("__drop_id"), "left_anti")
   }
@@ -1266,10 +1224,9 @@ object Dedup {
     * document. Shingle-less docs (< k tokens) report novelty 0.
     */
   def ngramNovelty(docs: DataFrame, ref: DataFrame, idCol: String,
-                   textCol: String, k: Int = 3,
-                   hashFn: Column => Column = Hashing.hash60): DataFrame = {
-    val exD = shingleHashesExploded(docs, idCol, textCol, k, hashFn)
-    val refSet = shingleHashesExploded(ref, idCol, textCol, k, hashFn)
+                   textCol: String, k: Int = 3): DataFrame = {
+    val exD = shingleHashesExploded(docs, idCol, textCol, k)
+    val refSet = shingleHashesExploded(ref, idCol, textCol, k)
       .select("h").distinct()
     val flagged = exD
       .join(refSet.withColumn("__seen", lit(1)), Seq("h"), "left")
@@ -1320,17 +1277,16 @@ object Dedup {
     */
   def sourceOverlap(docs: DataFrame, idCol: String, textCol: String,
                     srcCol: String, k: Int = 3, maxDf: Int = 50,
-                    hashFn: Column => Column = Hashing.hash60,
                     materialize: Boolean = true,
                     checkpointDir: Option[String] = None): DataFrame = {
-    val ex = spread(docs, idCol)
+    val ex = PartitionUtil.spread(docs, idCol)
       .select(col(idCol).as("doc_id"), col(srcCol).as("src"),
         Text.tokens(col(textCol)).as("toks"))
       .select(col("doc_id"), col("src"), col("toks"),
         posexplode(col("toks")).as(Seq("pos", "t")))
       .filter(col("pos") <= size(col("toks")) - k)
       .select(col("doc_id"), col("src"),
-        hashFn(concat_ws(" ", (0 until k).map(i =>
+        Hashing.hash60(concat_ws(" ", (0 until k).map(i =>
           element_at(col("toks"), col("pos") + i + 1)): _*)).as("h"))
       .distinct()
     val dfStats = ex.groupBy("h").agg(count(lit(1)).as("df"))
@@ -1360,12 +1316,11 @@ object Dedup {
   def minHashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       k: Int = 3, numPerm: Int = 64, bands: Int = 16,
                       threshold: Double = 0.5,
-                      hashFn: Column => Column = Hashing.hash60,
                       materialize: Boolean = true,
                       checkpointDir: Option[String] = None): DataFrame = {
     // index cached for the bracket only: consumed three times (signature
     // build + both verify sides)
-    withShingleIndex(shingleHashesExploded(df, idCol, textCol, k, hashFn),
+    withShingleIndex(shingleHashesExploded(df, idCol, textCol, k),
         materialize, checkpointDir) { ex0 =>
       val sh = shingleSets(ex0)
       val banded = bandedSignatures(ex0, numPerm, bands)
@@ -1397,16 +1352,15 @@ object Dedup {
     * chunk-keyed rows.
     */
   def simHashPairs(df: DataFrame, idCol: String, textCol: String,
-                   maxDist: Int = 3,
-                   hashFn: Column => Column = Hashing.hash60): DataFrame = {
+                   maxDist: Int = 3): DataFrame = {
     val nBits = 60
     val chunks = 4
     val chunkBits = nBits / chunks // 15
     require(maxDist < chunks, "pigeonhole recall requires maxDist < chunks")
 
-    val tok = spread(df, idCol)
+    val tok = PartitionUtil.spread(df, idCol)
       .select(col(idCol).as("doc_id"), explode(Text.tokens(col(textCol))).as("t"))
-      .withColumn("h", hashFn(col("t")))
+      .withColumn("h", Hashing.hash60(col("t")))
 
     // one imperative bit-balance aggregate instead of nBits sum() columns —
     // see graft.plans.SimHashAggregate for why
@@ -1452,7 +1406,7 @@ object Dedup {
                         materialize: Boolean = true,
                         checkpointDir: Option[String] = None): DataFrame = {
     val w = maxLenDiff + 1
-    val base0 = spread(df, idCol).select(
+    val base0 = PartitionUtil.spread(df, idCol).select(
         col(idCol).as("doc_id"),
         TextAnalysis.normalize(col(textCol)).as("t"))
       .select(col("doc_id"), length(col("t")).as("len"),

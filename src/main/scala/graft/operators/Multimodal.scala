@@ -3,23 +3,20 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Multimodal-column plumbing: opaque `BINARY` payloads with typed metadata,
-  * processed by a batched per-partition "decode" stage.
+/** Multimodal-column plumbing: opaque `BINARY` payloads processed by a
+  * batched per-partition "decode" stage.
   *
   * The JDK bundles real image codecs (PNG/BMP/GIF/JPEG/TIFF via ImageIO), so
   * the image-shaped operators — [[imageioFeatures]], [[imageioResize]],
-  * [[imageioFrames]], [[mixedFeatures]] — decode GENUINE pixels through
-  * [[ImageIoCodec]]: procedural PNG / multi-page-TIFF payloads are encoded
-  * executor-side and round-tripped through the real decoder, with
-  * closed-form pixel-sum oracles that a fake decode cannot reproduce. What
-  * the JDK genuinely lacks is video (H.264/VP9/AV1) and audio decode;
-  * [[StubCodec]] is the clearly-marked deterministic stand-in for those
-  * modalities (it carries the non-image rows of [[mixedFeatures]]), and
-  * everything around it — binary column handling, metadata struct, the
-  * `mapPartitions` batch shape (mirroring an Arrow-batched pandas UDF),
-  * partitioning — is real and tested. A real external decoder is a drop-in:
-  * implement [[MediaCodec]] and pass it to the generic operators
-  * ([[extractFeatures]] / [[resize]] / [[sampleFrames]]).
+  * [[imageioFrames]], [[imagePhash]], [[mixedFeatures]] — decode GENUINE
+  * pixels through [[ImageIoCodec]]: procedural PNG / multi-page-TIFF
+  * payloads are encoded executor-side and round-tripped through the real
+  * decoder, with closed-form pixel-sum oracles that a fake decode cannot
+  * reproduce. What the JDK genuinely lacks is video (H.264/VP9/AV1) and
+  * audio decode; [[StubCodec]] is the clearly-marked deterministic stand-in
+  * that carries the non-image rows of [[mixedFeatures]], dispatched by
+  * [[MixedCodec]]. The `mapPartitions` batch shape mirrors an Arrow-batched
+  * pandas UDF.
   */
 object Multimodal {
 
@@ -29,39 +26,23 @@ object Multimodal {
   /** Decoded features: fixed-width vector per media item. */
   case class MediaFeatures(doc_id: Long, n_bytes: Int, feat: Array[Double])
 
-  /** Resized media: payload truncated in proportion (deterministic stub for
-    * a real resampler), metadata updated.
-    */
+  /** Resized media: the re-encoded payload at the target geometry. */
   case class ResizedMedia(doc_id: Long, width: Int, height: Int, payload: Array[Byte])
 
-  /** One sampled frame of a "video" payload. */
+  /** One sampled frame of a multi-page container. */
   case class Frame(doc_id: Long, frame_idx: Int, frame: Array[Byte], frame_mean: Double)
 
-  /** The pluggable decode seam: the three per-record media operations the
-    * engine needs, isolated from all Spark plumbing so a real image/audio
-    * library implementation is a drop-in.
-    *
-    * Implementations ship to executors, hence `Serializable`; heavyweight
-    * state (codec handles, model weights) belongs in `@transient lazy val`
-    * fields so it initializes once per executor JVM, never on the driver.
+  /** Per-record feature extraction, the one operation [[MixedCodec]]
+    * dispatches on the payload. Implementations run inside executor-side
+    * `mapPartitions`, hence `Serializable`.
     */
   trait MediaCodec extends Serializable {
     /** Decode + feature-extract one media item. */
     def features(row: MediaRow): MediaFeatures
-
-    /** Resample payload to target dimensions. */
-    def resize(id: Long, payload: Array[Byte], width: Int, height: Int,
-               targetW: Int, targetH: Int): ResizedMedia
-
-    /** Decode a "video" payload into sampled frames. */
-    def frames(row: MediaRow, frameBytes: Int, stride: Int): Iterator[Frame]
   }
 
-  /** STUB codec — the container has no media libraries, so each operation is
-    * a deterministic fake of the right shape:
-    *  - features: [byte length, char length, doc_id mod 7]
-    *  - resize: keeps a byte prefix proportional to the pixel ratio
-    *  - frames: fixed-size byte blocks, every `stride`-th, mean-byte feature
+  /** STUB codec for payloads no JDK decoder reads (the audio/video stand-in
+    * rows): features = [byte length, char length, doc_id mod 7].
     */
   object StubCodec extends MediaCodec {
     def features(row: MediaRow): MediaFeatures =
@@ -69,22 +50,6 @@ object Multimodal {
         row.doc_id,
         row.payload.length,
         Array(row.payload.length.toDouble, row.n_chars.toDouble, (row.doc_id % 7).toDouble))
-
-    def resize(id: Long, payload: Array[Byte], width: Int, height: Int,
-               targetW: Int, targetH: Int): ResizedMedia = {
-      val ratio = (targetW.toLong * targetH).toDouble / (width.toLong * height)
-      val keep = math.max(1, math.min(payload.length, (payload.length * ratio).toInt))
-      ResizedMedia(id, targetW, targetH, payload.take(keep))
-    }
-
-    def frames(row: MediaRow, frameBytes: Int, stride: Int): Iterator[Frame] =
-      row.payload.grouped(frameBytes).zipWithIndex
-        .filter { case (_, i) => i % stride == 0 }
-        .map { case (block, i) =>
-          val mean = if (block.isEmpty) 0.0
-            else block.map(_ & 0xff).sum.toDouble / block.length
-          Frame(row.doc_id, i, block, mean)
-        }
   }
 
   /** REAL codec over the JDK's bundled ImageIO plugins — PNG/BMP/GIF/JPEG/
@@ -99,9 +64,8 @@ object Multimodal {
     *    geometry).
     *
     * What the JDK genuinely lacks is a VIDEO codec (H.264/VP9/AV1) and all
-    * audio decode — for those, plug an external library into the same
-    * [[MediaCodec]] seam; [[StubCodec]] remains the stand-in where no real
-    * decoder exists.
+    * audio decode; [[StubCodec]] is the stand-in where no real decoder
+    * exists.
     */
   object ImageIoCodec extends MediaCodec {
     import java.awt.image.BufferedImage
@@ -487,11 +451,6 @@ object Multimodal {
     private def pick(p: Array[Byte]): MediaCodec =
       if (isPng(p)) ImageIoCodec else StubCodec
     def features(row: MediaRow): MediaFeatures = pick(row.payload).features(row)
-    def resize(id: Long, payload: Array[Byte], width: Int, height: Int,
-               targetW: Int, targetH: Int): ResizedMedia =
-      pick(payload).resize(id, payload, width, height, targetW, targetH)
-    def frames(row: MediaRow, frameBytes: Int, stride: Int): Iterator[Frame] =
-      pick(row.payload).frames(row, frameBytes, stride)
   }
 
   /** Capability PROBE for one payload — the honest answer to "why is this
@@ -499,9 +458,9 @@ object Multimodal {
     * (`ImageIO.getImageReaders` over the payload's magic bytes) whether any
     * reader claims it. A claimed payload reports `decoded:<format>`; an
     * unclaimed one reports `stubbed:no-installed-codec` — a REASON read
-    * from the runtime environment, not a hardcoded label, so dropping a
-    * real audio/video `MediaCodec` (or an ImageIO plugin jar) onto the
-    * classpath changes the report without touching this code. On the
+    * from the runtime environment, not a hardcoded label, so dropping an
+    * ImageIO plugin jar onto the classpath changes the report without
+    * touching this code. On the
     * fixtures the probe is closed-form (PNG rows → `decoded:png`, text
     * stand-in rows → `stubbed:no-installed-codec`), so the oracle still
     * checks it exactly.
@@ -546,74 +505,5 @@ object Multimodal {
       }
       .toDF("doc_id", "modality", "codec_status", "mm_feat")
       .orderBy("doc_id")
-  }
-
-  /** Build a media table from `documents`: payload = UTF-8 bytes of the text
-    * (standing in for image bytes), typed metadata (width/height derived
-    * deterministically from doc_id) carried alongside.
-    */
-  def mediaTable(docs: DataFrame): DataFrame =
-    docs.select(
-      col("doc_id"),
-      encode(col("text"), "UTF-8").as("payload"),
-      col("n_chars"),
-      (lit(64) + col("doc_id") % 64).cast("int").as("width"),
-      (lit(48) + col("doc_id") % 48).cast("int").as("height"))
-
-  /** Decode features via mapPartitions — one JVM-side "batch" per partition,
-    * the same execution shape a vectorized (Arrow/pandas) UDF would have.
-    * Batching matters at scale: a real codec amortizes model/codec init per
-    * partition, not per row.
-    */
-  def extractFeatures(spark: SparkSession, docs: DataFrame,
-                      codec: MediaCodec = StubCodec): DataFrame = {
-    import spark.implicits._
-    mediaTable(docs)
-      .select("doc_id", "payload", "n_chars")
-      .as[MediaRow]
-      .mapPartitions { rows =>
-        // per-partition init happens in the codec's transient lazy state
-        rows.map(codec.features)
-      }
-      .toDF()
-      .select(col("doc_id"), col("n_bytes"), col("feat").as("mm_feat"))
-      .orderBy("doc_id")
-  }
-
-  /** Resize via the codec's resampler. The mapPartitions shape (batched,
-    * metadata-aware) is what a real image resampler plugs into.
-    */
-  def resize(spark: SparkSession, docs: DataFrame, targetW: Int, targetH: Int,
-             codec: MediaCodec = StubCodec): DataFrame = {
-    import spark.implicits._
-    mediaTable(docs)
-      .select(col("doc_id"), col("payload"), col("width"), col("height"))
-      .as[(Long, Array[Byte], Int, Int)]
-      .mapPartitions { rows =>
-        rows.map { case (id, payload, w, h) =>
-          codec.resize(id, payload, w, h, targetW, targetH)
-        }
-      }
-      .toDF()
-      .select(col("doc_id"), col("width"), col("height"),
-        length(col("payload")).as("n_bytes"))
-      .orderBy("doc_id")
-  }
-
-  /** Frame sampling via the codec's frame decoder. flatMap shape = one input
-    * row fanning out to frames.
-    */
-  def sampleFrames(spark: SparkSession, docs: DataFrame,
-                   frameBytes: Int = 16, stride: Int = 4,
-                   codec: MediaCodec = StubCodec): DataFrame = {
-    import spark.implicits._
-    mediaTable(docs)
-      .select("doc_id", "payload", "n_chars")
-      .as[MediaRow]
-      .flatMap(row => codec.frames(row, frameBytes, stride))
-      .toDF()
-      .select(col("doc_id"), col("frame_idx"), length(col("frame")).as("n_bytes"),
-        round(col("frame_mean"), 6).as("frame_mean"))
-      .orderBy("doc_id", "frame_idx")
   }
 }

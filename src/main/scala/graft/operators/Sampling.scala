@@ -14,8 +14,8 @@ import graft.functions.Hashing
   * reproducible subsets), and it makes sampling a narrow codegen'd filter:
   * no shuffle, no driver coordination, trivially 100 TB-scalable.
   *
-  * The hash is salted with a caller-supplied name so different samples drawn
-  * from the same table are independent.
+  * Each operator salts the hash with its own fixed name, so different
+  * samples drawn from the same table are independent.
   */
 object Sampling {
 
@@ -67,14 +67,14 @@ object Sampling {
     * the output ordering. Output: (doc_id, source, copy_idx 1..n).
     */
   def upsampleMix(df: DataFrame, idCol: String, srcCol: String,
-                  weights: Map[String, Double], salt: String = "epoch"): DataFrame = {
+                  weights: Map[String, Double]): DataFrame = {
     import df.sparkSession.implicits._
     val wt = weights.toSeq.map { case (s, w) =>
       require(w >= 0, s"negative weight for $s")
       (s, math.floor(w).toLong, math.round((w - math.floor(w)) * 10000))
     }.toDF(srcCol, "whole", "thr")
     val n = (coalesce(col("whole"), lit(1L)) +
-      when(bucket(col(idCol), salt) < coalesce(col("thr"), lit(0L)), 1L).otherwise(0L))
+      when(bucket("epoch", col(idCol)) < coalesce(col("thr"), lit(0L)), 1L).otherwise(0L))
     df.join(broadcast(wt), Seq(srcCol), "left")
       .select(col(idCol), col(srcCol),
         explode(when(n >= 1, sequence(lit(1L), n))
@@ -116,33 +116,35 @@ object Sampling {
     * materialization — plan-locked like sample_shuffle).
     */
   def epochShuffle(df: DataFrame, idCol: String, srcCol: String,
-                   weights: Map[String, Double], seed: Long,
-                   salt: String = "epoch"): DataFrame =
-    upsampleMix(df, idCol, srcCol, weights, salt)
+                   weights: Map[String, Double], seed: Long): DataFrame =
+    upsampleMix(df, idCol, srcCol, weights)
       .withColumn("shuffle_key",
         Hashing.hash60(concat(lit(s"eshuffle:$seed:"), col(idCol).cast("string"),
           lit(":"), col("copy_idx").cast("string"))))
       .orderBy(col("shuffle_key"), col(idCol), col("copy_idx"))
 
-  /** bucket in [0, 10000): four decimal digits of rate resolution. */
-  private def bucket(keyCol: Column, salt: String): Column =
-    pmod(Hashing.hash60(concat(lit(salt), lit(":"), keyCol.cast("string"))), lit(10000L))
+  /** `key`'s 60-bit hash salted with the operator's `tag`, reduced mod
+    * `modulus`.
+    */
+  private def keyHash(tag: String, key: Column, modulus: Long): Column =
+    pmod(Hashing.hash60(concat(lit(tag), lit(":"), key.cast("string"))), lit(modulus))
 
-  /** Keep ~fraction of rows, deterministically by key. */
-  def deterministicSample(df: DataFrame, keyCol: String, fraction: Double,
-                          salt: String = "sample"): DataFrame =
-    df.filter(bucket(col(keyCol), salt) < (fraction * 10000).toLong)
+  /** bucket in [0, 10000): four decimal digits of rate resolution. */
+  private def bucket(tag: String, key: Column): Column = keyHash(tag, key, 10000L)
 
   /** Per-stratum fractions (e.g. per language/source); strata absent from the
     * map are dropped.
     */
   def stratifiedSample(df: DataFrame, keyCol: String, strataCol: String,
-                       fractions: Map[String, Double],
-                       salt: String = "strata"): DataFrame = {
+                       fractions: Map[String, Double]): DataFrame =
+    strataFilter(df, keyCol, strataCol, fractions, "strata")
+
+  private def strataFilter(df: DataFrame, keyCol: String, strataCol: String,
+                           fractions: Map[String, Double], tag: String): DataFrame = {
     val thresholds = fractions.foldLeft(lit(-1L)) { case (acc, (stratum, f)) =>
       when(col(strataCol) === stratum, lit((f * 10000).toLong)).otherwise(acc)
     }
-    df.filter(bucket(col(keyCol), salt) < thresholds)
+    df.filter(bucket(tag, col(keyCol)) < thresholds)
   }
 
   /** Weighted corpus mixing: per-source sampling rates + a deterministic
@@ -151,34 +153,20 @@ object Sampling {
     * any global sort coordination — ORDER BY mix_order range-partitions.
     */
   def mixSources(df: DataFrame, keyCol: String, sourceCol: String,
-                 weights: Map[String, Double],
-                 salt: String = "mix"): DataFrame =
-    stratifiedSample(df, keyCol, sourceCol, weights, salt)
-      .withColumn("mix_order", bucket(col(keyCol), salt + ":order"))
+                 weights: Map[String, Double]): DataFrame =
+    strataFilter(df, keyCol, sourceCol, weights, "mix")
+      .withColumn("mix_order", bucket("mix:order", col(keyCol)))
 
   /** Stable train/validation/test assignment by key. */
   def split(df: DataFrame, keyCol: String,
-            trainFrac: Double, validFrac: Double,
-            salt: String = "split"): DataFrame = {
-    val b = bucket(col(keyCol), salt)
+            trainFrac: Double, validFrac: Double): DataFrame = {
+    val b = bucket("split", col(keyCol))
     df.withColumn("split",
       when(b < (trainFrac * 10000).toLong, "train")
         .when(b < ((trainFrac + validFrac) * 10000).toLong, "valid")
         .otherwise("test"))
   }
 
-  /** Cap each group at `maxPerGroup` rows — the corpus-balancing rule
-    * ("at most N documents per domain/source"), selected deterministically
-    * by key hash so the kept set is stable across runs and partitionings.
-    *
-    * Selection rides [[TopKAggregator]] (score = hash, desc), NOT
-    * `row_number() OVER`: the window form sorts every row of every group,
-    * while the bounded buffer ships at most `maxPerGroup` rows per group per
-    * map task through the shuffle — the same reasoning as `grouped_topk`,
-    * which matters precisely when a group is hot enough to need capping.
-    * The hash is folded into 2^50 so its double image is exact (53-bit
-    * mantissa) and the ordering matches the oracle's integer sort.
-    */
   /** TOKEN-budget corpus capping — the mixture-planner sibling of
     * [[capPerGroup]] (which caps DOC counts): each source keeps the
     * deterministic-hash-ordered PREFIX of its documents whose cumulative
@@ -209,12 +197,11 @@ object Sampling {
     */
   def tokenBudgetPerSource(df: DataFrame, idCol: String, srcCol: String,
                            textCol: String, budget: Long,
-                           salt: String = "tokbudget",
                            nBuckets: Int = 64): DataFrame =
     tokenBudgetPerSourceCounted(
       df.select(col(idCol), col(srcCol),
         size(graft.functions.Text.tokens(col(textCol))).cast("long").as("n_tokens")),
-      idCol, srcCol, budget, salt, nBuckets)
+      idCol, srcCol, budget, nBuckets)
 
   /** [[tokenBudgetPerSource]] over PRE-COUNTED rows `(idCol, srcCol,
     * n_tokens)` — split out so pipeline compositions can tokenize once into
@@ -228,14 +215,12 @@ object Sampling {
     */
   def tokenBudgetPerSourceCounted(counted: DataFrame, idCol: String,
                                   srcCol: String, budget: Long,
-                                  salt: String = "tokbudget",
                                   nBuckets: Int = 64): DataFrame = {
     require(nBuckets >= 1, s"nBuckets must be positive, got $nBuckets")
     import org.apache.spark.sql.expressions.Window
     val width = math.max(1L, (1L << 50) / nBuckets)
     val base = counted.select(col(idCol), col(srcCol), col("n_tokens"),
-      pmod(Hashing.hash60(concat(lit(salt), lit(":"), col(idCol).cast("string"))),
-        lit(1L << 50)).as("__h"))
+      keyHash("tokbudget", col(idCol), 1L << 50).as("__h"))
       .withColumn("__b", floor(col("__h") / lit(width)).cast("long"))
     // bucket totals + exclusive prefix: BOUNDED metadata (≤ nSources ×
     // (nBuckets + 1) rows), so the per-source window here is a tiny-table
@@ -281,7 +266,7 @@ object Sampling {
     * exchange.
     */
   def qualityTokenBudget(docs: DataFrame, budget: Long,
-                         salt: String = "qbudget", nBuckets: Int = 64): DataFrame = {
+                         nBuckets: Int = 64): DataFrame = {
     require(nBuckets >= 1, s"nBuckets must be positive, got $nBuckets")
     import org.apache.spark.sql.expressions.Window
     val width = math.max(1L, (1L << 50) / nBuckets)
@@ -289,9 +274,7 @@ object Sampling {
       .select(col("doc_id"),
         round(col("quality_score") * 1e6).cast("long").as("q_u"),
         col("n_tokens").cast("long").as("n_tokens"))
-      .withColumn("__h",
-        pmod(Hashing.hash60(concat(lit(salt), lit(":"), col("doc_id").cast("string"))),
-          lit(1L << 50)))
+      .withColumn("__h", keyHash("qbudget", col("doc_id"), 1L << 50))
       .withColumn("__b", floor(col("__h") / lit(width)).cast("long"))
     val wo = Window.orderBy(col("q_u").desc, col("__b").asc)
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -368,14 +351,32 @@ object Sampling {
       .orderBy(srcCol)
   }
 
-  def capPerGroup(df: DataFrame, keyCol: String, groupCol: String, maxPerGroup: Int,
-                  salt: String = "quota"): DataFrame = {
+  /** Cap each group at `maxPerGroup` rows — the corpus-balancing rule
+    * ("at most N documents per domain/source"), selected deterministically
+    * by key hash so the kept set is stable across runs and partitionings.
+    *
+    * Selection rides [[TopKAggregator]] (score = hash, desc), NOT
+    * `row_number() OVER`: the window form sorts every row of every group,
+    * while the bounded buffer ships at most `maxPerGroup` rows per group per
+    * map task through the shuffle — the same reasoning as `grouped_topk`,
+    * which matters precisely when a group is hot enough to need capping.
+    * The hash is folded into 2^50 so its double image is exact (53-bit
+    * mantissa) and the ordering matches the oracle's integer sort.
+    */
+  def capPerGroup(df: DataFrame, keyCol: String, groupCol: String,
+                  maxPerGroup: Int): DataFrame =
+    capPerGroupHashed(df, keyCol, groupCol, maxPerGroup, "quota")
+
+  /** [[capPerGroup]] with the hash salted by `tag`, so a caller drawing its
+    * own independent cap (`Similarity.clusterBalancedSample`) passes its own.
+    */
+  private[operators] def capPerGroupHashed(df: DataFrame, keyCol: String, groupCol: String,
+                                           maxPerGroup: Int, tag: String): DataFrame = {
     import df.sparkSession.implicits._
     val hashed = df.select(
       col(groupCol).cast("string").as("g"),
       col(keyCol).cast("long").as("id"),
-      pmod(Hashing.hash60(concat(lit(salt), lit(":"), col(keyCol).cast("string"))),
-        lit(1L << 50)).cast("double").as("h"))
+      keyHash(tag, col(keyCol), 1L << 50).cast("double").as("h"))
     hashed.as[(String, Long, Double)]
       .groupByKey(_._1)
       .mapValues(t => TopKAggregator.Scored(t._3, t._2))

@@ -383,9 +383,7 @@ object Similarity {
     (1 to iters).foldLeft(init)((cent, _) => lloydRound(emb, cent))
   }
 
-  /** One Lloyd assign/recompute round (the shared body of [[lloydCentroids]]
-    * and the iterative-collect [[lloydCentroidsLocal]]).
-    */
+  /** One Lloyd assign/recompute round of [[lloydCentroids]]. */
   private def lloydRound(emb: DataFrame, cent: DataFrame): DataFrame =
     assignToCentroids(emb, cent)
       .select(col("centroid_id"), posexplode(col("embedding")).as(Seq("idx", "comp")))
@@ -516,9 +514,6 @@ object Similarity {
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq.sortBy(_._1)
   }
 
-  def lloydCentroidsLocal(emb: DataFrame, nlist: Int, iters: Int): DataFrame =
-    centroidsToDF(emb.sparkSession, lloydCentroidsLocalValues(emb, nlist, iters))
-
   private def centroidsToDF(spark: org.apache.spark.sql.SparkSession,
                             cents: Seq[(Long, Array[Double])]): DataFrame = {
     import spark.implicits._
@@ -608,26 +603,6 @@ object Similarity {
     val (centroids, assigned) = ivfIndex(emb, nlist, iters)
     centroids.write.mode("overwrite").parquet(s"$dir/centroids")
     assigned.write.mode("overwrite").parquet(s"$dir/assigned")
-  }
-
-  /** Public assignment entry for index tooling: nearest-centroid bucket per
-    * vector against an explicit (broadcastable) centroid relation.
-    */
-  def assignAll(emb: DataFrame, centroids: DataFrame): DataFrame =
-    assignToCentroids(emb, broadcast(centroids))
-
-  /** Incrementally extend a stored IVF index with NEW vectors: assign them
-    * against the STORED centroids (no Lloyd re-run) and append to the
-    * stored assignment — the index-maintenance path a serving deployment
-    * runs on ingest. Centroid drift is handled by periodic [[ivfStore]]
-    * rebuilds (a scheduled job), not per-batch retraining; recall on the
-    * appended vectors matches a fresh assignment against the same centroids
-    * by construction (asserted in the suite).
-    */
-  def ivfAppend(spark: org.apache.spark.sql.SparkSession, dir: String,
-                newVecs: DataFrame): Unit = {
-    val centroids = broadcast(spark.read.parquet(s"$dir/centroids"))
-    assignToCentroids(newVecs, centroids).write.mode("append").parquet(s"$dir/assigned")
   }
 
   /** Search a stored IVF index (see [[ivfStore]]): identical results to
@@ -996,34 +971,6 @@ object Similarity {
       .parquet(s"$dir/invlists")
   }
 
-  /** Incrementally extend a stored IVFADC index ([[ivfPqStore]]) with NEW
-    * vectors — the ingest-maintenance mirror of [[ivfAppend]] and
-    * `Dedup.minhashIndexAppend`: assign the batch against the STORED
-    * centroids and encode it against the STORED codebooks (no retraining of
-    * either quantizer), append the resulting (vec_id, centroid_id, code)
-    * rows to the partitioned inverted lists. Quantizer drift is handled by
-    * periodic [[ivfPqStore]] rebuilds, scheduled from the
-    * [[indexDrift]] report — never per batch. Appended rows match a fresh
-    * assignment+encode against the same stored artifacts by construction
-    * (asserted in the suite).
-    */
-  def ivfPqAppend(spark: org.apache.spark.sql.SparkSession, dir: String,
-                  newVecs: DataFrame): Unit = {
-    val cents = spark.read.parquet(s"$dir/centroids").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq.sortBy(_._1)
-    val bookRows = spark.read.parquet(s"$dir/codebooks").collect()
-      .map(r => (r.getInt(0), (r.getLong(1), r.getSeq[Double](2).toArray)))
-    val m = if (bookRows.isEmpty) 0 else bookRows.map(_._1).max + 1
-    val books = (0 until m).map(s =>
-      bookRows.filter(_._1 == s).map(_._2).sortBy(_._1).toSeq)
-    assignScored(newVecs, cents)
-      .select(col("vec_id"), col("centroid_id"))
-      .join(encodeWithBooks(newVecs, books).select(col("vec_id"), col("code")), "vec_id")
-      .select(col("vec_id"), col("centroid_id"), col("code"))
-      .write.mode("append").partitionBy("centroid_id")
-      .parquet(s"$dir/invlists")
-  }
-
   /** Steady-state IVFADC search over a stored index ([[ivfPqStore]]): the
     * plan reads the probe row, the nlist-row centroid table, the m·k-row
     * codebooks, and the `nprobe` probed inverted-list partitions — and
@@ -1123,13 +1070,12 @@ object Similarity {
     */
   def clusterBalancedSample(emb: DataFrame, nlist: Int = 4, iters: Int = 2,
                             maxPerCluster: Int = 50,
-                            salt: String = "cbal",
                             centsOpt: Option[Surface[LloydParams, Seq[(Long, Array[Double])]]] = None): DataFrame = {
     val cents = centroidsFor(emb, nlist, iters, centsOpt, "clusterBalancedSample")
     val asn = assignScored(emb, cents)
       .select(col("vec_id"), col("centroid_id"), col("csim"))
-    val kept = Sampling.capPerGroup(asn, "vec_id", "centroid_id",
-        maxPerCluster, salt)
+    val kept = Sampling.capPerGroupHashed(asn, "vec_id", "centroid_id",
+        maxPerCluster, "cbal")
       .select(col("vec_id"), lit(true).as("kept"))
     asn.join(broadcast(kept), Seq("vec_id"), "left")
       .select(col("vec_id"), col("centroid_id"), col("csim"),

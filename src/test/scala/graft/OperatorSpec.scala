@@ -132,59 +132,6 @@ class OperatorSpec extends SparkSpec {
     assert(pairs.forall(r => r.getInt(2) <= 3))
   }
 
-  test("multimodal feature extraction: stub features, batch shape") {
-    val docs = Tables.table(spark, sf0001, "documents").limit(10)
-    val feats = Multimodal.extractFeatures(spark, docs).collect()
-    assert(feats.length == 10)
-    feats.foreach { r =>
-      val feat = r.getSeq[Double](2)
-      assert(feat.length == 3)
-      assert(feat(0) == r.getInt(1).toDouble) // n_bytes consistent
-    }
-  }
-
-  test("multimodal resize and frame sampling: deterministic stub pipeline") {
-    val docs = Tables.table(spark, sf0001, "documents").limit(10)
-    val resized = Multimodal.resize(spark, docs, 32, 32).collect()
-    assert(resized.forall(r => r.getInt(1) == 32 && r.getInt(2) == 32 && r.getInt(3) >= 1))
-    val frames = Multimodal.sampleFrames(spark, docs).collect()
-    assert(frames.nonEmpty)
-    frames.foreach { r =>
-      assert(r.getInt(1) % 4 == 0)        // stride respected
-      assert(r.getInt(2) >= 1 && r.getInt(2) <= 16)
-      val mean = r.getDouble(3)
-      assert(mean >= 0.0 && mean <= 255.0) // per-frame feature present
-    }
-    // deterministic: same input, same output
-    val again = Multimodal.sampleFrames(spark, docs).collect()
-    assert(frames.map(_.toString).toSeq == again.map(_.toString).toSeq)
-  }
-
-  test("MediaCodec is a drop-in seam: a custom codec replaces the stub") {
-    import Multimodal.{Frame, MediaFeatures, MediaRow, ResizedMedia, StubCodec}
-    // a "real decoder" stand-in that provably differs from the stub
-    object MarkerCodec extends Multimodal.MediaCodec {
-      def features(row: MediaRow): MediaFeatures =
-        MediaFeatures(row.doc_id, row.payload.length, Array(-1.0, -2.0, -3.0))
-      def resize(id: Long, payload: Array[Byte], w: Int, h: Int,
-                 tw: Int, th: Int): ResizedMedia =
-        ResizedMedia(id, tw, th, Array[Byte](42))
-      def frames(row: MediaRow, frameBytes: Int, stride: Int): Iterator[Frame] =
-        Iterator(Frame(row.doc_id, 0, Array[Byte](1), 99.0))
-    }
-    val docs = Tables.table(spark, sf0001, "documents").limit(5)
-    val feats = Multimodal.extractFeatures(spark, docs, MarkerCodec).collect()
-    assert(feats.length == 5 && feats.forall(_.getSeq[Double](2) == Seq(-1.0, -2.0, -3.0)))
-    val resized = Multimodal.resize(spark, docs, 32, 32, MarkerCodec).collect()
-    assert(resized.forall(_.getInt(3) == 1)) // 1-byte payload from the codec
-    val frames = Multimodal.sampleFrames(spark, docs, codec = MarkerCodec).collect()
-    assert(frames.length == 5 && frames.forall(_.getDouble(3) == 99.0))
-    // and the default stays the stub (schema + rows unchanged)
-    assert(Multimodal.extractFeatures(spark, docs).collect()
-      .forall(r => r.getSeq[Double](2).head == r.getInt(1).toDouble))
-    assert(StubCodec.features(MediaRow(3L, Array[Byte](7, 7), 2L)).feat.toSeq == Seq(2.0, 2.0, 3.0))
-  }
-
   test("imageioResize: constant-color sums at target geometry, from real decodes") {
     val docs = Tables.table(spark, sf0001, "documents").limit(12)
     val rows = Multimodal.imageioResize(spark, docs, 32, 32).collect()
@@ -297,22 +244,6 @@ class OperatorSpec extends SparkSpec {
       Seq(4.0, 3.0, 120.0, 240.0, 360.0))
     assert(MixedCodec.features(MediaRow(1L, raw, 5L)).feat.toSeq ==
       StubCodec.features(MediaRow(1L, raw, 5L)).feat.toSeq)
-    // resize: PNG -> real render at target geometry (decodable PNG out);
-    // raw -> stub byte truncation
-    val r = MixedCodec.resize(1L, png, 4, 3, 2, 2)
-    val back = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(r.payload))
-    assert(back.getWidth == 2 && back.getHeight == 2)
-    assert(MixedCodec.resize(1L, raw, 4, 3, 2, 2).payload.toSeq ==
-      StubCodec.resize(1L, raw, 4, 3, 2, 2).payload.toSeq)
-    // frames: TIFF container -> real page decode; raw -> stub blocks
-    val tiff = ImageIoCodec.encodeTiffPages(Seq(
-      ImageIoCodec.solidImage(2, 2, 1, 2, 3), ImageIoCodec.solidImage(2, 2, 4, 5, 6)))
-    // TIFF is not PNG-magic, so the sniffing codec sends it to the stub —
-    // multi-frame containers go through ImageIoCodec explicitly (as
-    // imageioFrames does); document the dispatch boundary here
-    assert(MixedCodec.frames(MediaRow(1L, tiff, 0L), 16, 1).size ==
-      StubCodec.frames(MediaRow(1L, tiff, 0L), 16, 1).size)
-    assert(ImageIoCodec.frames(MediaRow(1L, tiff, 0L), 0, 1).size == 2)
   }
 
   test("langId: argmax scoring, deterministic ties, und fallback") {
@@ -347,16 +278,15 @@ class OperatorSpec extends SparkSpec {
   test("sampling: deterministic, stable under growth, splits partition the corpus") {
     import graft.operators.Sampling
     val docs = Tables.table(spark, sf0001, "documents")
-    val s1 = Sampling.deterministicSample(docs, "doc_id", 0.3).select("doc_id").collect().map(_.getLong(0)).toSet
-    val s2 = Sampling.deterministicSample(docs, "doc_id", 0.3).select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(s1 == s2, "same corpus, same sample")
-    // assignment is per-key: sampling a subset yields the intersection
-    val subset = Sampling.deterministicSample(docs.filter(col("doc_id") < 250), "doc_id", 0.3)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(subset == s1.filter(_ < 250), "row assignment independent of corpus contents")
+    def assigned(df: org.apache.spark.sql.DataFrame) = Sampling.split(df, "doc_id", 0.8, 0.1)
+      .select("doc_id", "split").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val s1 = assigned(docs)
+    assert(s1 == assigned(docs), "same corpus, same split")
+    // assignment is per-key: splitting a subset yields the same assignment
+    val subset = assigned(docs.filter(col("doc_id") < 250))
+    assert(subset == s1.filter(_._1 < 250), "row assignment independent of corpus contents")
     // splits are a partition
-    val splits = Sampling.split(docs, "doc_id", 0.8, 0.1)
-      .groupBy("split").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val splits = s1.groupBy(_._2).map { case (k, v) => k -> v.size }
     assert(splits.keySet.subsetOf(Set("train", "valid", "test")))
     assert(splits.values.sum == docs.count())
   }
@@ -569,14 +499,6 @@ class OperatorSpec extends SparkSpec {
       .map { case (a, b, jac) => if (a % 10 == 0) (a, b, jac) else (b, a, jac) }.toSet
     assert(inc == union, s"incremental=$inc union=$union")
     assert(inc.nonEmpty, "fixture produced no cross pairs — the equality is vacuous")
-    // append the batch to the store: a re-flag of the same batch must now
-    // also collide with itself (jaccard 1.0) — every signed batch doc
-    val signable = batch.filter(size(Text.tokens(col("text"))) >= 3).count()
-    Dedup.minhashIndexAppend(batch, dir, "doc_id", "text", k = 3, numPerm = 64, bands = 16)
-    val self = Dedup.dedupIncremental(spark, dir, batch, "doc_id", "text",
-        k = 3, numPerm = 64, bands = 16, threshold = 0.5)
-      .filter(col("new_id") === col("old_id")).count()
-    assert(self == signable, s"appended store must self-match: $self of $signable")
   }
 
   test("hyperplane-LSH entry points fail loudly on a ragged embedding corpus") {
@@ -861,31 +783,6 @@ class OperatorSpec extends SparkSpec {
     val probe7 = Similarity.ivfSearchStored(spark, dir, emb, probeId = 7L, k = 3, nprobe = 3)
       .collect()
     assert(probe7.length == 3)
-  }
-
-  test("ivfAppend: incremental assignment equals a fresh assignment on stored centroids") {
-    import org.apache.spark.sql.functions.col
-    import graft.operators.Similarity
-    val emb = Tables.table(spark, "/root/testdata/sf0.001", "embeddings")
-    val (old, fresh) = (emb.filter(col("vec_id") % 2 === 0), emb.filter(col("vec_id") % 2 =!= 0))
-    val dir = tempDir("ivf-append")
-    Similarity.ivfStore(old, dir, nlist = 4, iters = 2)
-    Similarity.ivfAppend(spark, dir, fresh)
-    // the extended index covers the full corpus exactly once
-    val assigned = spark.read.parquet(s"$dir/assigned")
-    assert(assigned.count() == emb.count())
-    assert(assigned.select("vec_id").distinct().count() == emb.count())
-    // search over the extended index == search over the same centroids with
-    // a single fresh full-corpus assignment (appending must not change
-    // assignment semantics)
-    val centroids = spark.read.parquet(s"$dir/centroids")
-    val stored = Similarity.ivfSearchStored(spark, dir, emb, probeId = 1L, k = 5, nprobe = 3)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val direct = Similarity.ivfSearch(
-        org.apache.spark.sql.functions.broadcast(centroids),
-        Similarity.assignAll(emb, centroids), emb, probeId = 1L, k = 5, nprobe = 3)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(stored == direct, s"stored $stored != direct $direct")
   }
 
   test("semanticDedup: within-cluster domination only; cross-cluster near-dups exempt") {
@@ -2231,39 +2128,6 @@ class OperatorSpec extends SparkSpec {
       ("2024-01-01", 0, 2L, 1000L), ("2024-01-01", 2, 1L, 500L),
       ("2024-01-08", 0, 1L, 1000L), ("2024-01-08", 1, 1L, 1000L)),
       s"got: ${got.toSeq}")
-  }
-
-  test("ivfPqAppend: appended rows match stored-artifact assignment+encode; search sees them") {
-    import graft.operators.Similarity
-    val emb = Tables.table(spark, sf0001, "embeddings")
-    val dir = tempDir("graft-ivfpq-app")
-    Similarity.ivfPqStore(emb, dir, nlist = 4, ivfIters = 2, m = 8, k = 8, pqIters = 2)
-    // batch = copies of vectors 0..4 under fresh ids (id 1000000 + i): the
-    // id-0 copy is an exact probe duplicate the search must then surface
-    val batch = emb.filter(col("vec_id") < 5)
-      .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-    Similarity.ivfPqAppend(spark, dir, batch)
-    val appended = spark.read.parquet(s"$dir/invlists")
-      .filter(col("vec_id") >= 1000000L)
-    assert(appended.count() == 5, "append row count")
-    // codes must equal the stored-codebook encode of the same batch
-    val wantCodes = Similarity.pqEncodeStored(spark, dir, batch)
-      .select(col("vec_id"), col("code").as("want"))
-    assert(appended.join(wantCodes, "vec_id")
-      .filter(col("code") =!= col("want")).count() == 0,
-      "appended codes diverge from pqEncodeStored")
-    // buckets must equal a fresh assignment against the stored centroids
-    val wantBuckets = Similarity.assignAll(batch,
-        spark.read.parquet(s"$dir/centroids"))
-      .select(col("vec_id"), col("centroid_id").as("wantc"))
-    assert(appended.join(wantBuckets, "vec_id")
-      .filter(col("centroid_id") =!= col("wantc")).count() == 0,
-      "appended buckets diverge from assignAll on stored centroids")
-    // the appended exact duplicate of probe 0 must now rank first
-    val top = Similarity.ivfPqSearchStored(spark, dir, emb, probeId = 0L,
-      topK = 3, nprobe = 3).collect()
-    assert(top.head.getLong(0) == 1000000L,
-      s"appended duplicate not surfaced: ${top.map(_.getLong(0)).toSeq}")
   }
 
   test("applyDedupQuality: cluster keeps the highest-quality member, ties to lower id") {

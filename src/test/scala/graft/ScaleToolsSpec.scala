@@ -35,41 +35,6 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
 
   def sf0001 = "/root/testdata/sf0.001"
 
-  /** Count the Spark jobs `action` launches, scoped by job group so jobs
-    * from other suites on the shared SparkContext never leak into the count
-    * (the round-7 form counted EVERY job and slept a fixed 500 ms for
-    * listener delivery — both flake sources per the round-7 advice). The
-    * wait polls until the count is stable instead of sleeping blind.
-    */
-  private def countJobs(tag: String)(action: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (Option(js.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == tag)) {
-          jobs.incrementAndGet(); ()
-        }
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(tag, tag)
-      try action finally sc.clearJobGroup()
-      // listener delivery is async: poll until the count stops moving
-      var last = -1
-      var stableMs = 0
-      var waitedMs = 0
-      while (stableMs < 400 && waitedMs < 5000) {
-        val now = jobs.get()
-        if (now == last) stableMs += 50 else { stableMs = 0; last = now }
-        waitedMs += 50
-        Thread.sleep(50)
-      }
-      jobs.get()
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("graft_dot / graft_cosine are callable from pure SQL") {
     Tables.table(spark, sf0001, "embeddings").createOrReplaceTempView("emb")
     val r = spark.sql(
@@ -300,7 +265,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (20L, 21L), (20L, 22L), (21L, 22L))
       .toDF("a", "b")
     var got: Map[Long, Long] = Map.empty
-    val jobs = countJobs("cc-job-budget") {
+    val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
       got = ConnectedComponents.components(pairs, "a", "b")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     }
@@ -343,7 +308,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
       var pairRows = 0L
       var survivors = 0L
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"substr10x-$nDocs-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         pairRows = Dedup.exactSubstringPairs(fixture(nDocs), "doc_id", "text", n = 13).count()
         survivors = Dedup.applyDecontamination(
           fixture(nDocs), holdout(nDocs), "doc_id", "text",
@@ -460,7 +425,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
       var pairRows = 0L
       var survivors = 0L
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"apply10x-$nDocs-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         val d = fixture(nDocs)
         val pairs = Dedup.minHashLshPairs(d, "doc_id", "text",
           k = 3, numPerm = 64, bands = 16, threshold = 0.5)
@@ -518,7 +483,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
     def run(nDocs: Int): (Long, Int, Double) = {
       var pairRows = 0L
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"ngcap10x-$nDocs-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         pairRows = Dedup.ngramJaccardCappedPairs(fixture(nDocs), "doc_id", "text",
           k = 3, threshold = 0.5, maxDf = 50).count()
       }
@@ -624,7 +589,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
       var pairRows = 0L
       var planted = 0L
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"edit10x-$nPairs-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         val p = Dedup.editDistancePairs(fixture(nPairs), "doc_id", "text")
         pairRows = p.count()
         planted = p.filter(col("doc_a") % 2 === 0 &&
@@ -681,7 +646,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
       var survivors = 0L
       var canonical = 0L
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"sem10x-$n-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         val kept = Similarity.semanticDedup(
           emb, nlist = n / 250, iters = 4, threshold = 0.8)
         survivors = kept.count()
@@ -735,7 +700,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
       var rows = 0L
       var exact = 0L
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"asof10x-$n-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         val (probe, build) = fixture(n)
         val out = AsOfJoin.asOf(probe, build, "k", "pt", "bt")
         rows = out.count()
@@ -772,7 +737,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
     def run(n: Int): (Long, Long, Long, Long, Int, Double) = {
       var rows = 0L; var overflow = 0L; var bins = 0L; var tokens = 0L
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"pack10x-$n-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         val p = Packing.packChunks(spark, fixture(n), budget = 512, numShards = 8)
         rows = p.count()
         val perBin = p.groupBy("shard", "bin")
@@ -858,7 +823,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
       var survivors = 0L
       var canonical = 0L
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"semwide-$n-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         val kept = Similarity.semanticDedup(
           emb, nlist = n / 4, iters = 0, threshold = 0.8)
         survivors = kept.count()
@@ -933,7 +898,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
     def run(nDocs: Int): (Long, Int, Double) = {
       var pairRows = 0L
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"mh10x-$nDocs-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         pairRows = Dedup.minHashLshPairs(fixture(nDocs), "doc_id", "text",
           k = 3, numPerm = 64, bands = 16, threshold = 0.5).count()
       }
@@ -979,7 +944,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
       val emb = fixture(n).localCheckpoint()
       var out: Seq[(Long, Long, Double)] = Nil
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"knn10x-$n-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         out = Similarity.knnJoin(emb, probes, k = 5)
           .collect()
           .map(r => (r.getLong(0), r.getLong(2), r.getDouble(3))).toSeq
@@ -1027,7 +992,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
       var rows = 0L
       var exact = 0L
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"tfidf10x-$n-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         val top = TextAnalysis.tfidfTopTerms(fixture(n), k = 3)
         rows = top.count()
         exact = top.filter(
@@ -1048,56 +1013,6 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
     val ratio = math.min(t2a, t2b) / math.min(t1a, t1b)
     assert(ratio <= 30.0,
       f"10x docs grew tfidf wall-time $ratio%.1fx " +
-        f"(t1=${math.min(t1a, t1b)}%.2fs t2=${math.min(t2a, t2b)}%.2fs)")
-  }
-
-  test("ivfAppend survives 10x batch: volume-independent jobs, append == fresh assignment") {
-    import graft.operators.Similarity
-    // index maintenance must not re-touch the corpus: appending a batch is
-    // one broadcast of the STORED centroids + one narrow assignment + a
-    // parquet append, whatever the batch size. Planted check: the appended
-    // rows must equal a fresh assignAll against the same stored centroids
-    // (the suite pins this at fixture scale; here at 10x the batch).
-    val base = spark.range(500).select(
-      col("id").as("vec_id"),
-      array((0 until 64).map(d => uh(lit("ib"), col("id"), lit(d))): _*)
-        .as("embedding")).localCheckpoint()
-    def batch(n: Int) = spark.range(n).select(
-      (col("id") + 1000000).as("vec_id"),
-      array((0 until 64).map(d => uh(lit("nb"), col("id"), lit(d))): _*)
-        .as("embedding")).localCheckpoint()
-    def run(n: Int): (Long, Int, Double) = {
-      val dir = tempDir(s"ivf-append-$n")
-      Similarity.ivfStore(base, dir, nlist = 8, iters = 2)
-      val nv = batch(n)
-      val t0 = System.nanoTime()
-      val jobs = countJobs(s"ivfapp10x-$n-${System.nanoTime()}") {
-        Similarity.ivfAppend(spark, dir, nv)
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // appended rows == fresh assignment against the same stored centroids
-      val appended = spark.read.parquet(s"$dir/assigned")
-        .filter(col("vec_id") >= 1000000)
-        .select(col("vec_id"), col("centroid_id").as("got"))
-      val fresh = Similarity.assignAll(nv,
-          spark.read.parquet(s"$dir/centroids"))
-        .select(col("vec_id"), col("centroid_id").as("want"))
-      val diverged = appended.join(fresh, "vec_id")
-        .filter(col("got") =!= col("want")).count()
-      assert(diverged == 0, s"$diverged appended rows diverge from fresh assignment")
-      assert(appended.count() == n, s"appended ${appended.count()} of $n batch rows")
-      (n.toLong, jobs, dt)
-    }
-    run(2000) // warm plan shapes/codegen
-    val (_, j1, t1a) = run(2000)
-    val (_, _, t1b) = run(2000)
-    val (_, j2, t2a) = run(20000)
-    val (_, _, t2b) = run(20000)
-    assert(j2 <= j1 + 4,
-      s"10x batch grew the ivfAppend job count $j1 -> $j2 — a data-dependent job structure crept in")
-    val ratio = math.min(t2a, t2b) / math.min(t1a, t1b)
-    assert(ratio <= 30.0,
-      f"10x batch grew ivfAppend wall-time $ratio%.1fx " +
         f"(t1=${math.min(t1a, t1b)}%.2fs t2=${math.min(t2a, t2b)}%.2fs)")
   }
 
@@ -1143,7 +1058,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
       val df = Similarity.ivfPqSearchStored(spark, dir, emb, probeId = 0L,
         topK = 5, nprobe = 3)
       var top = Array.empty[org.apache.spark.sql.Row]
-      val jobs = countJobs(s"ivfpq10x-$n-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         top = df.collect()
       }
       assert(top.head.getLong(0) == n.toLong + 7L,
@@ -1186,7 +1101,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
       var flagged = 0L
       var survivors = 0L
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"fuzzy10x-$nDocs-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         val d = corpus(nDocs)
         val h = holdout(nDocs)
         flagged = Dedup.fuzzyContamination(d, h, "doc_id", "text",
@@ -1242,7 +1157,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
       var trimmed = 0L
       var removed = 0L
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"trim10x-$nDocs-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         val agg = Dedup.substringTrimApply(corpus(nDocs), "doc_id", "text",
             n = 13, minSpan = 20, maxDf = 50)
           .agg(sum(when(col("n_removed") > 0, 1L).otherwise(0L)).as("t"),
@@ -1293,7 +1208,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
       var trimmed = 0L
       var removed = 0L
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"trimheavy-$nDocs-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         val agg = Dedup.substringTrimApply(corpus(nDocs), "doc_id", "text",
             n = 13, minSpan = 20, maxDf = 50)
           .agg(sum(when(col("n_removed") > 0, 1L).otherwise(0L)).as("t"),
@@ -1350,7 +1265,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
       var cross = 0L
       var survivors = 0L
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"sem10x-$n-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         val f = Similarity.semanticContamination(vecs(n), holdout(n), threshold = 0.9)
         val agg = f.agg(count(lit(1)).as("n"),
           sum(when(col("vec_id") =!= col("hold_id"), 1L).otherwise(0L)).as("x"))
@@ -1404,7 +1319,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
     def run(nDocs: Int): (Seq[(String, String, Long, Long, Long)], Int, Double) = {
       var rows: Seq[(String, String, Long, Long, Long)] = Nil
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"srcov10x-$nDocs-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         rows = Dedup.sourceOverlap(corpus(nDocs), "doc_id", "text", "source",
             k = 3, maxDf = 50)
           .collect().map(r => (r.getString(0), r.getString(1),
@@ -1446,7 +1361,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
     }
     def run2(nDocs: Int): (Seq[(String, String, Long, Long, Long)], Int) = {
       var rows: Seq[(String, String, Long, Long, Long)] = Nil
-      val jobs = countJobs(s"srcov2-$nDocs-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         rows = Dedup.sourceOverlap(corpus2(nDocs), "doc_id", "text", "source",
             k = 3, maxDf = 50)
           .collect().map(r => (r.getString(0), r.getString(1),
@@ -1474,7 +1389,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
     def run(rep: Int): (Seq[(Long, String, String, Long)], Int, Double) = {
       var table: Seq[(Long, String, String, Long)] = Nil
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"bpe10x-$rep-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         table = TextAnalysis.bpeTrain(corpus(rep), nMerges = 6)
           .collect().map(r =>
             (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
@@ -1517,7 +1432,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
         txt(col("id") * stride).as("text"))
       var flagged = Set.empty[(Long, Long, Double)]
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"mhinc10x-$n-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         flagged = Dedup.dedupIncremental(spark, dir, batch, "doc_id", "text")
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       }
@@ -1631,7 +1546,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
     // flat job structure + linear wall
     def run(n: Int): (Int, Double) = {
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"tokbud10x-$n-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         Sampling.tokenBudgetPerSource(corpus(n), "doc_id", "source", "text",
           budget(n)).count()
       }
@@ -1697,7 +1612,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
     // flat job structure + linear wall
     def run(n: Int): (Int, Double) = {
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"qbud10x-$n-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         Sampling.qualityTokenBudget(corpus(n), budget(n)).count()
       }
       (jobs, (System.nanoTime() - t0) / 1e9)
@@ -1722,7 +1637,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
       var bySrc = Map.empty[String, (Long, Long)]
       var s0range: Seq[Long] = Nil
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"upsample10x-$n-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         val out = Sampling.upsampleMix(corpus(n), "doc_id", "source",
           Map("s0" -> 2.5, "s1" -> 1.0, "s2" -> 0.0))
         bySrc = out.groupBy("source")
@@ -1779,7 +1694,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
     def run(n: Int): (Long, Int, Double) = {
       var survivors = 0L
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"qual10x-$n-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         survivors = TextAnalysis.qualityFilterApply(spark, corpus(n)).count()
       }
       (survivors, jobs, (System.nanoTime() - t0) / 1e9)
@@ -1805,7 +1720,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
     def run(n: Int): (Map[Long, Long], Int, Double) = {
       var hist = Map.empty[Long, Long]
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"entropy10x-$n-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         hist = TextAnalysis.tokenEntropy(corpus(n))
           .groupBy("entropy_ubits").count()
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -1840,7 +1755,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
     def run(n: Int): (Long, Int, Double) = {
       var agreed = 0L
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"nb10x-$n-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         agreed = TextAnalysis.naiveBayesLang(corpus(n)).filter(col("agree")).count()
       }
       (agreed, jobs, (System.nanoTime() - t0) / 1e9)
@@ -1873,7 +1788,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
     def run(n: Int): (Long, Long, Int, Double) = {
       var pairs = 0L; var perfect = 0L
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"contain10x-$n-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         // one aggregate, not collect(): executing the result's global
         // orderBy adds range-boundary sampling jobs whose count scales
         // with partitioning — the agg collapses the sort away, so the job
@@ -1919,7 +1834,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
     def run(n: Int): (Map[String, Long], Int, Double) = {
       var kl = Map.empty[String, Long]
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"kldiv10x-$n-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         kl = TextAnalysis.sourceDivergence(corpus(n))
           .collect().map(r => r.getString(0) -> r.getLong(4)).toMap
       }
@@ -1954,7 +1869,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
     def run(n: Int): (Long, Int, Double) = {
       var perfect = 0L
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"pq10x-$n-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         perfect = Similarity.pqEncode(corpus(n), m = 2, k = 2, iters = 2)
           .filter(col("recon_cos") === 1.0).count()
       }
@@ -1982,7 +1897,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
     def run(n: Int): (Seq[(String, Long, Long, Boolean)], Int, Double) = {
       var rows = Seq.empty[(String, Long, Long, Boolean)]
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"mixplan10x-$n-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         rows = Sampling.mixPlan(corpus(n), "doc_id", "source", "text",
           Map("s0" -> 0.6, "s1" -> 0.4), budget = n.toLong * 3)
           .collect().map(r => (r.getString(0), r.getLong(5), r.getLong(6),
@@ -2030,7 +1945,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
     def run(nDocs: Int): (Set[Long], Int, Double) = {
       var sel = Set.empty[Long]
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"dsir10x-$nDocs-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         sel = Sampling.importanceResample(raw(nDocs), target(nDocs),
             "doc_id", "text", n = nDocs / 10)
           .filter(col("selected")).collect().map(_.getLong(0)).toSet
@@ -2074,7 +1989,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
     def run(nDocs: Int): (Long, Int, Double) = {
       var agree = 0L
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"nb10x-$nDocs-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         agree = TextAnalysis.naiveBayesLang(corpus(nDocs))
           .filter(col("agree")).count()
       }
@@ -2132,7 +2047,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
       var perCluster = Seq.empty[(Long, Long, Long)]
       var total = 0L
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"cbal10x-$n-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         val out = Similarity.clusterBalancedSample(fixture(n), nlist = 4,
           iters = 2, maxPerCluster = cap)
         perCluster = out.groupBy("centroid_id")
@@ -2186,7 +2101,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
     def run(n: Int): (Seq[(String, Double)], Int, Double) = {
       var rows = Seq.empty[(String, Double)]
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"vdrift10x-$n-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         rows = TextAnalysis.vocabDrift(snapA(n), snapB(n), topN = 10, minCount = 5)
           .select("term", "drift")
           .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
@@ -2231,7 +2146,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
     def run(n: Int): (Seq[(Int, Long, Double)], Int, Double) = {
       var rows = Seq.empty[(Int, Long, Double)]
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"hneg10x-$n-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         val corpus = fixture(n)
         rows = Similarity.hardNegatives(corpus, corpus.filter(col("vec_id") === 0), k = 3)
           .select("rank", "negative_id", "sim")
@@ -2268,7 +2183,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
     def run(n: Int): (Set[(Long, Long)], Int, Double) = {
       var pairs: Array[(Long, Long, Int)] = Array.empty
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"phash10x-$n-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         pairs = Multimodal.phashPairs(spark, fixture(n), maxDist = 3)
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
       }
@@ -2324,7 +2239,7 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
         .select(col("doc_id"),
           array_join(slice(graft.functions.Text.tokens(col("text")), 6, 21), " ").as("text"))
       val t0 = System.nanoTime()
-      val jobs = countJobs(s"pipe10x-$n-${System.nanoTime()}") {
+      val (_, jobs) = SparkSpec.jobsStartedBy(spark) {
         rows = Pipeline.trainingManifest(spark, d, holdout,
             tokenBudget = 400L * n) // budget scales with corpus: no cap stage
           .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2),

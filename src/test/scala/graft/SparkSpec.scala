@@ -14,9 +14,11 @@ trait SparkSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = Graft.session(getClass.getSimpleName, "4")
 
   def sf0001 = "/root/testdata/sf0.001"
+}
 
+object SparkSpec {
   /** Runs `body` and counts the Spark jobs it started on this thread. */
-  def jobsStartedBy[A](body: => A): (A, Int) = {
+  def jobsStartedBy[A](spark: SparkSession)(body: => A): (A, Int) = {
     val tag = "graft.jobs.probe"
     val seen = new ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
@@ -42,9 +44,7 @@ trait SparkSpec extends AnyFunSuite with TempDirs {
       sc.removeSparkListener(listener)
     }
   }
-}
 
-object SparkSpec {
   /** Runs `body` and returns, per stage, the shuffle records each task read,
     * for every task on `spark`'s context that read any.
     */

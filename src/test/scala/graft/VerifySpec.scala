@@ -19,4 +19,22 @@ class VerifySpec extends AnyFunSuite with TempDirs {
     assert(Files.exists(keep), "only the legacy dir may go")
     Verify.removeLegacyCanonical(out.toString) // absent dir: no-op
   }
+
+  test("query subset: a wrong argument count or an unknown name is rejected") {
+    val known = Set("q1_filter_project", "q2_agg")
+    assert(Verify.parseArgs(Array("sf", "out"), known) == Right(("sf", "out", None)))
+    assert(Verify.parseArgs(Array("sf", "out", "q2_agg,q1_filter_project"), known) ==
+      Right(("sf", "out", Some(known))))
+    assert(Verify.parseArgs(Array("sf"), known) == Left("expected 2 or 3 arguments, got 1"))
+    assert(Verify.parseArgs(Array("sf", "out", "q2_agg", "x"), known).isLeft)
+    assert(Verify.parseArgs(Array("sf", "out", "q2_agg,q9_typo"), known) ==
+      Left("unknown queries 'q9_typo'"))
+    assert(Verify.parseArgs(Array("sf", "out", "q2_agg,"), known) == Left("unknown queries ''"))
+  }
+
+  test("query subset: oracle_sql.json carries only the subset's entries") {
+    val oracle = Map("a" -> "SELECT 1", "b" -> "SELECT 2", "c" -> "SELECT 3")
+    assert(Verify.oracleFor(oracle, None) == oracle)
+    assert(Verify.oracleFor(oracle, Some(Set("b", "rows_only"))) == Map("b" -> "SELECT 2"))
+  }
 }

@@ -36,13 +36,13 @@ class ServingSpec extends SparkSpec {
     val plan = query.queryExecution.executedPlan
     assert(plan.isInstanceOf[LocalTableScanExec], s"not a bare local scan:\n$plan")
     assert(plan.collect { case f: FilterExec => f }.isEmpty, s"post-scan filter left:\n$plan")
-    val (found, jobs) = jobsStartedBy(rows(query))
+    val (found, jobs) = SparkSpec.jobsStartedBy(spark)(rows(query))
     assert(found == Seq("c00042" -> Seq("c00042:::T0")))
     assert(jobs == 0, s"a one-client lookup started $jobs jobs")
   }
 
   test("a missing client returns no rows, with no job") {
-    val (found, jobs) = jobsStartedBy(rows(lookup(large.viewName, "nobody")))
+    val (found, jobs) = SparkSpec.jobsStartedBy(spark)(rows(lookup(large.viewName, "nobody")))
     assert(found.isEmpty && jobs == 0)
   }
 
