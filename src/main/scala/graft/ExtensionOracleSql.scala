@@ -384,8 +384,8 @@ object ExtensionOracleSql {
 
   /** One deterministic Lloyd round: assign to nearest cent${n-1} (cosine,
     * rounded to 6, ties to lower id), then recompute means with exact
-    * integer-quantized sums — in lock-step with
-    * graft.operators.Similarity.lloydCentroids.
+    * integer-quantized sums — in lock-step with the training kernel
+    * graft.operators.Similarity.lloydFrame over whole vectors.
     */
   private def lloydIterCte(n: Int, src: String = "embeddings"): String =
     s"""asg$n AS (
@@ -422,10 +422,10 @@ object ExtensionOracleSql {
     */
   private val lloydBestCtes: String = lloydBestCtesN(4)
 
-  /** Per-subspace PQ Lloyd chain (in lock-step with
-    * graft.operators.Similarity.pqCodebooks): sub-sliced vectors, seedless
-    * init from the k lowest vec_ids, `iters` assign/recompute rounds with
-    * the same integer-quantized exact means as [[lloydIterCte]].
+  /** Per-subspace PQ Lloyd chain (in lock-step with the training kernel
+    * graft.operators.Similarity.lloydFrame over the m slices): sub-sliced
+    * vectors, seedless init from vec_id < k, `iters` assign/recompute rounds
+    * with the same integer-quantized exact means as [[lloydIterCte]].
     */
   private def pqSubCtes(s: Int, sub: Int, k: Int, iters: Int): String = {
     val lo = s * sub + 1

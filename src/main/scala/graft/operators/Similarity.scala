@@ -16,10 +16,16 @@ import graft.functions.{Vectors => VecF}
   *    scale the pair join is a block nested loop. The 100 TB path is bucketed
   *    candidate generation (hyperplane LSH), same final filter.
   *  - [[ivfTopK]]: IVF-style bucketed search — vectors are assigned to their
-  *    nearest k-means centroid at "index build" time ([[lloydCentroids]]:
-  *    seedless init + deterministic Lloyd rounds with exact integer-quantized
-  *    means, so the index is oracle-checkable); a probe only scans `nprobe`
-  *    centroid buckets (partition pruning by centroid id).
+  *    nearest k-means centroid at "index build" time; a probe only scans
+  *    `nprobe` centroid buckets (partition pruning by centroid id).
+  *  - [[pqEncode]] / [[pqTopK]] / [[ivfPqTopK]]: product quantization and
+  *    IVFADC over per-subspace codebooks.
+  *
+  * Every index trains through ONE kernel, [[lloydFrame]]: IVF centroids are
+  * k-means over whole vectors and PQ codebooks are k-means over sub-vectors
+  * (Jégou et al. 2011), so both are the same keyed Lloyd loop — seedless
+  * init + deterministic rounds with exact integer-quantized means, so every
+  * index is oracle-checkable.
   */
 object Similarity {
 
@@ -227,27 +233,22 @@ object Similarity {
     * width, 0 for an empty corpus. One `LIMIT 1` job — index metadata, not a
     * data-volume scan.
     *
-    * The hyperplane projections built from this width assume a RECTANGULAR
-    * corpus; a ragged one would silently mis-project (sign bits computed
-    * over a prefix/past-the-end of each vector). By default a second
-    * one-aggregate `min(size) = max(size)` check fails LOUDLY on ragged
-    * input. The check is a narrow column-pruned pass; on petabyte corpora
-    * already validated at ingest, disable it via
-    * `spark.graft.embedding.widthCheck=false`.
+    * The hyperplane projections and PQ slices built from this width assume
+    * a RECTANGULAR corpus; a ragged one would silently mis-project (sign
+    * bits computed over a prefix/past-the-end of each vector). A second
+    * one-aggregate `min(size) = max(size)` check (a narrow column-pruned
+    * pass) fails LOUDLY on ragged input.
     */
   private def embeddingDim(emb: DataFrame): Int = {
     val first = emb.select(size(col("embedding")).as("d")).head(1)
       .headOption.map(_.getInt(0)).getOrElse(0)
-    val check = emb.sparkSession.conf
-      .get("spark.graft.embedding.widthCheck", "true").toBoolean
-    if (check && first > 0) {
+    if (first > 0) {
       val r = emb.agg(min(size(col("embedding"))).as("mn"),
         max(size(col("embedding"))).as("mx")).head()
       if (r.getInt(0) != r.getInt(1))
         throw new IllegalArgumentException(
           s"ragged embedding corpus: vector widths span ${r.getInt(0)}..${r.getInt(1)} — " +
-            "hyperplane projections would silently mis-project. Fix the corpus, or set " +
-            "spark.graft.embedding.widthCheck=false for corpora validated at ingest.")
+            "hyperplane projections would silently mis-project. Fix the corpus.")
     }
     first
   }
@@ -347,71 +348,128 @@ object Similarity {
       .limit(topK)
   }
 
-  /** Nearest-centroid assignment: max cosine, ties toward the lower
-    * centroid id. One broadcast of the (tiny) centroid set, one narrow pass.
-    *
-    * Groups by `vec_id` ONLY — the embedding rides along via `first` (every
-    * row in a group carries the identical array, so `first` is
-    * deterministic). Grouping by the array itself would hash+compare ~1 KB
-    * keys per row in the aggregate exchange; at Lloyd-loop call frequency
-    * that was the measured hot spot of the IVF build.
+  /** Deterministic k-means (Lloyd) centroids over WHOLE vectors: the
+    * one-subspace case of the [[lloydFrame]] kernel (seeds: vec_id < nlist),
+    * as the uncollected `(centroid_id, cvec)` frame.
     */
-  private def assignToCentroids(emb: DataFrame, centroids: DataFrame): DataFrame =
-    emb.crossJoin(broadcast(centroids))
-      .withColumn("csim", round(VecF.cosine(col("embedding"), col("cvec")), 6))
-      .groupBy(col("vec_id"))
-      .agg(
-        max_by(col("centroid_id"), struct(col("csim"), -col("centroid_id"))).as("centroid_id"),
-        first(col("embedding")).as("embedding"))
+  def lloydCentroids(emb: DataFrame, nlist: Int, iters: Int): DataFrame =
+    lloydFrame(wholeVectors(emb), Seq(nlist), iters)
+      .select(col("cid").as("centroid_id"), col("cvec"))
 
-  /** Deterministic k-means (Lloyd) centroids: seedless init = the `nlist`
-    * lowest vec_ids, then `iters` assign/recompute rounds.
+  /** The Lloyd training kernel every index here trains through. `subs`
+    * holds `(vec_id, s, sv)` rows — one per vector and subspace `s`, with
+    * `sv` that subspace's (sub-)vector; subspace `s` seeds from the vectors
+    * with vec_id < `widths(s)`, then `iters` [[lloydRound]]s run over all
+    * subspaces at once. Out come `(s, cid, cvec)` rows, cvec double-typed:
+    * at 0 rounds the double-cast seeds.
     *
     * Cross-engine determinism of the mean: float sums are order-dependent, so
     * each component is quantized to an exact integer (`floor(x * 1e9)`),
     * summed exactly (decimal — overflow-proof at any cluster size), and only
     * then divided back in double. Both engines do the identical IEEE ops, so
-    * centroids are bit-identical and the index stays oracle-checkable.
+    * centroids are bit-identical and the index stays oracle-checkable. The
+    * double-cast seeds are value-exact: dot products accumulate float and
+    * double inputs alike in double.
     *
-    * Scale shape per iteration: one broadcast join (centroids are nlist
-    * rows), one partial-agg groupBy on (centroid, dim) — no shuffle of the
-    * vectors themselves beyond the aggregation exchange.
+    * Scale shape per round: one broadcast join (Σ widths centroid rows), one
+    * partial-agg groupBy on (subspace, centroid, dim) — no shuffle of the
+    * vectors themselves beyond the aggregation exchange. Subspaces share
+    * every job, so training m PQ codebooks plus the IVF quantizer costs one
+    * deep plan, not m + 1 (measured: the separate form put the one-shot
+    * IVFADC query at 4.15 s at sf0.1).
     */
-  def lloydCentroids(emb: DataFrame, nlist: Int, iters: Int): DataFrame = {
-    val init = emb.filter(col("vec_id") < nlist)
-      .select(col("vec_id").as("centroid_id"), col("embedding").as("cvec"))
-    (1 to iters).foldLeft(init)((cent, _) => lloydRound(emb, cent))
+  private def lloydFrame(subs: DataFrame, widths: Seq[Int], iters: Int): DataFrame = {
+    // the s-free bound first: it pushes below the subspace explode
+    val init = subs.filter(col("vec_id") < widths.max)
+      .filter(col("vec_id") < element_at(typedLit(widths), col("s") + 1))
+      .select(col("s"), col("vec_id").as("cid"), col("sv").cast("array<double>").as("cvec"))
+    (1 to iters).foldLeft(init)((cent, _) => lloydRound(subs, cent))
   }
 
-  /** One Lloyd assign/recompute round of [[lloydCentroids]]. */
-  private def lloydRound(emb: DataFrame, cent: DataFrame): DataFrame =
-    assignToCentroids(emb, cent)
-      .select(col("centroid_id"), posexplode(col("embedding")).as(Seq("idx", "comp")))
+  /** One Lloyd round of [[lloydFrame]]: assignment (max round-6 cosine,
+    * ties to the lower cid) and the integer-quantized exact means both run
+    * under (subspace, …) keys, so every subspace trains independently.
+    * The sub-vector rides the assignment via `first` (identical within a
+    * (vec_id, s) group): grouping by the array itself would hash and
+    * compare ~1 KB keys per row in the exchange, the measured hot spot of
+    * the IVF build.
+    */
+  private def lloydRound(subs: DataFrame, cent: DataFrame): DataFrame =
+    subs.join(broadcast(cent), "s")
+      .withColumn("csim", round(VecF.cosine(col("sv"), col("cvec")), 6))
+      .groupBy(col("vec_id"), col("s"))
+      .agg(max_by(col("cid"), struct(col("csim"), -col("cid"))).as("cid"),
+        first(col("sv")).as("sv"))
+      .select(col("s"), col("cid"), posexplode(col("sv")).as(Seq("idx", "comp")))
       .withColumn("q", floor(col("comp").cast("double") * lit(1e9)).cast(DecimalType(38, 0)))
-      .groupBy(col("centroid_id"), col("idx"))
+      .groupBy(col("s"), col("cid"), col("idx"))
       .agg((sum(col("q")).cast("double") / (lit(1e9) * count(lit(1)))).as("cval"))
-      .groupBy(col("centroid_id"))
+      .groupBy(col("s"), col("cid"))
       .agg(transform(sort_array(collect_list(struct(col("idx"), col("cval")))),
         x => x.getField("cval")).as("cvec"))
 
-  /** [[lloydCentroids]] materialized to a local relation: the centroid set
-    * is `nlist` rows of index METADATA (bounded by construction, like any
-    * broadcast dimension), so one driver collect evaluates the Lloyd passes
-    * exactly once and hands every downstream consumer a broadcastable local
-    * table — no cached-DataFrame leak, no per-consumer recompute of the
-    * training passes.
+  /** [[lloydFrame]] in ONE collect of the full iters-deep plan: a
+    * cid-sorted book per subspace.
+    *
+    * Two rejected-by-measurement alternatives are worth recording. (a) A
+    * per-round collect keeping the broadcast-join assignment: ~1.7x slower
+    * (dedup_semantic 2.7 -> 4.5 s) — five small jobs each pay scheduling +
+    * a broadcast build. (b) Per-round literal-projection assignment
+    * (each round's centroids baked in as literals): still slower than the
+    * deep plan (dedup_semantic ~2.0 -> 2.4 s) — every round's literals
+    * produce a DIFFERENT expression tree, so whole-stage codegen cache
+    * misses and janino recompiles per round. The deep plan compiles each
+    * shape once and AQE's many tiny query stages measure cheaper than
+    * either. Literal assignment still wins where it runs ONCE — see
+    * [[nearestCentroidScored]] consumers.
     */
+  private def lloydBooks(subs: DataFrame, widths: Seq[Int],
+                         iters: Int): Seq[Seq[(Long, Array[Double])]] =
+    decodeBooks(lloydFrame(subs, widths, iters), widths.size)
+
+  /** Collect `(subspace, cid, cvec)` rows — a trained frame or stored
+    * codebooks — into one cid-sorted book per subspace, for subspaces
+    * 0 until max(n, highest subspace + 1).
+    */
+  private def decodeBooks(rows: DataFrame, n: Int = 0): Seq[Seq[(Long, Array[Double])]] = {
+    val rs = rows.collect()
+      .map(r => (r.getInt(0), (r.getLong(1), r.getSeq[Double](2).toArray)))
+    (0 until (n +: rs.map(_._1 + 1)).max)
+      .map(s => rs.filter(_._1 == s).map(_._2).sortBy(_._1).toSeq)
+  }
+
+  /** The whole vector as the kernel's one subspace, 0. No width probe: the
+    * full vector needs no slicing.
+    */
+  private def wholeVectors(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"), lit(0).as("s"), col("embedding").as("sv"))
+
+  /** The `m` contiguous PQ sub-vector columns, sized from the width the
+    * data reports; empty for an empty corpus.
+    */
+  private def pqSlices(emb: DataFrame, m: Int): Seq[Column] = {
+    val dim = embeddingDim(emb)
+    require(dim % m == 0, s"embedding dim $dim not divisible into $m subspaces")
+    val sub = dim / m
+    if (dim == 0) Seq.empty
+    else (0 until m).map(s => slice(col("embedding"), s * sub + 1, sub))
+  }
+
+  /** The kernel's `(vec_id, s, sv)` table with subspace `s` = `parts(s)`. */
+  private def subspaces(emb: DataFrame, parts: Seq[Column]): DataFrame =
+    emb.select(col("vec_id"), posexplode(array(parts: _*)).as(Seq("s", "sv")))
+
   /** Nearest-centroid scoring with the centroid set baked into the
     * projection as LITERALS: one struct per centroid — (-csim, cid), csim
-    * rounded to 6 like [[assignToCentroids]] — and `array_min` picks the
+    * rounded to 6 like [[lloydRound]] — and `array_min` picks the
     * lexicographic minimum, i.e. max csim with ties to the LOWEST centroid
-    * id: exactly [[assignToCentroids]]'s `max_by(struct(csim, -cid))` order.
+    * id: exactly [[lloydRound]]'s `max_by(struct(csim, -cid))` order.
     * Because the centroids are driver-local index metadata (bounded like any
     * broadcast dimension), this turns assignment into a NARROW codegen
     * projection — no broadcast-build job, no per-vector groupBy exchange.
     * Result fields: `cid` (the assignment) and `neg` (-csim to the chosen
     * centroid). Input must expose an `embedding` column; unlike the groupBy
-    * in [[assignToCentroids]] this never deduplicates vec_ids, so inputs
+    * in [[lloydRound]] this never deduplicates vec_ids, so inputs
     * must be (and are) unique by construction.
     */
   private def nearestCentroidScored(cents: Seq[(Long, Array[Double])]): Column = {
@@ -484,35 +542,12 @@ object Similarity {
       .getOrElse(lloydCentroidsLocalValues(emb, nlist, iters))
 
   /** Lloyd centroids as driver-local VALUES: one collect of the full
-    * iters-deep [[lloydCentroids]] plan.
-    *
-    * Two rejected-by-measurement alternatives are worth recording. (a) A
-    * per-round collect keeping the broadcast-join assignment: ~1.7x slower
-    * (dedup_semantic 2.7 -> 4.5 s) — five small jobs each pay scheduling +
-    * a broadcast build. (b) Per-round literal-projection assignment
-    * (each round's centroids baked in as literals): still slower than the
-    * deep plan (dedup_semantic ~2.0 -> 2.4 s) — every round's literals
-    * produce a DIFFERENT expression tree, so whole-stage codegen cache
-    * misses and janino recompiles per round. The deep plan compiles each
-    * shape once and AQE's many tiny query stages measure cheaper than
-    * either. Literal assignment still wins where it runs ONCE — see
-    * [[nearestCentroidScored]] consumers.
-    *
-    * iters = 0 short-circuits to the init set (the nlist lowest vec_ids),
-    * cast to double on the way out — Lloyd-round outputs are double-typed
-    * quantized means, but the raw init embeddings may be float[].
+    * iters-deep [[lloydFrame]] plan over whole vectors (seeds: vec_id <
+    * nlist).
     */
   def lloydCentroidsLocalValues(emb: DataFrame, nlist: Int,
-                                iters: Int): Seq[(Long, Array[Double])] = {
-    val frame =
-      if (iters == 0)
-        emb.filter(col("vec_id") < nlist)
-          .select(col("vec_id").as("centroid_id"),
-            col("embedding").cast("array<double>").as("cvec"))
-      else lloydCentroids(emb, nlist, iters)
-    frame.collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq.sortBy(_._1)
-  }
+                                iters: Int): Seq[(Long, Array[Double])] =
+    lloydBooks(wholeVectors(emb), Seq(nlist), iters).head
 
   private def centroidsToDF(spark: org.apache.spark.sql.SparkSession,
                             cents: Seq[(Long, Array[Double])]): DataFrame = {
@@ -521,7 +556,7 @@ object Similarity {
   }
 
   /** IVF top-k: assign every vector to its nearest of `nlist` centroids
-    * (k-means: seedless init from the lowest vec_ids + `iters` deterministic
+    * (k-means: seedless init from vec_id < nlist + `iters` deterministic
     * Lloyd rounds); search only the `nprobe` centroid buckets nearest to the
     * probe. Ties in centroid assignment break toward the lower centroid id.
     *
@@ -575,15 +610,8 @@ object Similarity {
                 probeId: Long, k: Int, nprobe: Int): DataFrame = {
     val probeVec = emb.filter(col("vec_id") === probeId)
       .select(col("embedding").as("probe"))
-    val probeBuckets = broadcast(
-      centroids.crossJoin(broadcast(probeVec))
-        .withColumn("csim", round(VecF.cosine(col("cvec"), col("probe")), 6))
-        .orderBy(col("csim").desc, col("centroid_id"))
-        .limit(nprobe)
-        .select(col("centroid_id")))
-
     assigned
-      .join(probeBuckets, "centroid_id") // bucket pruning
+      .join(broadcast(probedBuckets(centroids, probeVec, nprobe)), "centroid_id")
       .filter(col("vec_id") =!= probeId)
       .crossJoin(broadcast(probeVec))
       .withColumn("sim", round(VecF.cosine(col("embedding"), col("probe")), 6))
@@ -591,6 +619,18 @@ object Similarity {
       .orderBy(col("sim").desc, col("vec_id"))
       .limit(k)
   }
+
+  /** The ids of the `nprobe` centroids nearest the probe (round-6 cosine,
+    * ties to the lower id): the bucket prune of every single-probe IVF
+    * search. `probeVec` is the one-row `probe` frame.
+    */
+  private def probedBuckets(centroids: DataFrame, probeVec: DataFrame,
+                            nprobe: Int): DataFrame =
+    centroids.crossJoin(broadcast(probeVec))
+      .withColumn("csim", round(VecF.cosine(col("cvec"), col("probe")), 6))
+      .orderBy(col("csim").desc, col("centroid_id"))
+      .limit(nprobe)
+      .select(col("centroid_id"))
 
   /** Persist the IVF index to storage (the serving layout): centroids +
     * per-vector bucket assignment as parquet. Build once, search many —
@@ -619,9 +659,9 @@ object Similarity {
   /** Product-Quantization codebooks (Jégou et al. 2011, "Product
     * quantization for nearest neighbor search"): the embedding dimension is
     * split into `m` contiguous subspaces and each subspace gets its own
-    * deterministic Lloyd codebook of `k` sub-centroids ([[lloydCentroids]]'
-    * seedless init + integer-quantized exact means, so every codebook is
-    * oracle-checkable). A vector's PQ code is its m nearest-sub-centroid
+    * deterministic Lloyd codebook of `k` sub-centroids: the m-subspace case
+    * of the [[lloydFrame]] kernel (seeds: vec_id < k), so every codebook is
+    * oracle-checkable. A vector's PQ code is its m nearest-sub-centroid
     * ids — m·log2(k) bits instead of dim·32: the memory-compression scale
     * path that lets a 100 TB embedding corpus's index live in RAM (64-dim
     * float → 4 bytes at m=4/k=4... 256× smaller at web scale with
@@ -632,56 +672,19 @@ object Similarity {
     */
   def pqCodebooks(emb: DataFrame, m: Int = 4, k: Int = 4,
                   iters: Int = 2): Seq[Seq[(Long, Array[Double])]] = {
-    val dim = embeddingDim(emb)
-    if (dim == 0) return Seq.empty
-    require(dim % m == 0, s"embedding dim $dim not divisible into $m subspaces")
-    val sub = dim / m
-    // ALL m codebooks train in ONE deep plan keyed by subspace — the first
-    // draft ran m independent Lloyd builds (m sequential collect plans, and
-    // the ADC query re-trained them again: 4.8-5.9 s at sf0.1); jointly the
-    // sub-vector table is exploded once, every round is one broadcast join
-    // (m·k centroid rows) + keyed aggregations, and ONE collect returns all
-    // m·k centroids (bounded index metadata). Per-subspace math is
-    // untouched: each subspace's assignments and quantized means live under
-    // their own (subspace, …) keys, so the result is identical to m
-    // independent [[lloydCentroids]] runs — which is what the oracle runs.
-    val subs = emb.select(col("vec_id"), posexplode(
-      array((0 until m).map(s => slice(col("embedding"), s * sub + 1, sub)): _*))
-      .as(Seq("s", "sv")))
-    val init = subs.filter(col("vec_id") < k)
-      .select(col("s"), col("vec_id").as("cid"), col("sv").cast("array<double>").as("cvec"))
-    val fin = (1 to iters).foldLeft(init)((cent, _) => pqLloydRound(subs, cent))
-    val rows = fin.collect()
-      .map(r => (r.getInt(0), (r.getLong(1), r.getSeq[Double](2).toArray)))
-    (0 until m).map(s => rows.filter(_._1 == s).map(_._2).sortBy(_._1).toSeq)
+    val slices = pqSlices(emb, m)
+    if (slices.isEmpty) Seq.empty
+    else lloydBooks(subspaces(emb, slices), Seq.fill(m)(k), iters)
   }
-
-  /** One joint Lloyd round over every subspace at once: assignment and the
-    * integer-quantized exact means both run under (subspace, …) keys, in
-    * exact lock-step with [[lloydRound]] applied per subspace.
-    */
-  private def pqLloydRound(subs: DataFrame, cent: DataFrame): DataFrame =
-    subs.join(broadcast(cent), "s")
-      .withColumn("csim", round(VecF.cosine(col("sv"), col("cvec")), 6))
-      .groupBy(col("vec_id"), col("s"))
-      .agg(max_by(col("cid"), struct(col("csim"), -col("cid"))).as("cid"),
-        first(col("sv")).as("sv"))
-      .select(col("s"), col("cid"), posexplode(col("sv")).as(Seq("idx", "comp")))
-      .withColumn("q", floor(col("comp").cast("double") * lit(1e9)).cast(DecimalType(38, 0)))
-      .groupBy(col("s"), col("cid"), col("idx"))
-      .agg((sum(col("q")).cast("double") / (lit(1e9) * count(lit(1)))).as("cval"))
-      .groupBy(col("s"), col("cid"))
-      .agg(transform(sort_array(collect_list(struct(col("idx"), col("cval")))),
-        x => x.getField("cval")).as("cvec"))
 
   /** PQ ENCODE report: every vector's PQ code plus its reconstruction
     * cosine (similarity between the original vector and its code's
     * concatenated sub-centroids) — the compression-quality sweep run before
     * committing a corpus to a PQ index.
     *
-    * Shape at scale: codebook training is m Lloyd builds over SLICED
-    * vectors (each round a narrow projection + bounded aggregation, like
-    * [[lloydCentroids]]); encoding is ONE narrow codegen projection — every
+    * Shape at scale: codebook training is one [[lloydFrame]] plan over the
+    * m SLICED subspaces (each round a broadcast join + bounded keyed
+    * aggregation); encoding is ONE narrow codegen projection — every
     * subspace's argmin over k literal centroid structs rides the same
     * `array_min` pattern as [[nearestCentroidScored]], and the chosen
     * sub-centroid's dot/norm components ride the winning struct, so the
@@ -740,10 +743,16 @@ object Similarity {
     * by scheduled re-trains, like IVF centroid drift.
     */
   def pqStore(emb: DataFrame, dir: String, m: Int = 8, k: Int = 8,
-              iters: Int = 2): Unit = {
-    val spark = emb.sparkSession
+              iters: Int = 2): Unit =
+    writeBooks(emb.sparkSession, pqCodebooks(emb, m, k, iters), dir)
+
+  /** Write per-subspace books as `$dir/codebooks`, one row per (subspace,
+    * cid) — the layout [[decodeBooks]] reads back.
+    */
+  private def writeBooks(spark: org.apache.spark.sql.SparkSession,
+                         books: Seq[Seq[(Long, Array[Double])]], dir: String): Unit = {
     import spark.implicits._
-    pqCodebooks(emb, m, k, iters).zipWithIndex
+    books.zipWithIndex
       .flatMap { case (cents, s) => cents.map { case (cid, v) => (s, cid, v.toSeq) } }
       .toDF("subspace", "cid", "cvec")
       .coalesce(1)
@@ -757,13 +766,8 @@ object Similarity {
     * rows, the broadcast-dimension class).
     */
   def pqEncodeStored(spark: org.apache.spark.sql.SparkSession, dir: String,
-                     emb: DataFrame): DataFrame = {
-    val rows = spark.read.parquet(s"$dir/codebooks").collect()
-      .map(r => (r.getInt(0), (r.getLong(1), r.getSeq[Double](2).toArray)))
-    val m = if (rows.isEmpty) 0 else rows.map(_._1).max + 1
-    encodeWithBooks(emb,
-      (0 until m).map(s => rows.filter(_._1 == s).map(_._2).sortBy(_._1).toSeq))
-  }
+                     emb: DataFrame): DataFrame =
+    encodeWithBooks(emb, decodeBooks(spark.read.parquet(s"$dir/codebooks")))
 
   /** PQ asymmetric-distance (ADC) top-k search: the probe stays EXACT while
     * every corpus vector is represented only by its PQ code — similarity is
@@ -843,53 +847,26 @@ object Similarity {
   /** (IVF centroids, per-subspace PQ codebooks). */
   type IvfPqBooks = (Seq[(Long, Array[Double])], Seq[Seq[(Long, Array[Double])]])
 
-  /** Both quantizers of [[ivfPqTopK]]: equal round counts train jointly in
-    * one deep plan ([[jointIvfPqBooks]]); unequal counts fall back to the
-    * two separate trainings.
+  /** Both quantizers of [[ivfPqTopK]] and [[ivfPqStore]]. Equal round
+    * counts train jointly in ONE [[lloydFrame]] plan: the whole vector rides
+    * as subspace `m` beside the m PQ slices, with its own seed width
+    * (`nlist` instead of `k`), and one collect returns (m·k + nlist) rows.
+    * Per-subspace keys keep the numbers identical to two separate
+    * trainings, so the shared DuckDB oracle chains apply unchanged. Unequal
+    * counts train through the kernel twice.
     */
   private[graft] def trainIvfPq(emb: DataFrame, p: IvfPqParams): IvfPqBooks =
-    if (p.ivfIters == p.pqIters) jointIvfPqBooks(emb, p.nlist, p.m, p.k, p.pqIters)
-    else (lloydCentroidsLocalValues(emb, p.nlist, p.ivfIters),
-      pqCodebooks(emb, p.m, p.k, p.pqIters))
-
-  /** JOINT IVF + PQ training: the m PQ sub-codebooks AND the full-vector IVF
-    * coarse quantizer train in ONE deep plan — the full vector rides as
-    * pseudo-subspace `m` with its own init width (`nlist` instead of `k`),
-    * and every Lloyd round is one broadcast join + keyed aggregations over
-    * all m+1 subspaces at once, ending in ONE bounded collect
-    * ((m·k + nlist) rows of index metadata). Requires equal round counts.
-    *
-    * Numbers are IDENTICAL to separate [[pqCodebooks]] + [[lloydCentroids]]
-    * runs: assignments and quantized means live under their own
-    * (subspace, …) keys, [[pqLloydRound]]'s per-(vec_id, s) max_by is
-    * exactly [[lloydRound]]'s per-vec_id assignment for s = m, and
-    * float→double casts are value-exact — so the shared DuckDB oracle
-    * chains apply unchanged. Motivation is measured: the separate form ran
-    * two sequential collect plans and put the one-shot IVFADC query at
-    * 4.15 s (sf0.1, near-idle) — far over the repo's 2.5 s bar; jointly the
-    * sub-vector table explodes once and scheduling overhead halves.
-    */
-  private[graft] def jointIvfPqBooks(emb: DataFrame, nlist: Int, m: Int, k: Int,
-                                     iters: Int): IvfPqBooks = {
-    val dim = embeddingDim(emb)
-    if (dim == 0) return (Seq.empty, Seq.empty)
-    require(dim % m == 0, s"embedding dim $dim not divisible into $m subspaces")
-    val sub = dim / m
-    val slices = (0 until m).map(s => slice(col("embedding"), s * sub + 1, sub)) :+
-      col("embedding")
-    val subs = emb.select(col("vec_id"),
-      posexplode(array(slices: _*)).as(Seq("s", "sv")))
-    val init = subs.filter(
-        (col("s") < m && col("vec_id") < k) ||
-          (col("s") === m && col("vec_id") < nlist))
-      .select(col("s"), col("vec_id").as("cid"), col("sv").cast("array<double>").as("cvec"))
-    val fin = (1 to iters).foldLeft(init)((cent, _) => pqLloydRound(subs, cent))
-    val rows = fin.collect()
-      .map(r => (r.getInt(0), (r.getLong(1), r.getSeq[Double](2).toArray)))
-    val books = (0 until m).map(s => rows.filter(_._1 == s).map(_._2).sortBy(_._1).toSeq)
-    val cents = rows.filter(_._1 == m).map(_._2).sortBy(_._1).toSeq
-    (cents, books)
-  }
+    if (p.ivfIters != p.pqIters)
+      (lloydCentroidsLocalValues(emb, p.nlist, p.ivfIters), pqCodebooks(emb, p.m, p.k, p.pqIters))
+    else {
+      val slices = pqSlices(emb, p.m)
+      if (slices.isEmpty) (Seq.empty, Seq.empty)
+      else {
+        val books = lloydBooks(subspaces(emb, slices :+ col("embedding")),
+          Seq.fill(p.m)(p.k) :+ p.nlist, p.pqIters)
+        (books.last, books.init)
+      }
+    }
 
   /** IVF + PQ composed ANN search — IVFADC (Jégou et al. 2011 §IV), the
     * architecture web-scale vector serving actually deploys (FAISS
@@ -900,8 +877,8 @@ object Similarity {
     * memory drops to m·log2(k) bits. `exact_sim` rides along as the ADC-error
     * report, like [[pqTopK]].
     *
-    * Both trainings are the deterministic Lloyd chains ([[lloydCentroids]] /
-    * [[pqCodebooks]]), so the full composition stays oracle-checkable. The
+    * Both quantizers train through the deterministic Lloyd kernel
+    * ([[trainIvfPq]]), so the full composition stays oracle-checkable. The
     * bucket prune is an equi-join against the broadcast nprobe-row bucket
     * list; ranking is `TakeOrderedAndProject`. Ties break to the lower
     * vec_id. For the steady-state serving plan (stored index, code-only
@@ -924,14 +901,9 @@ object Similarity {
       .select(col("vec_id"), col("centroid_id"), col("embedding"))
     val probeVec = emb.filter(col("vec_id") === probeId)
       .select(col("embedding").as("probe"))
-    val probeBuckets = broadcast(
-      centroidsToDF(emb.sparkSession, cents).crossJoin(broadcast(probeVec))
-        .withColumn("csim", round(VecF.cosine(col("cvec"), col("probe")), 6))
-        .orderBy(col("csim").desc, col("centroid_id"))
-        .limit(nprobe)
-        .select(col("centroid_id")))
+    val probeBuckets = probedBuckets(centroidsToDF(emb.sparkSession, cents), probeVec, nprobe)
     adcScore(
-      assigned.join(probeBuckets, "centroid_id") // bucket pruning
+      assigned.join(broadcast(probeBuckets), "centroid_id") // bucket pruning
         .filter(col("vec_id") =!= probeId)
         .crossJoin(broadcast(probeVec)),
       books)
@@ -953,14 +925,8 @@ object Similarity {
                  nlist: Int = 4, ivfIters: Int = 4,
                  m: Int = 8, k: Int = 8, pqIters: Int = 2): Unit = {
     val spark = emb.sparkSession
-    import spark.implicits._
-    val books = pqCodebooks(emb, m, k, pqIters)
-    books.zipWithIndex
-      .flatMap { case (cents, s) => cents.map { case (cid, v) => (s, cid, v.toSeq) } }
-      .toDF("subspace", "cid", "cvec")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/codebooks")
-    val cents = lloydCentroidsLocalValues(emb, nlist, ivfIters)
+    val (cents, books) = trainIvfPq(emb, IvfPqParams(nlist, ivfIters, m, k, pqIters))
+    writeBooks(spark, books, dir)
     centroidsToDF(spark, cents).coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/centroids")
     assignScored(emb, cents)
@@ -992,11 +958,8 @@ object Similarity {
   def ivfPqSearchStored(spark: org.apache.spark.sql.SparkSession, dir: String,
                         emb: DataFrame, probeId: Long, topK: Int,
                         nprobe: Int = 3): DataFrame = {
-    val bookRows = spark.read.parquet(s"$dir/codebooks").collect()
-      .map(r => (r.getInt(0), (r.getLong(1), r.getSeq[Double](2).toArray)))
-    val m = if (bookRows.isEmpty) 0 else bookRows.map(_._1).max + 1
-    val books = (0 until m).map(s =>
-      bookRows.filter(_._1 == s).map(_._2).sortBy(_._1).toSeq)
+    val books = decodeBooks(spark.read.parquet(s"$dir/codebooks"))
+    val m = books.size
     if (books.isEmpty || books.exists(_.isEmpty))
       return emb.limit(0).select(col("vec_id"), lit(0.0).as("approx_sim"))
     val dim = books.map(_.head._2.length).sum
@@ -1010,11 +973,7 @@ object Similarity {
     // partition predicate — planning-time partition pruning, visible in the
     // scan's PartitionFilters: the non-probed directories are never opened,
     // independent of any runtime-filter heuristic
-    val probedBuckets = centroids.crossJoin(broadcast(probeVec))
-      .withColumn("csim", round(VecF.cosine(col("cvec"), col("probe")), 6))
-      .orderBy(col("csim").desc, col("centroid_id"))
-      .limit(nprobe)
-      .select(col("centroid_id"))
+    val probed = probedBuckets(centroids, probeVec, nprobe)
       .collect().map(_.getLong(0))
     // cids are dense in [0, k): codebook init seeds from vec_id < k, and
     // Lloyd never invents ids — so a code byte indexes a literal array.
@@ -1035,7 +994,7 @@ object Similarity {
       VecF.dot(ps, ps).as(s"n2p$s")
     }
     spark.read.parquet(s"$dir/invlists")
-      .filter(col("centroid_id").isin(probedBuckets: _*)) // partition pruning
+      .filter(col("centroid_id").isin(probed: _*)) // partition pruning
       .filter(col("vec_id") =!= probeId)
       .crossJoin(broadcast(probeVec))
       .select(col("vec_id") +: col("probe") +: (cids ++ n2ps): _*)
@@ -1463,7 +1422,7 @@ object Similarity {
     * declared language labels from token evidence; this audits arbitrary
     * labels from geometry.)
     *
-    * Centroids use [[lloydCentroids]]' exact integer-quantized means
+    * Centroids use [[lloydFrame]]'s exact integer-quantized means
     * (floor(x·1e9) summed as decimal, divided once), so they are
     * bit-identical cross-engine; cosines are round-6 like every scorer in
     * this file; the margin is a round-6 difference of two round-6 doubles.

@@ -517,11 +517,6 @@ class OperatorSpec extends SparkSpec {
       Similarity.semanticContamination(ragged, holdout)
     }
     assert(e2.getMessage.contains("ragged"), e2.getMessage)
-    // escape hatch for corpora validated at ingest: the guard (and only
-    // the guard) is skipped — plan construction proceeds
-    spark.conf.set("spark.graft.embedding.widthCheck", "false")
-    try Similarity.semanticContamination(ragged, holdout)
-    finally spark.conf.unset("spark.graft.embedding.widthCheck")
   }
 
   test("bpeTrain: exact merge table on a hand-computed corpus, greedy no-overlap") {
@@ -2400,7 +2395,7 @@ class OperatorSpec extends SparkSpec {
     assert(rows(Similarity.indexDrift(even, odd, 8, 2, centsOpt = Some(c82)))
       == rows(Similarity.indexDrift(even, odd, 8, 2)))
     val trained = Surface.build(IvfPqParams(nlist = 4, ivfIters = 2, m = 8, k = 8, pqIters = 2))(
-      p => Similarity.jointIvfPqBooks(emb, p.nlist, p.m, p.k, p.pqIters))
+      p => Similarity.trainIvfPq(emb, p))
     assert(rows(Similarity.ivfPqTopK(emb, 0L, 5, 4, 3, 2, 8, 8, 2,
         trainedOpt = Some(trained)))
       == rows(Similarity.ivfPqTopK(emb, 0L, 5, 4, 3, 2, 8, 8, 2)))

@@ -796,8 +796,14 @@ class ScaleToolsSpec extends AnyFunSuite with TempDirs {
     // ADVICE round-9: empty input (=> empty centroid set) short-circuits to
     // an empty frame instead of throwing from the public entry points
     val empty = emb.limit(0)
-    assert(Similarity.semanticDedup(empty, nlist = 4, iters = 0).count() == 0)
-    assert(Similarity.kmeansClusterStats(empty, nlist = 4, iters = 0).count() == 0)
+    for (iters <- Seq(0, 2)) {
+      assert(Similarity.semanticDedup(empty, nlist = 4, iters = iters).count() == 0)
+      assert(Similarity.kmeansClusterStats(empty, nlist = 4, iters = iters).count() == 0)
+    }
+    assert(Similarity.ivfTopK(empty, probeId = 0L, k = 5).count() == 0)
+    assert(Similarity.pqEncode(empty).count() == 0)
+    assert(Similarity.pqTopK(empty, probeId = 0L, topK = 5).count() == 0)
+    assert(Similarity.ivfPqTopK(empty, probeId = 0L, topK = 5).count() == 0)
   }
 
   test("dedup_semantic at SemDeDup nlist ∝ n sizing survives 10x: wide-nlist broadcast path") {
