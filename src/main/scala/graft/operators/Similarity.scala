@@ -611,7 +611,7 @@ object Similarity {
     val probeVec = emb.filter(col("vec_id") === probeId)
       .select(col("embedding").as("probe"))
     assigned
-      .join(broadcast(probedBuckets(centroids, probeVec, nprobe)), "centroid_id")
+      .join(probedBuckets(centroids, probeVec, nprobe), "centroid_id") // bucket pruning
       .filter(col("vec_id") =!= probeId)
       .crossJoin(broadcast(probeVec))
       .withColumn("sim", round(VecF.cosine(col("embedding"), col("probe")), 6))
@@ -621,16 +621,16 @@ object Similarity {
   }
 
   /** The ids of the `nprobe` centroids nearest the probe (round-6 cosine,
-    * ties to the lower id): the bucket prune of every single-probe IVF
-    * search. `probeVec` is the one-row `probe` frame.
+    * ties to the lower id), broadcast: the bucket prune of every
+    * single-probe IVF search. `probeVec` is the one-row `probe` frame.
     */
   private def probedBuckets(centroids: DataFrame, probeVec: DataFrame,
                             nprobe: Int): DataFrame =
-    centroids.crossJoin(broadcast(probeVec))
+    broadcast(centroids.crossJoin(broadcast(probeVec))
       .withColumn("csim", round(VecF.cosine(col("cvec"), col("probe")), 6))
       .orderBy(col("csim").desc, col("centroid_id"))
       .limit(nprobe)
-      .select(col("centroid_id"))
+      .select(col("centroid_id")))
 
   /** Persist the IVF index to storage (the serving layout): centroids +
     * per-vector bucket assignment as parquet. Build once, search many —
@@ -903,7 +903,7 @@ object Similarity {
       .select(col("embedding").as("probe"))
     val probeBuckets = probedBuckets(centroidsToDF(emb.sparkSession, cents), probeVec, nprobe)
     adcScore(
-      assigned.join(broadcast(probeBuckets), "centroid_id") // bucket pruning
+      assigned.join(probeBuckets, "centroid_id") // bucket pruning
         .filter(col("vec_id") =!= probeId)
         .crossJoin(broadcast(probeVec)),
       books)
@@ -974,7 +974,7 @@ object Similarity {
     // scan's PartitionFilters: the non-probed directories are never opened,
     // independent of any runtime-filter heuristic
     val probed = probedBuckets(centroids, probeVec, nprobe)
-      .collect().map(_.getLong(0))
+      .collect().map(_.getLong(0)).toSeq
     // cids are dense in [0, k): codebook init seeds from vec_id < k, and
     // Lloyd never invents ids — so a code byte indexes a literal array.
     // Missing slots (a centroid that lost all members) simply never occur
